@@ -252,3 +252,74 @@ def test_filter_top_fraction_sql_guard():
     for num, den in ((0, 4), (5, 4), (1, 0)):
         with pytest.raises(ValueError, match="keep_num"):
             filter_top_fraction_sql("t", ["id"], "score", num, den)
+
+
+def _planners():
+    """Every histogram planner as ``build(df, col, spec, **kw)``."""
+    from xarray_histogram_spark import histogram_columns
+    from xarray_histogram_spark.plans.binned import (
+        binned_statistic,
+        mean_storage_histogram,
+        weight_storage_histogram,
+    )
+    from xarray_histogram_spark.plans.fast_fill import histogramdd_fill
+    from xarray_histogram_spark.plans.rollup import (
+        rollup_histogram,
+        rollup_histogramdd,
+    )
+    from xarray_histogram_spark.streaming.histogram_stream import (
+        session_histogram,
+        streaming_histogram,
+    )
+    from xarray_histogram_spark.streaming.stateful import (
+        stateful_cumulative_histogram,
+    )
+
+    w, g, ts = "l_extendedprice", ["l_returnflag"], "l_shipdate"
+    return {
+        "histogramdd": lambda df, c, s, **kw: histogramdd(df, [c], [s], **kw),
+        "histogram_columns": lambda df, c, s, **kw: histogram_columns(
+            df, [c], s, **kw),
+        "histogramdd_fill": lambda df, c, s, **kw: histogramdd_fill(
+            df, [c], [s], **kw),
+        "binned_statistic": lambda df, c, s: binned_statistic(df, c, s, w),
+        "weight_storage_histogram": lambda df, c, s: weight_storage_histogram(
+            df, c, s, w),
+        "mean_storage_histogram": lambda df, c, s: mean_storage_histogram(
+            df, c, s, w),
+        "rollup_histogram": lambda df, c, s: rollup_histogram(df, c, s, g),
+        "rollup_histogramdd": lambda df, c, s: rollup_histogramdd(
+            df, [c], [s], g),
+        "streaming_histogram": lambda df, c, s: streaming_histogram(
+            df, c, s, ts),
+        "session_histogram": lambda df, c, s: session_histogram(df, c, s, ts),
+        "stateful_cumulative_histogram":
+            lambda df, c, s: stateful_cumulative_histogram(df, c, s, g[0]),
+    }
+
+
+_PLANNER_NAMES = list(_planners())
+_TAKES_STORAGE = ("histogramdd", "histogram_columns", "histogramdd_fill")
+
+
+@pytest.mark.parametrize(
+    "planner,case",
+    [(p, "missing_column") for p in _PLANNER_NAMES]
+    + [(p, "integer_on_double") for p in _PLANNER_NAMES]
+    + [(p, "bad_storage") for p in _TAKES_STORAGE],
+)
+def test_planner_input_errors(lineitem, planner, case):
+    """Every planner rejects bad input through the one shared input check,
+    with the same error as histogramdd — never a late AnalysisException
+    or a silent truncation of doubles by an Integer axis."""
+    build = _planners()[planner]
+    if case == "missing_column":
+        with pytest.raises(ValueError, match="not in DataFrame"):
+            build(lineitem, "nope", Regular(5, 0.0, 1.0))
+    elif case == "integer_on_double":
+        with pytest.raises(TypeError, match="Integer axis"):
+            build(lineitem, "l_quantity", Integer(0, 50))
+    else:
+        with pytest.raises(ValueError, match="storage"):
+            build(lineitem, "l_quantity", Regular(5, 1.0, 51.0),
+                  storage="int32")

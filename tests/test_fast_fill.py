@@ -42,6 +42,10 @@ CASES = [
     dict(cols=["l_quantity"],
          bins=[Regular(12, 1.0, 51.0, transform="pow", power=0.5, exact=True)],
          flow=True),
+    # ungrouped weighted: pins the zero spine unioned in before the fill
+    # path's own aggregation against the column path
+    dict(cols=["l_quantity"], bins=[Regular(12, 1.0, 51.0)],
+         weights="l_extendedprice"),
 ]
 
 

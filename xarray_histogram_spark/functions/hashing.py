@@ -91,11 +91,6 @@ def tokens_raw_sql(expr: str) -> str:
 
 
 # ---- hex nibble value (for SimHash bits) ----
-def nibble_val(c: Column) -> Column:
-    """Value 0-15 of a single lowercase hex char (conv is JVM-side)."""
-    return F.conv(c, 16, 10).cast("int")
-
-
 def nibble_val_sql(expr: str) -> str:
     return f"(strpos('{HEX}', {expr}) - 1)"
 

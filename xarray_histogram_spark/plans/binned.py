@@ -30,10 +30,12 @@ from pyspark.sql import functions as F
 from ..binspec import BinSpec
 from .histogram import (
     axis_meta_exprs,
+    check_inputs,
     id_col,
+    keep_and_bucketize,
     label_col,
-    scaled_weight_col,
     spine_ids_zero,
+    value_mode,
 )
 
 STATS = ("count", "sum", "mean", "min", "max", "sum_sq", "sample_var")
@@ -72,28 +74,20 @@ def binned_statistic(
     if bad:
         raise ValueError(f"unknown stats {bad}; choose from {STATS}")
     group_by = list(group_by)
-    pred = spec.keep_pred_col(F.col(x), flow)
-    src = df.where(pred) if pred is not None else df
-    idc = (
-        spec.raw_id_col_kept(F.col(x))
-        if pred is not None and not flow
-        else spec.raw_id_col(F.col(x))
-    )
+    (spec,), _ = check_inputs(df, [x], [spec], flow=flow)
+    src, (idc,) = keep_and_bucketize(df, [F.col(x)], [spec], flow)
+    vm = value_mode(value, weight_scale)
+    divisor = vm.divisor
     v = F.col(value).cast("double")
-    if weight_scale is not None:
-        divisor = float(10**weight_scale)
-        vsum = scaled_weight_col(F.col(value), divisor)
-    else:
-        divisor = 1.0
-        vsum = v
+    vsum = vm.value()
     # sum of squares: in quantized mode q² is an EXACT integer product of
     # the quantized weight with itself (Σq² deterministic; value = Σq²/10^2s;
     # overflow bound (|w|·10^s)²·rows < 2⁶³ — reduce weight_scale for large
     # weights); raw mode sums v·v doubles (fast, order-sensitive).
     # Only materialized when a squared stat is requested.
     need_sq = bool({"sum_sq", "sample_var"} & set(stats))
-    vsq = (vsum * vsum) if weight_scale is not None else (v * v)
-    if weight_scale is not None and need_sq:
+    vsq = (vsum * vsum) if vm.int_mode else (v * v)
+    if vm.int_mode and need_sq:
         # Σq² must stay inside int64 (Spark would WRAP silently while the
         # DuckDB oracle raises — silent corruption either way).  Worst
         # case Σq² ≤ n·q_max², q_max ≤ |v|_max·10^s + 0.5.  One eager
@@ -128,20 +122,13 @@ def binned_statistic(
         # single aggregation (count/sum/min/max all ignore NULLs, so a
         # spine row contributes count 0 and nothing else) — the same
         # one-exchange shape as the histogram
-        null_s = (
-            "CAST(NULL AS BIGINT)" if weight_scale is not None
-            else "CAST(NULL AS DOUBLE)"
-        )
+        sum_t = "bigint" if vm.int_mode else "double"
         spine0 = spine_ids_zero(
-            base.sparkSession, [x], [spec], flow, null_s, val_name="__s",
+            base.sparkSession, [x], [spec], flow, f"CAST(NULL AS {sum_t})",
+            val_name="__s",
         )
         if need_sq:
-            spine0 = spine0.withColumn(
-                "__s2",
-                F.lit(None).cast(
-                    "bigint" if weight_scale is not None else "double"
-                ),
-            )
+            spine0 = spine0.withColumn("__s2", F.lit(None).cast(sum_t))
         spine0 = spine0.withColumn("__v", F.lit(None).cast("double"))
         base = base.unionByName(spine0)
     aggs = [

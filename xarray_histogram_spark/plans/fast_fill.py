@@ -11,7 +11,9 @@ combine:
   mapInPandas batch kernel:  bucketize (numpy vectorised) → per-batch
   bincount partials (exact int64)  →  groupBy(group, bin).sum of partials
   (rows entering the shuffle: |batches| × |non-empty bins| — thousands, not
-  billions)  →  the same dense finish as the Column path.
+  billions; ungrouped, the zero spine unions in before this one aggregate,
+  exactly as on the Column path)  →  the same dense finish as the Column
+  path.  Input check and value mode are the Column path's own helpers.
 
 Bit-exactness is preserved — this path hash-matches the SAME DuckDB oracles:
 - bucketize arithmetic is the identical IEEE double expression
@@ -42,11 +44,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..binspec import BinSpec, IntCategory, Integer, Regular, StrCategory, Variable
-from .histogram import BinsArg, finish_from_agg, id_col, resolve_specs
-from .result import HistogramResult
-
 from pyspark.sql import functions as F
+
+from ..binspec import BinSpec, IntCategory, Integer, Regular, StrCategory, Variable
+from .histogram import (
+    BinsArg,
+    check_inputs,
+    finish_from_agg,
+    id_col,
+    spine_ids_zero,
+    value_mode,
+)
+from .result import HistogramResult
 
 
 def _spec_to_plain(spec: BinSpec) -> dict:
@@ -118,62 +127,30 @@ def histogramdd_fill(
     result, same oracles as plans.histogram.histogramdd)."""
     cols = list(cols)
     group_by = list(group_by)
-    storage = {"unlimited": "double", "atomicint64": "int64"}.get(
-        storage.lower(), storage.lower()
+    # the same input check and value mode as histogramdd — the two paths
+    # must emit identical labels/flow structure
+    specs, storage = check_inputs(
+        df, cols, bins, ranges, flow=flow, storage=storage
     )
-    specs = resolve_specs(df, cols, bins, ranges)
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    for c, s in zip(cols, specs):
-        if c not in schema:
-            raise ValueError(f"column {c!r} not in DataFrame")
-        s.validate_dtype(schema[c], c)
-    # same bool-axis relabel as histogramdd (reference core.py:542-543) —
-    # the two paths must emit identical labels/flow structure
-    from dataclasses import replace as _dcr
-
-    specs = [
-        _dcr(s, bool_labels=True)
-        if (
-            not flow
-            and isinstance(s, Integer)
-            and not s.bool_labels
-            and (s.lo, s.hi) == (0, 2)
-            and isinstance(schema[c], T.BooleanType)
-        )
-        else s
-        for c, s in zip(cols, specs)
-    ]
-    # same dense-extent guard as histogramdd: fail clearly up front
-    total_space = 1
-    for s in specs:
-        total_space *= s.n + 2
-    if total_space > 2**31:
-        raise ValueError(
-            f"dense histogram extent ({total_space} cells per group) is "
-            "infeasible to materialize; reduce bin counts or histogram "
-            "fewer variables together"
-        )
-
+    vm = value_mode(weights, weight_scale)
     keep = [s.keep_range(flow) for s in specs]
-    int_mode = weights is None or weight_scale is not None
-    divisor = float(10**weight_scale) if (weights and weight_scale) else 1.0
     # dedup: a column may serve several roles (e.g. self-weighted
     # histograms) — duplicate names would make pdf[col] a 2-column frame
     needed = list(dict.fromkeys(group_by + cols + ([weights] if weights else [])))
     narrow = df.select(*needed)
 
-    out_fields = [T.StructField(g, schema[g]) for g in group_by]
+    out_fields = [T.StructField(g, df.schema[g].dataType) for g in group_by]
     out_fields += [T.StructField(id_col(c), T.IntegerType()) for c in cols]
     out_fields.append(
-        T.StructField("__val", T.LongType() if int_mode else T.DoubleType())
+        T.StructField("__val", T.LongType() if vm.int_mode else T.DoubleType())
     )
     out_schema = T.StructType(out_fields)
     idcols = [id_col(c) for c in cols]
     gkeys = list(group_by)
     w_name = weights
-    scale = divisor
+    scale = vm.divisor
     plain = [(c, _spec_to_plain(s), kr) for c, s, kr in zip(cols, specs, keep)]
-    kernel_int_mode = int_mode
+    kernel_int_mode = vm.int_mode
 
     # NOTE: this closure must stay self-contained — only stdlib/numpy/pandas
     # and the plain-data locals above may be referenced (Python workers
@@ -295,10 +272,18 @@ def histogramdd_fill(
             yield part
 
     partials = narrow.mapInPandas(kernel, out_schema)
-    val = F.sum("__val")
-    agg = partials.groupBy(*(gkeys + idcols)).agg(val.alias("__val"))
+    if not group_by:
+        # dense by construction, as in histogramdd: the zero spine unions in
+        # before the aggregation, so ONE aggregate emits every spine bin
+        partials = partials.unionByName(
+            spine_ids_zero(
+                df.sparkSession, cols, specs, flow, vm.zero_sql,
+                val_name="__val",
+            )
+        )
+    agg = partials.groupBy(*(gkeys + idcols)).agg(F.sum("__val").alias("__val"))
     return finish_from_agg(
         agg, cols, specs, group_by=group_by, flow=flow, density=density,
-        storage=storage, int_mode=int_mode, divisor=divisor,
+        storage=storage, int_mode=vm.int_mode, divisor=vm.divisor,
         weighted=weights is not None,
     )

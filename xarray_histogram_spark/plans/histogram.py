@@ -1,4 +1,4 @@
-"""Histogram planner: compose bucketize → groupBy agg → dense spine join → density.
+"""Histogram planner: compose bucketize → groupBy agg → dense fill → density.
 
 Reference parity: ``histogram`` / ``histogram2d`` / ``histogramdd``
 (/root/reference/src/xarray_histogram/core.py:46-320).  The reference's
@@ -12,9 +12,16 @@ Scale notes (designed for ~100 TB inputs, 1000 executors):
 - Bucketize is pure Column arithmetic → stays in WholeStageCodegen; no UDFs.
 - The only shuffle is the groupBy on (group_keys, bin_ids); its output is
   tiny (|groups| × extent rows) because histograms compress.
-- The dense spine (cross-product of per-axis bins) is a few-hundred-row
-  broadcast; the group spine is derived from the aggregated output (already
-  small) — no second scan of the raw data.
+- Dense fill, one aggregation either way: ungrouped, a zero-valued spine
+  (cross-product of per-axis bin ids, a literal relation) unions in BEFORE
+  the aggregation — on the Column path and the Arrow-fill path alike;
+  grouped, each group's packed bins expand against a literal spine after
+  it — no second scan of the raw data.
+- One shared planner core (``check_inputs``, ``value_mode``,
+  ``keep_and_bucketize``, ``flat_key``) makes the input check, weight
+  mode, keep/bucketize rule and flat multi-axis key for EVERY planner of
+  the package (this module, ``fast_fill``, ``binned``, ``rollup`` and the
+  streaming histograms).
 - Range inference (``bins=int, range=None``) runs ONE combined min/max job
   over all columns needing it (the reference does one eager pass per array,
   core.py:500-506 — this is the same cost, batched).
@@ -35,7 +42,7 @@ Scale notes (designed for ~100 TB inputs, 1000 executors):
 from __future__ import annotations
 
 import math
-from dataclasses import replace as dc_replace
+from dataclasses import dataclass, replace as dc_replace
 from functools import reduce
 from typing import Optional, Sequence, Union
 
@@ -181,6 +188,181 @@ def scaled_weight_col(w: Column, divisor: float) -> Column:
     )
 
 
+# ---- shared planner core --------------------------------------------------
+# Every planner (histogramdd, histogram_columns, histogramdd_fill,
+# binned_statistic, rollup_histogramdd, the streaming histograms) makes the
+# input check, the value mode, the keep/bucketize rule and the flat
+# multi-axis key through these helpers, so the planners cannot drift apart.
+
+# reference storage families (core.py:29-34): Double/Unlimited → float
+# output, Int64/AtomicInt64 → integer output
+_STORAGE = {
+    "double": "double", "unlimited": "double",
+    "int64": "int64", "atomicint64": "int64",
+}
+
+
+def check_inputs(
+    df: DataFrame,
+    cols: Sequence[str],
+    bins: BinsArg,
+    ranges=None,
+    *,
+    flow: bool,
+    storage: str = "double",
+) -> tuple[list[BinSpec], str]:
+    """Shared input check: the histogrammed ``cols`` are the axes of ONE
+    histogram over ``df``.  Fails before any Spark job on a bad storage
+    name or a missing column, then resolves the specs (``resolve_specs``),
+    validates each axis against its column dtype, applies the reference's
+    boolean-axis relabel and rejects infeasible dense extents.  Returns
+    the (possibly relabelled) specs and the normalized storage."""
+    cols = list(cols)
+    if not cols:
+        raise ValueError("need at least one variable column")
+    norm = _STORAGE.get(storage.lower())
+    if norm is None:
+        raise ValueError(
+            "storage must be 'double'/'unlimited' or 'int64'/'atomicint64'"
+        )
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    for c in cols:
+        if c not in schema:
+            raise ValueError(f"column {c!r} not in DataFrame")
+    specs = []
+    for c, s in zip(cols, resolve_specs(df, cols, bins, ranges)):
+        s.validate_dtype(schema[c], c)
+        # reference bool-axis labeling (core.py:542-543): a flow-off
+        # Integer(0,2) axis over a boolean column emits False/True labels,
+        # not int64 0/1
+        if (
+            not flow
+            and isinstance(s, Integer)
+            and not s.bool_labels
+            and (s.lo, s.hi) == (0, 2)
+            and isinstance(schema[c], T.BooleanType)
+        ):
+            s = dc_replace(s, bool_labels=True)
+        specs.append(s)
+    # the OUTPUT is dense (Π(n_i+2) cells per group) — reject extents no
+    # engine could materialize rather than failing opaquely downstream;
+    # this also guarantees the flat bigint key cannot overflow
+    total_space = 1
+    for s in specs:
+        total_space *= s.n + 2
+    if total_space > 2**31:
+        raise ValueError(
+            f"dense histogram extent ({total_space} cells per group) is "
+            "infeasible to materialize; reduce bin counts or histogram "
+            "fewer variables together"
+        )
+    return specs, norm
+
+
+@dataclass(frozen=True)
+class ValueMode:
+    """What a planner aggregates per row, from ``(weights, weight_scale)``.
+
+    ``int_mode``: the per-row value is an exact int64 (a COUNT, or a
+    scaled-int weight) and the aggregate is an integer sum —
+    order-independent, the oracle-deterministic representation; display
+    values divide by ``divisor`` once at the end."""
+
+    weights: Optional[str]
+    int_mode: bool
+    divisor: float
+
+    @property
+    def zero_sql(self) -> str:
+        """The typed zero of the aggregate (spine rows, empty bins)."""
+        return "CAST(0 AS BIGINT)" if self.int_mode else "CAST(0.0 AS DOUBLE)"
+
+    def value(self, c: Optional[Column] = None) -> Optional[Column]:
+        """Per-row value of ``c`` (default: the weights column); ``None``
+        when unweighted — the aggregate is then a COUNT."""
+        if self.weights is None:
+            return None
+        c = F.col(self.weights) if c is None else c
+        if self.int_mode:
+            return scaled_weight_col(c, self.divisor)
+        return c.cast("double")
+
+    def display_sum(self, c: Column) -> Column:
+        """Display double of SUM(value(c)): the exact int64 sum, then one
+        division, in int_mode; the raw double sum otherwise."""
+        s = F.sum(self.value(c))
+        return s.cast("double") / F.lit(self.divisor) if self.int_mode else s
+
+
+def value_mode(weights: Optional[str], weight_scale: Optional[int]) -> ValueMode:
+    """Weighted sums are exact int64 sums of ``round(w·10^scale)``
+    (deterministic, oracle-matchable — see module docstring);
+    ``weight_scale=None`` gives raw double sums."""
+    if weights is None:
+        return ValueMode(None, True, 1.0)
+    if weight_scale is None:
+        return ValueMode(weights, False, 1.0)
+    return ValueMode(weights, True, float(10**weight_scale))
+
+
+def keep_and_bucketize(
+    df: DataFrame,
+    xs: Sequence[Column],
+    specs: Sequence[BinSpec],
+    flow: bool,
+    keep: bool = True,
+) -> tuple[DataFrame, list[Column]]:
+    """Keep filter plus per-axis raw bin ids of the values ``xs``.
+
+    The keep filter runs FIRST, on the raw values (``keep_pred_col``):
+    pushed into the scan, and the bucketize is then evaluated exactly once
+    per row — an id-range filter would be pushdown-substituted into both
+    BETWEEN bounds, tripling the bucketize work per row.  An axis uses the
+    kept-fast id (``raw_id_col_kept``: no NULL/NaN/flow CASE wrapper,
+    identical ids on kept rows) exactly when its keep predicate was applied
+    and ``flow`` is off.  ``keep=False`` keeps every row (flow ids too)."""
+    preds = [
+        s.keep_pred_col(x, flow) if keep else None for x, s in zip(xs, specs)
+    ]
+    applied = [p for p in preds if p is not None]
+    src = df.where(reduce(lambda a, b: a & b, applied)) if applied else df
+    ids = [
+        s.raw_id_col_kept(x) if p is not None and not flow else s.raw_id_col(x)
+        for x, s, p in zip(xs, specs, preds)
+    ]
+    return src, ids
+
+
+def flat_strides(specs: Sequence[BinSpec]) -> list[int]:
+    """Strides of the flat multi-axis key ``Σ (id_i+1)·stride_i``: raw ids
+    live in [-1, n_i], so axis i spans n_i + 2 slots — injective."""
+    strides = [1] * len(specs)
+    for i in range(len(specs) - 2, -1, -1):
+        strides[i] = strides[i + 1] * (specs[i + 1].n + 2)
+    return strides
+
+
+def flat_key(ids: Sequence[Column], specs: Sequence[BinSpec]) -> Column:
+    """One bigint key from k bin ids: the hash-aggregate hashes/compares a
+    single long instead of k ints, and a map probe compares longs."""
+    return reduce(
+        lambda a, b: a + b,
+        [
+            (i + F.lit(1)).cast("bigint") * F.lit(st)
+            for i, st in zip(ids, flat_strides(specs))
+        ],
+    )
+
+
+def flat_key_ids(cols: Sequence[str], specs: Sequence[BinSpec]) -> list[Column]:
+    """Inverse of ``flat_key`` on the ``__fk`` column: the per-axis ids as
+    ``<col>_bin`` columns (integer div/mod)."""
+    return [
+        F.expr(f"CAST((__fk div {st}) % {s.n + 2} - 1 AS INT)").alias(id_col(c))
+        for c, s, st in zip(cols, specs, flat_strides(specs))
+    ]
+
+
 def spark_lit(v, typ: str) -> str:
     """Spark-SQL literal with exact repr round-trip (doubles go through a
     VARCHAR cast so the parsed value is bit-identical to the Python float)."""
@@ -306,119 +488,32 @@ def histogramdd(
     """
     cols = list(cols)
     group_by = list(group_by)
-    if not cols:
-        raise ValueError("need at least one variable column")
-    # reference storage families (core.py:29-34): Double/Unlimited → float
-    # output, Int64/AtomicInt64 → integer output
-    storage = {
-        "unlimited": "double",
-        "atomicint64": "int64",
-    }.get(storage.lower(), storage.lower())
-    if storage not in ("double", "int64"):
-        raise ValueError("storage must be 'double'/'unlimited' or 'int64'/'atomicint64'")
     spark = df.sparkSession
-    specs = resolve_specs(df, cols, bins, ranges)
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    for c, s in zip(cols, specs):
-        if c not in schema:
-            raise ValueError(f"column {c!r} not in DataFrame")
-        s.validate_dtype(schema[c], c)
-    # reference bool-axis labeling (core.py:542-543): a flow-off Integer(0,2)
-    # axis over a boolean column emits False/True labels, not int64 0/1
-    specs = [
-        dc_replace(s, bool_labels=True)
-        if (
-            not flow
-            and isinstance(s, Integer)
-            and not s.bool_labels
-            and (s.lo, s.hi) == (0, 2)
-            and isinstance(schema[c], T.BooleanType)
-        )
-        else s
-        for c, s in zip(cols, specs)
-    ]
-
-    # keep filter FIRST, on the raw values (keep_pred_col): pushed into the
-    # scan, and the bucketize CASE below is then evaluated exactly once per
-    # row — an id-range filter would be pushdown-substituted into both
-    # BETWEEN bounds, tripling the bucketize work per row
-    if preserve_groups and group_by:
-        preds = []  # aggregate flow ids too; dense fill drops them but the
-        # group's spine rows survive (reference loop-slice semantics)
-    else:
-        preds = [
-            p
-            for c, s in zip(cols, specs)
-            if (p := s.keep_pred_col(F.col(c), flow)) is not None
-        ]
-    src = df.where(reduce(lambda a, b: a & b, preds)) if preds else df
-
-    # bucketize: raw bin ids, codegen'd expressions.
-    # int_mode: the per-row value is an exact int64 (1, or a scaled-int
-    # weight) and the aggregate is an integer sum — order-independent, the
-    # oracle-deterministic representation.
-    if weights is not None:
-        if weight_scale is not None:
-            divisor = float(10**weight_scale)
-            vsrc = scaled_weight_col(F.col(weights), divisor)
-            int_mode = True
-        else:
-            vsrc = F.col(weights).cast("double")
-            int_mode, divisor = False, 1.0
-    else:
-        # unweighted: no value column AT ALL — the aggregate is COUNT(*)
-        # (measured ~20% cheaper per row than SUM of a literal-1 column at
-        # 1e7 rows, and the shuffle rows narrow to the key alone).  The
-        # dense spine then contributes exactly ONE row per bin, corrected
-        # by a post-aggregate −1 (below).
-        vsrc = None
-        int_mode, divisor = True, 1.0
-
-    # per-axis bin-id expressions; when the axis's keep filter is applied
-    # (flow off, pred pushed to the scan) the kept-fast variant drops the
-    # NULL/NaN/flow CASE wrapper — identical ids, bare arithmetic per row
-    kept_ok = not (preserve_groups and group_by) and not flow
-    id_exprs = [
-        s.raw_id_col_kept(F.col(c))
-        if kept_ok and s.keep_pred_col(F.col(c), flow) is not None
-        else s.raw_id_col(F.col(c))
-        for c, s in zip(cols, specs)
-    ]
-
-    keys = group_by + [id_col(c) for c in cols]
-    zero_sql = "CAST(0 AS BIGINT)" if int_mode else "CAST(0.0 AS DOUBLE)"
-    # the OUTPUT is dense (Π(n_i+2) cells per group) — reject extents no
-    # engine could materialize rather than failing opaquely downstream;
-    # this also guarantees the flat bigint key below cannot overflow
-    total_space = 1
-    for s in specs:
-        total_space *= s.n + 2
-    if total_space > 2**31:
-        raise ValueError(
-            f"dense histogram extent ({total_space} cells per group) is "
-            "infeasible to materialize; reduce bin counts or histogram "
-            "fewer variables together"
-        )
+    specs, storage = check_inputs(
+        df, cols, bins, ranges, flow=flow, storage=storage
+    )
+    vm = value_mode(weights, weight_scale)
+    # preserve_groups aggregates flow ids too: the dense fill drops them
+    # but the group's spine rows survive (reference loop-slice semantics)
+    src, id_exprs = keep_and_bucketize(
+        df, [F.col(c) for c in cols], specs, flow,
+        keep=not (preserve_groups and group_by),
+    )
+    # unweighted: no value column AT ALL — the aggregate is COUNT(*)
+    # (measured ~20% cheaper per row than SUM of a literal-1 column at 1e7
+    # rows, and the shuffle rows narrow to the key alone).  The dense spine
+    # then contributes exactly ONE row per bin, corrected by a
+    # post-aggregate −1 (below).
+    vsrc = vm.value()
+    vcols = [vsrc.alias("__v")] if vsrc is not None else []
     multi = len(cols) > 1
     if multi:
-        # flatten the k bin ids into ONE bigint grouping key
-        # (Σ (id_i+1)·stride_i — injective, ids live in [-1, n_i]): the
-        # hash-aggregate hashes/compares a single long instead of k ints
-        # and the shuffle rows are one 8-byte slot narrower per extra
-        # axis; the ids are recovered post-agg (≤ extent rows) by
-        # div/mod, so the output is bit-identical
-        strides = [1] * len(specs)
-        for i in range(len(specs) - 2, -1, -1):
-            strides[i] = strides[i + 1] * (specs[i + 1].n + 2)
-        fk = reduce(
-            lambda a, b: a + b,
-            [
-                (e.cast("bigint") + F.lit(1)) * F.lit(st)
-                for e, st in zip(id_exprs, strides)
-            ],
-        )
-    vcols = [vsrc.alias("__v")] if vsrc is not None else []
-    if multi:
+        # flatten the k bin ids into ONE bigint grouping key (flat_key; the
+        # shuffle rows are one 8-byte slot narrower per extra axis); the
+        # ids are recovered post-agg (≤ extent rows) by div/mod, so the
+        # output is bit-identical.  The ids widen to bigint BEFORE the +1
+        # (flat_key's own cast is then redundant and Catalyst drops it).
+        fk = flat_key([e.cast("bigint") for e in id_exprs], specs)
         base = src.select(
             *[F.col(g) for g in group_by], fk.alias("__fk"), *vcols
         )
@@ -429,32 +524,25 @@ def histogramdd(
             *[e.alias(id_col(c)) for c, e in zip(cols, id_exprs)],
             *vcols,
         )
-        agg_keys = keys
-    if not group_by:
+        agg_keys = group_by + [id_col(c) for c in cols]
+    dense = not group_by
+    if dense:
         # dense fill by construction: union the zero-valued bin spine with
         # the data rows BEFORE the aggregation — ONE partial+final
         # HashAggregate then emits every spine bin.  No join, no broadcast
         # of a computed aggregate (a broadcast subtree costs an extra job
         # per execution), one exchange of ≤ extent rows.
-        spine0 = spine_ids_zero(spark, cols, specs, flow, zero_sql)
+        spine0 = spine_ids_zero(spark, cols, specs, flow, vm.zero_sql)
         if multi:
             spine0 = spine0.select(
-                reduce(
-                    lambda a, b: a + b,
-                    [
-                        (F.col(id_col(c)).cast("bigint") + F.lit(1)) * F.lit(st)
-                        for c, st in zip(cols, strides)
-                    ],
+                flat_key(
+                    [F.col(id_col(c)).cast("bigint") for c in cols], specs
                 ).alias("__fk"),
                 F.col("__v"),
             )
         if vsrc is None:
             spine0 = spine0.drop("__v")
         base = base.unionByName(spine0)
-        dense = True
-    else:
-        dense = False
-    zero = F.expr(zero_sql)
     if vsrc is None:
         # COUNT(*); the dense spine added exactly one row per bin → −1
         cnt = F.count(F.lit(1))
@@ -462,25 +550,14 @@ def histogramdd(
         agg = base.groupBy(*agg_keys).agg(val.alias("__val"))
     else:
         agg = base.groupBy(*agg_keys).agg(
-            F.coalesce(F.sum("__v"), zero).alias("__val")
+            F.coalesce(F.sum("__v"), F.expr(vm.zero_sql)).alias("__val")
         )
     if multi:
-        # recover the per-axis ids from the flat key (post-agg: ≤ extent
-        # rows, O(1) integer div/mod per row)
-        agg = agg.select(
-            *group_by,
-            *[
-                F.expr(
-                    f"CAST((__fk div {st}) % {s.n + 2} - 1 AS INT)"
-                ).alias(id_col(c))
-                for c, s, st in zip(cols, specs, strides)
-            ],
-            "__val",
-        )
+        agg = agg.select(*group_by, *flat_key_ids(cols, specs), "__val")
     return finish_from_agg(
         agg, cols, specs, group_by=group_by, flow=flow, density=density,
-        storage=storage, int_mode=int_mode, divisor=divisor,
-        weighted=weights is not None, dense=dense,
+        storage=storage, int_mode=vm.int_mode, divisor=vm.divisor,
+        weighted=weights is not None,
         # preserve_groups aggregates flow ids so all-flow groups survive
         # densely; the sparse fast path would drop them (see finish_from_agg)
         sparse_ok=not (preserve_groups and group_by),
@@ -499,11 +576,10 @@ def finish_from_agg(
     int_mode: bool,
     divisor: float,
     weighted: bool,
-    dense: bool = False,
     sparse_ok: bool = True,
 ) -> HistogramResult:
-    """Shared finish stage: sparse (group, bin-ids, __val) aggregate →
-    dense labelled result.  Used by both the pure-Column path and the
+    """Shared finish stage: (group, bin-ids, __val) aggregate → dense
+    labelled result.  Used by both the pure-Column path and the
     Arrow/numpy fill path (plans.fast_fill) — identical output.
 
     ``sparse_ok``: whether downstream statistics may read the sparse
@@ -516,10 +592,9 @@ def finish_from_agg(
     aggregate would drop it with no row at all.
 
     Dense output:
-    - Ungrouped: if the caller pre-densified (``dense=True`` — the spine
-      zeros were unioned in before the aggregation), the aggregate is
-      already one row per spine bin; otherwise union a zero spine here and
-      re-aggregate (≤ 2·extent rows — the Arrow-fill path).  Either way the
+    - Ungrouped: the aggregate must already hold one row per spine bin —
+      every caller unions the zero spine in before its aggregation
+      (``spine_ids_zero``), or re-aggregates an already dense result.  The
       bin labels/widths/centers attach as O(1) literal-array lookups on the
       id, so NO join and NO broadcast of a computed aggregate appears in
       the ungrouped plan at all.
@@ -527,8 +602,7 @@ def finish_from_agg(
       the broadcast literal spine — ONE scan of the input and no self-join
       (a groups-distinct + join-back plan scans and aggregates the raw
       data twice; at 100 TB the scan dominates, so this halves the query).
-      The map is keyed by a FLAT int bin id (``Σ (id_i+1)·stride_i``), not
-      a struct: the unavoidable linear map probe then does cheap long
+      The map is keyed by the FLAT bin id (``flat_key``), not a struct: the unavoidable linear map probe then does cheap long
       compares instead of struct compares.  (The spine is a literal
       relation — broadcasting it is driver-local, not a job.)"""
     cols = list(cols)
@@ -537,26 +611,15 @@ def finish_from_agg(
     spark = agg.sparkSession
     zero = F.lit(0).cast("bigint") if int_mode else F.lit(0.0)
     if group_by:
-        # flat composite id: raw ids live in [-1, n_i], so offset by +1 and
-        # stride by (n_i + 2); injective, identical arithmetic on both the
-        # aggregate and the spine side
-        strides = [1] * len(specs)
-        for i in range(len(specs) - 2, -1, -1):
-            strides[i] = strides[i + 1] * (specs[i + 1].n + 2)
-        def flat_key():
-            return reduce(
-                lambda a, b: a + b,
-                [
-                    (F.col(id_col(c)) + F.lit(1)).cast("bigint") * F.lit(st)
-                    for c, st in zip(cols, strides)
-                ],
-            )
+        # identical flat-key arithmetic on the aggregate and the spine side
+        def fkey():
+            return flat_key([F.col(id_col(c)) for c in cols], specs)
+
+        strides = flat_strides(specs)
         packed = agg.groupBy(*group_by).agg(
             F.map_from_entries(
                 F.collect_list(
-                    F.struct(
-                        flat_key().alias("key"), F.col("__val").alias("value")
-                    )
+                    F.struct(fkey().alias("key"), F.col("__val").alias("value"))
                 )
             ).alias("__m")
         )
@@ -610,7 +673,7 @@ def finish_from_agg(
                 [spine_df(spark, c, s, flow) for c, s in zip(cols, specs)],
             )
             expanded = packed.crossJoin(F.broadcast(spine))
-            val = F.coalesce(F.element_at(F.col("__m"), flat_key()), zero)
+            val = F.coalesce(F.element_at(F.col("__m"), fkey()), zero)
         filled = expanded.select(
             *[c for c in out_cols[: len(group_by) + 2 * len(cols)]],
             val.alias("__val"),
@@ -618,18 +681,6 @@ def finish_from_agg(
         )
     else:
         ids = [id_col(c) for c in cols]
-        if dense:
-            dense_agg = agg
-        else:
-            zero_sql = "CAST(0 AS BIGINT)" if int_mode else "CAST(0.0 AS DOUBLE)"
-            u = agg.select(*ids, "__val").unionByName(
-                spine_ids_zero(
-                    spark, cols, specs, flow, zero_sql, val_name="__val"
-                )
-            )
-            dense_agg = u.groupBy(*ids).agg(
-                F.coalesce(F.sum("__val"), F.expr(zero_sql)).alias("__val")
-            )
         # NOTE on a rejected "optimization": coalescing this post-shuffle
         # tail to one task (fewer near-empty task dispatches) measured
         # neutral on the 1-D mirror and consistently ~20 ms SLOWER on the
@@ -638,7 +689,7 @@ def finish_from_agg(
         # scale) shuffle fetch, so the tail keeps shuffle.partitions tasks.
         # column order: ids, labels, __val, widths, centers, is_flow
         per_axis = [axis_meta_exprs(c, s, flow) for c, s in zip(cols, specs)]
-        filled = dense_agg.selectExpr(
+        filled = agg.selectExpr(
             *ids,
             *[a[0] for a in per_axis],
             "__val",
@@ -732,11 +783,6 @@ def histogram_columns(
     cols = list(cols)
     if not cols:
         raise ValueError("need at least one column")
-    storage = {"unlimited": "double", "atomicint64": "int64"}.get(
-        storage.lower(), storage.lower()
-    )
-    if storage not in ("double", "int64"):
-        raise ValueError("storage must be 'double'/'unlimited' or 'int64'/'atomicint64'")
     spark = df.sparkSession
     if isinstance(bins, BinSpec):
         spec = bins
@@ -762,27 +808,15 @@ def histogram_columns(
         if lo is None or hi is None:
             raise ValueError("could not infer a shared range (all-null columns?)")
         spec = Regular(bins, float(lo), float(hi))
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    for c in cols:
-        if c not in schema:
-            raise ValueError(f"column {c!r} not in DataFrame")
-        spec.validate_dtype(schema[c], c)
-
-    if weights is not None:
-        if weight_scale is not None:
-            divisor = float(10**weight_scale)
-            def vsrc():
-                return scaled_weight_col(F.col(weights), divisor)
-            int_mode = True
-        else:
-            def vsrc():
-                return F.col(weights).cast("double")
-            int_mode, divisor = False, 1.0
-    else:
-        # unweighted → COUNT(*) with spine −1 correction, as in histogramdd
-        vsrc = None
-        int_mode, divisor = True, 1.0
-    zero_sql = "CAST(0 AS BIGINT)" if int_mode else "CAST(0.0 AS DOUBLE)"
+    # each column is its own 1-D histogram over the shared axis; the axis
+    # takes the first column's (boolean) relabel
+    checked = [
+        check_inputs(df, [c], [spec], flow=flow, storage=storage) for c in cols
+    ]
+    (spec,), storage = checked[0]
+    vm = value_mode(weights, weight_scale)
+    # unweighted → COUNT(*) with spine −1 correction, as in histogramdd
+    vsrc = vm.value()
 
     bin_id = id_col(var_name)
     # flat (column-index, bin) grouping key: __d·(n+2) + id + 1 — one
@@ -806,19 +840,13 @@ def histogram_columns(
         # in as a literal
         branches = []
         for kk, c in enumerate(cols):
-            pred = spec.keep_pred_col(F.col(c), flow)
-            b = df.where(pred) if pred is not None else df
-            idc = (
-                spec.raw_id_col_kept(F.col(c))
-                if pred is not None and not flow
-                else spec.raw_id_col(F.col(c))
-            )
+            b, (idc,) = keep_and_bucketize(df, [F.col(c)], [spec], flow)
             fkc = (idc.cast("bigint") + F.lit(1) + F.lit(kk * width)).alias(
                 "__fk"
             )
             branches.append(
                 b.select(fkc) if vsrc is None
-                else b.select(fkc, vsrc().alias("__v"))
+                else b.select(fkc, vsrc.alias("__v"))
             )
         data = reduce(lambda a, b: a.unionByName(b), branches)
     else:
@@ -827,21 +855,14 @@ def histogram_columns(
         gen = df.select(
             *extra, F.posexplode(arr).alias("__d", "__x")
         )
-        pred = spec.keep_pred_col(F.col("__x"), flow)
-        if pred is not None:
-            gen = gen.where(pred)
-        idc = (
-            spec.raw_id_col_kept(F.col("__x"))
-            if pred is not None and not flow
-            else spec.raw_id_col(F.col("__x"))
-        )
+        gen, (idc,) = keep_and_bucketize(gen, [F.col("__x")], [spec], flow)
         fkc = (
             F.col("__d").cast("bigint") * F.lit(width)
             + idc.cast("bigint") + F.lit(1)
         ).alias("__fk")
         data = (
             gen.select(fkc) if vsrc is None
-            else gen.select(fkc, vsrc().alias("__v"))
+            else gen.select(fkc, vsrc.alias("__v"))
         )
     lo_id, hi_id = _axis_id_range(spec, flow)
     k = len(cols)
@@ -854,7 +875,7 @@ def histogram_columns(
         .selectExpr("__dseq", f"explode(sequence({lo_id}, {hi_id})) AS __bseq")
         .selectExpr(
             f"CAST(__dseq * {width} + __bseq + 1 AS BIGINT) AS __fk",
-            *([] if vsrc is None else [f"{zero_sql} AS __v"]),
+            *([] if vsrc is None else [f"{vm.zero_sql} AS __v"]),
         )
     )
     u = data.unionByName(spine)
@@ -864,7 +885,7 @@ def histogram_columns(
         )
     else:
         agg = u.groupBy("__fk").agg(
-            F.coalesce(F.sum("__v"), F.expr(zero_sql)).alias("__val")
+            F.coalesce(F.sum("__v"), F.expr(vm.zero_sql)).alias("__val")
         )
     agg = agg.select(
         F.expr(f"CAST(__fk div {width} AS INT)").alias("__d"),
@@ -884,8 +905,8 @@ def histogram_columns(
     )
     return _finish_value_col(
         filled, [var_name], [spec], group_by=[dim_name], flow=flow,
-        density=density, storage=storage, int_mode=int_mode, divisor=divisor,
-        weighted=weights is not None,
+        density=density, storage=storage, int_mode=vm.int_mode,
+        divisor=vm.divisor, weighted=weights is not None,
     )
 
 

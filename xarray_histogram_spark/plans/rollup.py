@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..binspec import BinSpec
-from .histogram import id_col, scaled_weight_col
+from .histogram import check_inputs, id_col, keep_and_bucketize, value_mode
 
 
 def _group_sets(group_by: list[str], cube: bool) -> list[list[str]]:
@@ -82,33 +82,19 @@ def rollup_histogramdd(
     group_by = list(group_by)
     if not group_by:
         raise ValueError("rollup_histogramdd needs at least one group column")
-    if len(cols) != len(specs):
-        raise ValueError("cols/specs length mismatch")
-    bids = [
-        s.raw_id_col(F.col(c)).alias(id_col(c)) for c, s in zip(cols, specs)
+    specs, _ = check_inputs(df, cols, specs, flow=flow)
+    src, ids = keep_and_bucketize(df, [F.col(c) for c in cols], specs, flow)
+    proj = [F.col(g) for g in group_by] + [
+        i.alias(id_col(c)) for c, i in zip(cols, ids)
     ]
-    preds = [
-        p
-        for c, s in zip(cols, specs)
-        if (p := s.keep_pred_col(F.col(c), flow)) is not None
-    ]
-    src = df
-    for p in preds:
-        src = src.where(p)
-    proj = [F.col(g) for g in group_by] + bids
     if weights is not None:
         proj.append(F.col(weights).alias("__w"))
     base = src.select(*proj)
+    vm = value_mode(weights, weight_scale)
     if weights is None:
         val = F.count(F.lit(1)).cast("bigint")
-    elif weight_scale is not None:
-        s = float(10**weight_scale)
-        val = (
-            F.sum(scaled_weight_col(F.col("__w"), s))
-            .cast("double") / F.lit(s)
-        )
     else:
-        val = F.sum(F.col("__w").cast("double"))
+        val = vm.display_sum(F.col("__w"))
     idc = [F.col(id_col(c)) for c in cols]
     sets = [
         [F.col(g) for g in gs] + idc for gs in _group_sets(group_by, cube)

@@ -105,12 +105,3 @@ def read_result(spark: SparkSession, path: str) -> HistogramResult:
         int_mode=meta["int_mode"],
         divisor=meta["divisor"],
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:
-    """Convenience loader for the driver's TPC-H-ish parquet tables."""
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

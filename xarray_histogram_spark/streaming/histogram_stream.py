@@ -28,7 +28,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..binspec import BinSpec
-from ..plans.histogram import id_col, label_col, scaled_weight_col, spine_df
+from ..plans.histogram import (
+    check_inputs,
+    id_col,
+    keep_and_bucketize,
+    label_col,
+    spine_df,
+    value_mode,
+)
 
 
 def streaming_histogram(
@@ -51,34 +58,23 @@ def streaming_histogram(
     Works identically on a batch DataFrame (same plan, no watermark state).
     """
     group_by = list(group_by)
-    is_streaming = sdf.isStreaming
-    if is_streaming:
+    (spec,), _ = check_inputs(sdf, [col], [spec], flow=flow)
+    if sdf.isStreaming:
         sdf = sdf.withWatermark(ts_col, watermark)
     win = (
         F.window(ts_col, window_duration, slide)
         if slide
         else F.window(ts_col, window_duration)
     )
-    bin_id = spec.raw_id_col(F.col(col)).alias(id_col(col))
-    pred = spec.keep_pred_col(F.col(col), flow)
-    if pred is not None:
-        sdf = sdf.where(pred)
+    sdf, (bin_id,) = keep_and_bucketize(sdf, [F.col(col)], [spec], flow)
     base = sdf.select(
         win.alias("__w"),
         *[F.col(g) for g in group_by],
-        bin_id,
+        bin_id.alias(id_col(col)),
         *([F.col(weights).alias("__wt")] if weights else []),
     )
     if weights is not None:
-        if weight_scale is not None:
-            val = (
-                F.sum(
-                    scaled_weight_col(F.col("__wt"), float(10**weight_scale))
-                ).cast("double")
-                / F.lit(float(10**weight_scale))
-            )
-        else:
-            val = F.sum(F.col("__wt").cast("double"))
+        val = value_mode(weights, weight_scale).display_sum(F.col("__wt"))
     else:
         val = F.count(F.lit(1)).cast("double")
     agg = base.groupBy("__w", *group_by, id_col(col)).agg(val.alias("count"))
@@ -143,15 +139,14 @@ def session_histogram(
     and densify in batch with ``dense_fill``.
     """
     group_by = list(group_by)
+    (spec,), _ = check_inputs(sdf, [col], [spec], flow=flow)
     if sdf.isStreaming:
         sdf = sdf.withWatermark(ts_col, watermark)
-    pred = spec.keep_pred_col(F.col(col), flow)
-    if pred is not None:
-        sdf = sdf.where(pred)
+    sdf, (bin_id,) = keep_and_bucketize(sdf, [F.col(col)], [spec], flow)
     base = sdf.select(
         F.session_window(F.col(ts_col), gap).alias("__w"),
         *[F.col(g) for g in group_by],
-        spec.raw_id_col(F.col(col)).alias(id_col(col)),
+        bin_id.alias(id_col(col)),
     )
     agg = base.groupBy("__w", *group_by).agg(
         F.collect_list(F.col(id_col(col))).alias("__bins")

@@ -32,7 +32,13 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..binspec import BinSpec
-from ..plans.histogram import id_col, label_col, value_col_name
+from ..plans.histogram import (
+    check_inputs,
+    id_col,
+    keep_and_bucketize,
+    label_col,
+    value_col_name,
+)
 
 
 def stateful_cumulative_histogram(
@@ -51,6 +57,7 @@ def stateful_cumulative_histogram(
     import numpy as np
     import pandas as pd
 
+    (spec,), _ = check_inputs(sdf, [col], [spec], flow=flow)
     lo, hi = spec.keep_range(flow)
     extent = hi - lo + 1
     labels = spec.labels(flow)
@@ -107,11 +114,8 @@ def stateful_cumulative_histogram(
             }
         )
 
-    pred = spec.keep_pred_col(F.col(col), flow)
-    src = sdf.where(pred) if pred is not None else sdf
-    bucketized = src.select(
-        F.col(key_col), spec.raw_id_col(F.col(col)).alias("__bin")
-    )
+    src, (bin_id,) = keep_and_bucketize(sdf, [F.col(col)], [spec], flow)
+    bucketized = src.select(F.col(key_col), bin_id.alias("__bin"))
     return bucketized.groupBy(key_col).applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
