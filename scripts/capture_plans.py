@@ -7,7 +7,9 @@ refactor) compare directly with ``diff -r``.
 Writes ``<out_dir>/<name>.txt``.  Run-dependent parts are normalized:
 ``#<digits>`` expression IDs, ``plan_id=<digits>`` exchange IDs and
 ``RDD[<digits>]`` ids lose their digits (JVM-global counters that shift
-with anything that ran before), and the random 8-character suffix of a
+with anything that ran before), lambda variables print as ``lambda v``
+(a Python-lambda builder names them ``x_<counter>``, a Spark SQL text
+builder by its own spelling), and the random 8-character suffix of a
 ``mkdtemp`` directory becomes ``XXXXXXXX``.  With a name list, only those
 entries (registry names or ``baseline_*`` mirror names) are captured.  An
 entry whose builder raises gets its error text as the file content, so a
@@ -32,13 +34,15 @@ from pyspark.sql import functions as F  # noqa: E402
 from xarray_histogram_spark import entry_queries as eq  # noqa: E402
 
 _ID = re.compile(r"(#|plan_id=|RDD\[)\d+")
+_LAMBDA = re.compile(r"\blambda [A-Za-z_][A-Za-z0-9_]*")
 _TMP = re.compile(
     re.escape(tempfile.gettempdir()) + r"/([^/\]\s,]*?)[a-z0-9_]{8}(?=[/\]\s,])"
 )
 
 
 def normalize(text: str) -> str:
-    return _TMP.sub(r"<tmp>/\1XXXXXXXX", _ID.sub(r"\1", text))
+    text = _LAMBDA.sub("lambda v", _ID.sub(r"\1", text))
+    return _TMP.sub(r"<tmp>/\1XXXXXXXX", text)
 
 
 def _mirrors(spark: SparkSession) -> dict:

@@ -153,21 +153,31 @@ def test_dedup_no_cartesian(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1
 
 
-def test_incremental_dedup_reuses_verify_exchange(spark, sf_dir):
-    """incremental_dedup / embed_incremental consume the verified-match
+def _lines_with(plan: str, *parts: str) -> int:
+    """How many lines of a formatted plan contain every one of ``parts``
+    (each node's detail line is printed once; a ReusedExchange prints no
+    copy of the subtree it reuses)."""
+    return sum(all(p in line for p in parts) for line in plan.splitlines())
+
+
+def test_incremental_dedup_reuses_verify_exchange(spark, sf_dir, tmp_path):
+    """incremental_dedup / embed_incremental read the verified-match
     aggregate (kdup) twice — the per-new-id left join and the survivor
-    anti-join.  Round 13 keeps both consumers on the IDENTICAL canonical
-    subtree (no rename inside the exchange), so physical planning dedups
-    them into a ReusedExchange and the expensive verification pipeline
-    (kept-corpus probe join + per-candidate folds) executes ONCE.  A
-    regression here silently doubles the kept-side work at 100 TB.
+    anti-join — and the shard's band-key buckets twice — the kept-index
+    probe and the new-vs-new pairs.  Each pair of readers must share one
+    canonical subtree so physical planning reuses its exchange and the
+    expensive work runs ONCE: the kept-side verification (the Jaccard
+    filter over new and kept shingle sets; the cosine join for
+    embeddings) appears exactly once in the executed plan, and with a
+    persisted kept index the shard's MinHash fold appears exactly once.
+    A regression here silently doubles the kept-side work at 100 TB.
     (AQE is toggled off for the check: under AQE the static plan prints
     isFinalPlan=false before any runtime stage reuse has happened; the
     static ReuseExchangeAndSubquery rule is what this pins.)"""
     from pyspark.sql import functions as F
 
     from xarray_histogram_spark.operators.dedup import (
-        embed_incremental, incremental_dedup,
+        band_rows, embed_incremental, incremental_dedup,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -178,20 +188,67 @@ def test_incremental_dedup_reuses_verify_exchange(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
+    idx = str(tmp_path / "bands")
+    band_rows(kept_df, "text", "doc_id").write.parquet(idx)
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         p = plan_of(incremental_dedup(new_df, kept_df, "text", "doc_id"))
-        assert "ReusedExchange" in p
+        assert _lines_with(p, "arrays_overlap(filter(_nset", "_kset") == 1
+
+        p = plan_of(incremental_dedup(
+            new_df, kept_df, "text", "doc_id",
+            kept_bands=spark.read.parquet(idx),
+        ))
+        assert _lines_with(p, "arrays_overlap(filter(_nset", "_kset") == 1
+        assert _lines_with(p, "aggregate(transform(transform(sequence") == 1
 
         pe = plan_of(embed_incremental(
             emb.where(F.col("vec_id") % 5 == 2),
             emb.where(F.col("vec_id") % 5 != 2),
             threshold=0.35,
         ))
-        assert "ReusedExchange" in pe
+        assert _lines_with(pe, "Join condition", "isnan", "_kv") == 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def test_shard_step_build_py4j_budget(spark, sf_dir, tmp_path):
+    """The shard dedup step's builders are Spark SQL text parsed once per
+    output column, not Column/lambda trees that cost py4j round trips per
+    node: each build (the second, once the session is warm) stays under
+    a fixed round-trip budget, a third or less of what the Column-tree
+    builders made (band_rows ~1070, curate_documents ~1670,
+    incremental_dedup with a kept index ~4900)."""
+    from pyspark.sql import functions as F
+
+    from xarray_histogram_spark.operators.curate import curate_documents
+    from xarray_histogram_spark.operators.dedup import (
+        band_rows, incremental_dedup,
+    )
+
+    from .util import py4j_calls
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    new_df = docs.where(F.col("doc_id") % 4 == 3)
+    kept_df = docs.where(F.col("doc_id") % 4 != 3)
+    idx = str(tmp_path / "bands")
+    band_rows(kept_df, "text", "doc_id").write.parquet(idx)
+    kept_bands = spark.read.parquet(idx)
+    builds = {
+        "band_rows": (350, lambda: band_rows(new_df, "text", "doc_id")),
+        "curate_documents": (400, lambda: curate_documents(
+            docs, "text", "doc_id", quality_min=0.5)),
+        "incremental_dedup": (1000, lambda: incremental_dedup(
+            new_df, kept_df, "text", "doc_id", kept_bands=kept_bands)),
+    }
+    for name, (budget, build) in builds.items():
+        build()
+        with py4j_calls(spark) as n:
+            build()
+        assert n.calls <= budget, (name, n.calls)
 
 
 def test_simhash_zero_shuffle(spark, sf_dir):

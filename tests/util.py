@@ -6,6 +6,8 @@ order-insensitive) — the same bar as the driver's value-hash."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -57,3 +59,29 @@ def assert_matches_sql(sdf, sql: str, con, exact: bool = True, rtol: float = 0.0
             assert (pd.Series(g).fillna("__null__") == pd.Series(e).fillna("__null__")).all(), (
                 f"{c}: value mismatch"
             )
+
+
+class Py4jCount:
+    """Round-trip tally filled by :func:`py4j_calls`."""
+
+    calls = 0
+
+
+@contextmanager
+def py4j_calls(spark):
+    """Count the py4j round trips the block makes (by wrapping the
+    gateway client's ``send_command``); the count is read from the
+    yielded object's ``calls``."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    tally = Py4jCount()
+
+    def counting(*args, **kwargs):
+        tally.calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield tally
+    finally:
+        client.send_command = send

@@ -1,7 +1,7 @@
 """Cross-engine deterministic text-hashing primitives.
 
-Every primitive here is expressed twice — as a Spark Column (JVM, codegen)
-and as the equivalent DuckDB SQL — built so both produce BIT-IDENTICAL
+Every primitive here is expressed twice — for Spark and as the equivalent
+DuckDB SQL (the ``*_sql`` twins) — built so both produce BIT-IDENTICAL
 results (the driver's oracle gate hash-compares values):
 
 - md5 is the only hash both engines share; 64-bit+ signatures are built
@@ -12,6 +12,15 @@ results (the driver's oracle gate hash-compares values):
   1-based, inclusive semantics).
 - tokenisation via regex split on ``\\s+`` with empty-string filtering
   (Java regex and RE2 agree on this class).
+
+The hot per-document kernels (``md5cc``, ``shingles``, ``tokens``)
+build Spark SQL TEXT over a Spark SQL expression (a
+column goes in as ``q(name)``): a caller composes the strings and parses
+each output column once with ``F.expr``/``selectExpr``.  A Column tree
+costs several py4j round trips per node and a Python lambda tens, so the
+text form keeps plan construction cheap; the parsed expression is the
+same Catalyst tree.  Lambda variables are ``_``-prefixed so they cannot
+capture a user column referenced inside the lambda body.
 """
 
 from __future__ import annotations
@@ -20,6 +29,24 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 HEX = "0123456789abcdef"
+
+
+def q(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sstr(s: str) -> str:
+    """A Python string as a Spark SQL string literal (the parser
+    unescapes backslashes, so they are doubled)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def dlit(v: float) -> str:
+    """A finite Python float as a Spark SQL DOUBLE literal (``repr``
+    round-trips, and the parser reads it with Java's correctly rounded
+    ``parseDouble``: the same double)."""
+    return f"{float(v)!r}D"
 
 
 # ---- md5 ----
@@ -31,10 +58,13 @@ def md5_hex_sql(expr: str) -> str:
     return f"md5({expr})"
 
 
-def md5cc(c: Column) -> Column:
+def md5cc(expr: str) -> str:
     """64 hex chars: md5(s) || md5('x' || s) — eight 8-hex-char (32-bit)
-    independent hash slices for MinHash signatures."""
-    return F.concat(md5_hex(c), F.md5(F.concat(F.lit("x"), c).cast("binary")))
+    independent hash slices for MinHash signatures (Spark SQL text)."""
+    return (
+        f"concat(md5(CAST({expr} AS BINARY)), "
+        f"md5(CAST(concat('x', {expr}) AS BINARY)))"
+    )
 
 
 def md5cc_sql(expr: str) -> str:
@@ -42,11 +72,12 @@ def md5cc_sql(expr: str) -> str:
 
 
 # ---- shingles ----
-def shingles(text: Column, k: int) -> Column:
-    """All char k-shingles (1..len-k+1); whole string if shorter than k."""
-    n = F.greatest(F.length(text) - F.lit(k - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.substring(text, i, k)
+def shingles(expr: str, k: int) -> str:
+    """All char k-shingles (1..len-k+1); whole string if shorter than k
+    (Spark SQL text)."""
+    return (
+        f"transform(sequence(1, greatest(length({expr}) - {k - 1}, 1)), "
+        f"_i -> substring({expr}, _i, {k}))"
     )
 
 
@@ -64,8 +95,10 @@ def shingles_sql(expr: str, k: int) -> str:
 _WS_CLASS = "[ \\t\\n\\r\\f\\x0B]+"
 
 
-def tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), _WS_CLASS), lambda t: t != "")
+def tokens(expr: str) -> str:
+    """Lower-cased whitespace tokens, empty strings dropped (Spark SQL
+    text)."""
+    return f"filter(split(lower({expr}), {sstr(_WS_CLASS)}), _t -> _t != '')"
 
 
 def tokens_sql(expr: str) -> str:

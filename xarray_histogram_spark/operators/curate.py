@@ -24,9 +24,8 @@ from __future__ import annotations
 
 from typing import Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..binspec import flit, slit
 from ..functions import hashing as H
@@ -69,9 +68,10 @@ from .text import (
 _BARRIER = "__nopush"
 
 
-def _with_barrier(cond: Column) -> Column:
-    """``cond`` AND the always-true barrier-column guard (see _BARRIER)."""
-    return cond & (F.col(_BARRIER) >= F.lit(-1))
+def _with_barrier(cond: str) -> str:
+    """Spark SQL text: ``cond`` AND the always-true barrier-column guard
+    (see _BARRIER)."""
+    return f"({cond}) AND {_BARRIER} >= -1"
 
 DEFAULT_SPLITS: Tuple[Tuple[str, float], ...] = (
     ("train", 0.9), ("val", 0.05), ("test", 0.05),
@@ -114,18 +114,18 @@ def curate_documents(
             raise ValueError(
                 f"curate_documents: split fractions sum to {total}, expected 1"
             )
-    fp = H.md5_hex(F.col(text_col))
+    qid, qtext = H.q(id_col), H.q(text_col)
+    fp = f"md5(CAST({qtext} AS BINARY))"
     if wide_rows:
-        w = Window.partitionBy(fp).orderBy(F.col(id_col))
-        kept = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-        )
+        kept = df.withColumn(
+            "__rn",
+            F.expr(f"row_number() OVER (PARTITION BY {fp} ORDER BY {qid})"),
+        ).where("__rn = 1")
     else:
         keepers = (
-            df.select(fp.alias("__fp"), F.col(id_col))
+            df.selectExpr(f"{fp} AS __fp", qid)
             .groupBy("__fp")
-            .agg(F.min(id_col).alias(id_col))
+            .agg(F.expr(f"min({qid}) AS {qid}"))
             .select(id_col)
         )
         kept = df.join(keepers, id_col, "left_semi")
@@ -134,44 +134,41 @@ def curate_documents(
     # from attributes — the single-projection form re-tokenized ~19×/row
     # (argmax when-chain re-embeds each hit up to 2^(len(LANGS)-1) times,
     # quality re-embeds the tokenizer per ratio).  Values identical.
-    toks = H.tokens(F.col(text_col))
-    pre = kept.select(F.col(id_col), F.col(text_col), toks.alias("__toks"))
-    tok_attr = F.col("__toks")
+    pre = kept.selectExpr(qid, qtext, f"{H.tokens(qtext)} AS __toks")
     base = pre.select(
         F.col(id_col),
-        *lang_hit_cols(text_col, toks=tok_attr),
-        F.length(F.regexp_replace(F.col(text_col), "[^A-Za-z]", ""))
-        .cast("double")
-        .alias("__q_alpha"),
-        *token_count_cols(text_col, toks=tok_attr),
+        *lang_hit_cols(text_col, toks="__toks"),
+        F.expr(
+            f"CAST(length(regexp_replace({qtext}, '[^A-Za-z]', '')) AS DOUBLE) "
+            "AS __q_alpha"
+        ),
+        *token_count_cols(text_col, toks="__toks"),
     )
-    hits = {lang: F.col(f"__h_{lang}") for lang in STOPWORDS}
+    hits = {lang: f"__h_{lang}" for lang in STOPWORDS}
     # quality's stop base IS the English hit count, and its ntok/nchars
     # are the token/char counts — reuse the materialized columns (the
     # bigint→double casts produce bit-identical doubles for these exact
     # integer counts)
     qbase = {
-        "ntok": F.col("n_tokens").cast("double"),
-        "nchars": F.col("n_chars").cast("double"),
-        "alpha": F.col("__q_alpha"),
-        "stop": F.col("__h_en").cast("double"),
+        "ntok": "CAST(n_tokens AS DOUBLE)",
+        "nchars": "CAST(n_chars AS DOUBLE)",
+        "alpha": "__q_alpha",
+        "stop": "CAST(__h_en AS DOUBLE)",
     }
     out = base.select(
         F.col(id_col),
         lang_pred_col(text_col, hits=hits),
         *quality_cols(text_col, base=qbase),
-        F.col("n_tokens"),
-        F.col("n_pieces"),
-        F.col("n_subwords"),
-        F.col("n_chars"),
-        F.spark_partition_id().alias(_BARRIER),
+        *[F.col(c) for c in ("n_tokens", "n_pieces", "n_subwords", "n_chars")],
+        F.expr(f"spark_partition_id() AS {_BARRIER}"),
     )
     if quality_min is not None:
-        out = out.where(
-            _with_barrier(F.col("quality") >= F.lit(float(quality_min)))
-        )
+        out = out.where(_with_barrier(f"quality >= {H.dlit(quality_min)}"))
     if langs is not None:
-        out = out.where(_with_barrier(F.col("lang_pred").isin(*langs)))
+        in_langs = ", ".join(H.sstr(x) for x in langs)
+        # no languages keep no rows (SQL has no empty IN list)
+        cond = f"lang_pred IN ({in_langs})" if in_langs else "false"
+        out = out.where(_with_barrier(cond))
     out = out.drop(_BARRIER)
     if splits:
         out = assign_splits(out, id_col, splits, salt=salt)
@@ -311,15 +308,14 @@ def corpus_report(
     text = F.col(text_col)
     pre = df.select(
         F.col(group_col), text,
-        H.tokens(text).alias("__toks"),
+        F.expr(H.tokens(H.q(text_col))).alias("__toks"),
         F.split(text, "\n", -1).alias("__lines"),
     )
-    tok_attr = F.col("__toks")
-    tok = token_count_cols(text_col, toks=tok_attr)
+    tok = token_count_cols(text_col, toks="__toks")
     m = gopher_metric_exprs(
-        text_col, toks=tok_attr, lines=F.col("__lines")
+        text_col, toks=F.col("__toks"), lines=F.col("__lines")
     )
-    stop_en = _stop_hits(tok_attr, STOPWORDS["en"])
+    stop_en = _stop_hits("__toks", STOPWORDS["en"])
     mid = pre.select(
         F.col(group_col),
         tok[0],                                   # n_tokens
@@ -327,15 +323,15 @@ def corpus_report(
         F.length(F.regexp_replace(text, "[^A-Za-z]", ""))
         .cast("double")
         .alias("__q_alpha"),
-        stop_en.cast("double").alias("__q_stop"),
+        F.expr(f"CAST({stop_en} AS DOUBLE) AS __q_stop"),
         *gopher_cols(text_col, metrics=m, **gopher_thresholds)[:-1],
         pii_cols(text_col)[-1],                   # n_pii
     )
     qbase = {
-        "ntok": F.col("n_tokens").cast("double"),
-        "nchars": F.col("n_chars").cast("double"),
-        "alpha": F.col("__q_alpha"),
-        "stop": F.col("__q_stop"),
+        "ntok": "CAST(n_tokens AS DOUBLE)",
+        "nchars": "CAST(n_chars AS DOUBLE)",
+        "alpha": "__q_alpha",
+        "stop": "__q_stop",
     }
     feats = mid.select(
         F.col(group_col),

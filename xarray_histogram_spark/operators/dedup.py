@@ -26,7 +26,7 @@ from __future__ import annotations
 import atexit
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
@@ -84,31 +84,28 @@ def minhash_signatures(
     # higher-order functions (array_min(transform(transform(...))) per mh_i
     # silently yields '') — one aggregate over the md5cc array is both
     # correct and a single pass over the shingles.
-    cc_arr = F.transform(H.shingles(F.col(text_col), k), lambda s: H.md5cc(s))
-    init = F.array_repeat(F.lit("g"), N_HASHES)  # 'g' > every lowercase hex string
-    sig = F.aggregate(
-        cc_arr,
-        init,
-        lambda acc, c: F.array(
-            *[
-                F.least(F.element_at(acc, i + 1), F.substring(c, 1 + 8 * i, 8))
-                for i in range(N_HASHES)
-            ]
-        ),
+    slots = ", ".join(
+        f"least(element_at(_acc, {i + 1}), substring(_c, {1 + 8 * i}, 8))"
+        for i in range(N_HASHES)
+    )
+    # 'g' > every lowercase hex string
+    sig = (
+        f"aggregate(transform({H.shingles(H.q(text_col), k)}, "
+        f"_s -> {H.md5cc('_s')}), array_repeat('g', {N_HASHES}), "
+        f"(_acc, _c) -> array({slots}))"
     )
     # NULL text: the fold's least('g', NULL) keeps the 'g' sentinel (Spark
     # least skips NULLs) while the oracle's MIN over the one NULL shingle
     # row is NULL — a leaked sentinel would also band every NULL-text doc
     # into one fake near-dup bucket.  NULL text → NULL signature, like the
     # explode formulation.
-    return df.select(
-        F.col(id_col), F.col(text_col).isNotNull().alias("_has"),
-        sig.alias("_sig"),
-    ).select(
-        F.col(id_col),
+    idc = H.q(id_col)
+    return df.selectExpr(
+        idc, f"{H.q(text_col)} IS NOT NULL AS _has", f"{sig} AS _sig"
+    ).selectExpr(
+        idc,
         *[
-            F.when(F.col("_has"), F.element_at(F.col("_sig"), i + 1))
-            .alias(f"mh{i}")
+            f"CASE WHEN _has THEN element_at(_sig, {i + 1}) END AS mh{i}"
             for i in range(N_HASHES)
         ],
     )
@@ -133,22 +130,39 @@ def minhash_signatures_sql(table: str, text_col: str, id_col: str, k: int = 8) -
     return f"SELECT {id_col}, {aggs} FROM ({rows}) s GROUP BY {id_col}"
 
 
-def _ordered_pairs(arr, make) -> "F.Column":
-    """Expand a SORTED array column into its ordered pairs in place —
-    element i with every later element, ``make(a, b)`` building each pair
-    struct.  Shared by every bucketed candidate generator (MinHash-LSH,
-    SimHash bands): m(m−1)/2 rows per bucket, no self-join."""
-    return F.explode(
-        F.flatten(
-            F.transform(
-                arr,
-                lambda a, i: F.transform(
-                    F.slice(arr, i + 2, F.size(arr)),
-                    lambda b: make(a, b),
-                ),
-            )
-        )
+def _ordered_pairs(arr: str, make) -> str:
+    """Expand a SORTED array into its ordered pairs in place — element i
+    with every later element, ``make(a, b)`` building each pair struct
+    (Spark SQL text in, text out).  Shared by every bucketed candidate
+    generator (MinHash-LSH, SimHash bands): m(m−1)/2 rows per bucket, no
+    self-join."""
+    return (
+        f"explode(flatten(transform({arr}, (_a, _i) -> "
+        f"transform(slice({arr}, _i + 2, size({arr})), "
+        f"_b -> {make('_a', '_b')}))))"
     )
+
+
+def _band_buckets(bands: DataFrame, id_col: str) -> DataFrame:
+    """(bi, bk, ids): each band key's sorted id list, from ``band_rows``
+    output — ONE shuffle of the band rows, map-side combined."""
+    return bands.groupBy("bi", "bk").agg(
+        F.expr(f"sort_array(collect_list({H.q(id_col)})) AS ids")
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, max_bucket: Optional[int]) -> DataFrame:
+    """One ``p`` = struct(id_a, id_b) row, id_a < id_b, per pair of ids
+    sharing a bucket of ``_band_buckets`` output — every bucket of ≥ 2
+    ids (and ≤ ``max_bucket``, when given) expands to its ordered pairs;
+    a pair sharing several bands repeats once per band."""
+    b = buckets.where("size(ids) > 1")
+    if max_bucket is not None:
+        b = b.where(f"size(ids) <= {int(max_bucket)}")
+    return b.select(F.expr(
+        _ordered_pairs("ids", lambda a, bb: f"struct({a} AS id_a, {bb} AS id_b)")
+        + " AS p"
+    ))
 
 
 def lsh_candidate_pairs(
@@ -184,23 +198,10 @@ def lsh_candidate_pairs(
     ``concat_ws`` turned NULL signatures into ``""`` keys that would
     have bucketed every NULL-text doc into one fake near-dup group
     (latent divergence — the fixtures carry no NULL text, review-found)."""
-    b = band_rows(df, text_col, id_col, k)
-    buckets = (
-        b.groupBy("bi", "bk")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-        .where(F.size("ids") > 1)
-    )
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("ids") <= F.lit(int(max_bucket)))
-    pairs = buckets.select(
-        _ordered_pairs(
-            F.col("ids"),
-            lambda a, bb: F.struct(a.alias("id_a"), bb.alias("id_b")),
-        ).alias("p")
-    )
-    return pairs.groupBy(
-        F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-    ).agg(F.count(F.lit(1)).alias("n_bands"))
+    buckets = _band_buckets(band_rows(df, text_col, id_col, k), id_col)
+    return _bucket_pairs(buckets, max_bucket).groupBy(
+        F.expr("p.id_a AS id_a"), F.expr("p.id_b AS id_b")
+    ).agg(F.expr("count(1) AS n_bands"))
 
 
 def lsh_candidate_pairs_sql(
@@ -275,25 +276,35 @@ def jaccard_pairs(
     pairs = lsh_candidate_pairs(df, text_col, id_col, k).select("id_a", "id_b")
     if broadcast_pairs:
         pairs = F.broadcast(pairs)
-    shset = F.array_distinct(H.shingles(F.col(text_col), k))
-    shs = df.select(
-        F.col(id_col).alias("_sid"),
-        shset.alias("shset"),
-        F.size(shset).alias("nsh"),
+    shset = _shingle_set(H.q(text_col), k)
+    shs = df.selectExpr(
+        f"{H.q(id_col)} AS _sid", f"{shset} AS shset", f"size({shset}) AS nsh"
     )
     joined = (
-        pairs.join(shs.alias("a"), pairs["id_a"] == F.col("a._sid"))
-        .join(shs.alias("b"), pairs["id_b"] == F.col("b._sid"))
+        pairs.join(shs.alias("a"), F.expr("id_a = a._sid"))
+        .join(shs.alias("b"), F.expr("id_b = b._sid"))
     )
-    a_nn = F.filter(F.col("a.shset"), lambda x: x.isNotNull())
-    inter = F.size(F.array_intersect(a_nn, F.col("b.shset")))
-    return joined.where(F.arrays_overlap(a_nn, F.col("b.shset"))).select(
-        "id_a",
-        "id_b",
-        (
-            inter.cast("double")
-            / (F.col("a.nsh") + F.col("b.nsh") - inter).cast("double")
-        ).alias("jaccard"),
+    overlap, jac = _jaccard_exprs("a.shset", "a.nsh", "b.shset", "b.nsh")
+    return joined.where(overlap).selectExpr(
+        "id_a", "id_b", f"{jac} AS jaccard"
+    )
+
+
+def _shingle_set(expr: str, k: int) -> str:
+    """A document's distinct k-shingle array (Spark SQL text)."""
+    return f"array_distinct({H.shingles(expr, k)})"
+
+
+def _jaccard_exprs(a_set: str, a_size: str, b_set: str, b_size: str):
+    """(overlap precheck, exact Jaccard) Spark SQL text for two shingle
+    sets and their sizes — the one spelling of the verification every
+    Jaccard join uses.  The a-side set is null-filtered before
+    ``arrays_overlap``/``array_intersect`` (see ``jaccard_pairs``)."""
+    a_nn = f"filter({a_set}, _x -> _x IS NOT NULL)"
+    inter = f"size(array_intersect({a_nn}, {b_set}))"
+    return (
+        f"arrays_overlap({a_nn}, {b_set})",
+        f"CAST({inter} AS DOUBLE) / CAST({a_size} + {b_size} - {inter} AS DOUBLE)",
     )
 
 
@@ -684,7 +695,7 @@ def _simhash_df(
         n = min(8, hexlen - p + 1)
         spans.append((p, n))
         p += n
-    toks_arr = H.tokens(F.col(text_col))
+    toks_arr = F.expr(H.tokens(H.q(text_col)))
     h_arr = F.transform(
         F.transform(
             toks_arr,
@@ -831,17 +842,13 @@ def simhash_pairs(
     )
     if max_bucket is not None:
         buckets = buckets.where(F.size("members") <= F.lit(int(max_bucket)))
-    pairs = buckets.select(
+    pairs = buckets.select(F.expr(
         _ordered_pairs(
-            F.col("members"),
-            lambda a, bb: F.struct(
-                a["i"].alias("id_a"),
-                bb["i"].alias("id_b"),
-                a["s"].alias("sh_a"),
-                bb["s"].alias("sh_b"),
-            ),
-        ).alias("p")
-    )
+            "members",
+            lambda a, bb: f"struct({a}.i AS id_a, {bb}.i AS id_b, "
+                          f"{a}.s AS sh_a, {bb}.s AS sh_b)",
+        ) + " AS p"
+    ))
     ham = F.bit_count(
         F.col("p.sh_a").bitwiseXOR(F.col("p.sh_b"))
     ).cast("int")
@@ -913,11 +920,10 @@ def ngram_contamination(
     doc (map-side combined, output ≤ flagged docs).  With a very large
     benchmark pass ``broadcast=False`` to drop the hint — Spark then
     plans a shuffle join on uniform shingle keys."""
-    sh_b = benchmark.select(
-        F.explode(H.shingles(F.col(text_col), k)).alias("sh")
-    ).distinct()
-    matched = corpus.select(
-        F.col(id_col), F.explode(H.shingles(F.col(text_col), k)).alias("sh")
+    shingles = H.shingles(H.q(text_col), k)
+    sh_b = benchmark.selectExpr(f"explode({shingles}) AS sh").distinct()
+    matched = corpus.selectExpr(
+        H.q(id_col), f"explode({shingles}) AS sh"
     ).join(F.broadcast(sh_b) if broadcast else sh_b, "sh")
     return (
         matched.distinct()
@@ -982,16 +988,13 @@ def band_rows(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFram
     a pushable scan predicate instead, and mh0 is NULL iff text is NULL
     (the 'g'-sentinel contract in minhash_signatures)."""
     sigs = minhash_signatures(
-        df.where(F.col(text_col).isNotNull()), text_col, id_col, k
+        df.where(f"{H.q(text_col)} IS NOT NULL"), text_col, id_col, k
     )
-    bands = F.array(
-        *[
-            F.concat_ws("_", F.col(f"mh{2 * j}"), F.col(f"mh{2 * j + 1}"))
-            for j in range(N_BANDS)
-        ]
+    bands = ", ".join(
+        f"concat_ws('_', mh{2 * j}, mh{2 * j + 1})" for j in range(N_BANDS)
     )
     return (
-        sigs.select(F.col(id_col), F.posexplode(bands).alias("bi", "bk"))
+        sigs.selectExpr(H.q(id_col), f"posexplode(array({bands})) AS (bi, bk)")
         .withMetadata("bk", {"shingle_k": int(k)})
     )
 
@@ -1032,20 +1035,25 @@ def incremental_dedup(
     - ``kept_match``: the MIN kept id among verified matches (NULL when
       ``dup_of_kept`` is false) — the canonical doc this one duplicates.
     - ``dup_within_new``: near-duplicates (same LSH + exact-Jaccard
-      verification, via ``jaccard_pairs``) a LOWER-id new doc that itself
+      verification as ``jaccard_pairs``) a LOWER-id new doc that itself
       SURVIVED the kept check — the same one-level keep-first-occurrence
       policy as ``near_dedup_keep``, not transitive closure.
     - ``keep``: neither verdict — the doc enters the keeper corpus.
 
     Scale shape (the kept corpus is the 100 TB side, the shard is small):
-    the shard's band rows and candidate set are BROADCAST, so the kept
-    corpus contributes exactly two map-side probed scans — its band index
-    (pass a persisted ``kept_bands`` frame to skip even that signature
-    recompute) and a scan to fetch shingle sets for the candidate kept
-    ids only.  No kept-side shuffle anywhere; the only shuffles are over
-    shard-sized frames (candidate distinct, per-new-id min, the shard's
-    own ``lsh_candidate_pairs`` band groupBy).  ``broadcast_new=False``
-    drops the hints for giant shards and lets AQE choose.
+    the shard's band-key buckets, candidate set and per-doc shingle sets
+    are BROADCAST, so the kept corpus contributes exactly two map-side
+    probed scans — its band index (pass a persisted ``kept_bands`` frame
+    to skip even that signature recompute) and a scan to fetch texts for
+    the candidate kept ids only.  No kept-side shuffle anywhere; the only
+    shuffles are over shard-sized frames (the shard's band groupBy,
+    candidate distinct, per-new-id min, distinct dropped ids).  Each
+    piece of work runs ONCE per query: the shard's MinHash fold (the
+    band buckets feed both the kept probe and the new-vs-new pairs), the
+    shard's shingle sets (one broadcast for the kept check and both
+    sides of the new-vs-new check) and the kept-side verification (see
+    ``_incremental_verdicts``).  ``broadcast_new=False`` drops the hints
+    for giant shards and lets AQE choose.
 
     ``kept_bands``: a persisted ``band_rows(kept_df, ...)`` output; when
     given, ``kept_df`` is only scanned to fetch candidate texts.
@@ -1063,10 +1071,16 @@ def incremental_dedup(
     (or pre-filter the persisted index once at build time, which makes
     this per-shard pass free).
     """
-    thr = F.lit(float(threshold))
-    nb = band_rows(new_df, text_col, id_col, k).withColumnRenamed(id_col, "new_id")
-    if broadcast_new:
-        nb = F.broadcast(nb)
+    thr = H.dlit(threshold)
+    bc = F.broadcast if broadcast_new else (lambda d: d)
+    # The shard's band-key buckets, read by BOTH the kept-index probe
+    # below and the new-vs-new pairs further down: one canonical subtree,
+    # so physical planning reuses its exchange and the shard's MinHash
+    # fold runs once per verdict query (probing with the bare band rows
+    # and calling jaccard_pairs ran the fold twice).  Values identical:
+    # a bucket's ids are exactly the shard docs carrying that band key
+    # (collect_list drops NULL ids, which never join or pair anyway).
+    buckets = _band_buckets(band_rows(new_df, text_col, id_col, k), id_col)
     if kept_bands is not None:
         # refuse an index built with a different shingle width — the
         # band keys would come from disjoint shingle spaces and every
@@ -1097,22 +1111,25 @@ def incremental_dedup(
     if max_kept_per_band is not None:
         big = (
             kb.groupBy("bi", "bk")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > F.lit(int(max_kept_per_band)))
+            .agg(F.expr("count(1) AS _n"))
+            .where(f"_n > {int(max_kept_per_band)}")
             .select("bi", "bk")
         )
         kb = kb.join(F.broadcast(big), ["bi", "bk"], "left_anti")
-    cand = kb.join(nb, ["bi", "bk"]).select("new_id", "kept_id").distinct()
+    cand = (
+        kb.join(bc(buckets), ["bi", "bk"])
+        .selectExpr("explode(ids) AS new_id", "kept_id")
+        .distinct()
+    )
 
     # exact shingle-set Jaccard verification of new-vs-kept candidates
     # (same set/size/intersection semantics as jaccard_pairs: per-row
     # array_distinct sets, a-side nulls filtered before array_intersect,
     # empty intersections dropped — the oracle's inner join has no row)
-    shset = F.array_distinct(H.shingles(F.col(text_col), k))
-    nsh = new_df.select(
-        F.col(id_col).alias("_nid"), shset.alias("_nset"),
-        F.size(shset).alias("_nsz"),
-    )
+    nset = _shingle_set(H.q(text_col), k)
+    nsh = bc(new_df.selectExpr(
+        f"{H.q(id_col)} AS _nid", f"{nset} AS _nset", f"size({nset}) AS _nsz"
+    ))
     # Kept side, restructured round 13.  The former spelling broadcast
     # ``cand ⋈ nsh`` — every candidate PAIR row carrying the new doc's
     # FULL shingle-set array (sets duplicated per pair) — and computed
@@ -1126,18 +1143,14 @@ def incremental_dedup(
     # per reference, probe-verified 4×).  Values identical: same fold
     # over the same text; NULL-text kept rows were never candidates
     # (band_rows emits no rows for them).
-    ktext = kept_df.select(
-        F.col(id_col).alias("_kid"), F.col(text_col).alias("_ktxt")
+    ktext = kept_df.selectExpr(
+        f"{H.q(id_col)} AS _kid", f"{H.q(text_col)} AS _ktxt"
     )
-    candb = F.broadcast(cand) if broadcast_new else cand
-    kset = F.array_distinct(H.shingles(F.col("_ktxt"), k))
-    kverif = ktext.join(candb, F.col("kept_id") == F.col("_kid")).select(
-        "new_id", "kept_id", kset.alias("_kset"), F.size(kset).alias("_ksz")
+    kset = _shingle_set("_ktxt", k)
+    kverif = ktext.join(bc(cand), F.expr("kept_id = _kid")).selectExpr(
+        "new_id", "kept_id", f"{kset} AS _kset", f"size({kset}) AS _ksz"
     )
-    joined = kverif.join(
-        F.broadcast(nsh) if broadcast_new else nsh,
-        F.col("new_id") == F.col("_nid"),
-    )
+    joined = kverif.join(nsh, F.expr("new_id = _nid"))
     # one Filter, no projected _i: the former select(_i)-then-where
     # shape re-inlined the intersect into the pushed Filter (it cannot
     # CSE with the projection's copy — see jaccard_pairs' round-9 note);
@@ -1146,57 +1159,77 @@ def incremental_dedup(
     # early-exits non-overlapping candidates, the in-node-CSE'd
     # intersect runs ONCE for the rest.  The predicate references both
     # join sides, so it cannot be pushed into either set projection.
-    a_nn = F.filter(F.col("_nset"), lambda x: x.isNotNull())
-    inter = F.size(F.array_intersect(a_nn, F.col("_kset")))
-    verified = joined.where(
-        F.arrays_overlap(a_nn, F.col("_kset"))
-        & (
-            inter.cast("double")
-            / (F.col("_nsz") + F.col("_ksz") - inter).cast("double")
-            >= thr
-        )
-    ).select("new_id", "kept_id")
-    # kdup is consumed TWICE (the per-new-id left join below and the
-    # survivor anti-join inside nn_drop).  Round 13: both consumers see
-    # the IDENTICAL canonical subtree — no rename/projection inside it,
-    # join conditions reference the frames directly — so physical
-    # planning dedups the two broadcasts into one ReusedExchange and the
-    # whole verification pipeline (kept-corpus probe join + per-candidate
-    # shingle folds) runs ONCE instead of twice.  The former spelling
-    # renamed new_id differently per consumer (withColumnRenamed /
-    # select-alias), which put a distinct Project inside each exchange
-    # and defeated reuse.  Values identical — same rows, same joins.
-    kdup = verified.groupBy("new_id").agg(F.min("kept_id").alias("kept_match"))
-    if broadcast_new:
-        kdup = F.broadcast(kdup)
+    overlap, jac = _jaccard_exprs("_nset", "_nsz", "_kset", "_ksz")
+    verified = joined.where(f"{overlap} AND {jac} >= {thr}").select(
+        "new_id", "kept_id"
+    )
 
-    # new-vs-new among kept-survivors: one-level min-id-first greedy
-    # (broadcast opt-out propagates — a shard big enough to need
-    # broadcast_new=False must not broadcast its candidate-pair list
-    # inside jaccard_pairs either, review-found)
+    # new-vs-new among kept-survivors: one-level min-id-first greedy.
+    # The pairs come from the shared buckets and are verified against
+    # the same per-doc shard sets as the kept check (one broadcast,
+    # reused), with the same Jaccard spelling as jaccard_pairs.  A pair
+    # sharing several bands is verified once per band instead of being
+    # deduplicated first: a repeat costs one set intersection, the
+    # dedup a shuffle (the verdicts only ask whether a pair exists).
+    overlap, jac = _jaccard_exprs("a._nset", "a._nsz", "b._nset", "b._nsz")
     nn = (
-        jaccard_pairs(new_df, text_col, id_col, k,
-                      broadcast_pairs=broadcast_new)
-        .where(F.col("jaccard") >= thr)
+        _bucket_pairs(buckets, None)
+        .selectExpr("p.id_a AS id_a", "p.id_b AS id_b")
+        .join(nsh.alias("a"), F.expr("id_a = a._nid"))
+        .join(nsh.alias("b"), F.expr("id_b = b._nid"))
+        .where(f"{overlap} AND {jac} >= {thr}")
         .select("id_a", "id_b")
     )
-    nn_drop = (
-        nn.join(kdup, nn["id_a"] == kdup["new_id"], "left_anti")
-        .select(F.col("id_b").alias(id_col))
+    return _incremental_verdicts(new_df, id_col, verified, nn, broadcast_new)
+
+
+def _incremental_verdicts(
+    new_df: DataFrame, id_col: str, verified: DataFrame, nn: DataFrame,
+    broadcast_new: bool,
+) -> DataFrame:
+    """The verdict rows of ``incremental_dedup``/``embed_incremental``
+    from the verified new-vs-kept matches ``verified`` (new_id, kept_id)
+    and the verified new-vs-new pairs ``nn`` (id_a < id_b).  With
+    ``broadcast_new`` the per-new-id matches ``kdup`` and the dropped
+    new ids are broadcast (both are shard-bounded), so the verdict rows
+    come out of one map-side pass over the shard ids.
+
+    ``kdup`` is read TWICE: the per-new-id left join and the survivor
+    filter.  Both must see the IDENTICAL canonical subtree for physical
+    planning to reuse its exchange, so the verification (the kept-side
+    probe join and the per-candidate folds) runs once.  The survivor
+    filter is therefore the same left join followed by "no ``kdup`` row"
+    (``new_id IS NULL``), not a left anti-join: column pruning would cut
+    ``kept_match`` out of an anti-join's copy (its key is all that join
+    needs), turning the aggregate into a distinct with no reusable
+    exchange, and a ``kept_match`` test in the anti-join condition is
+    pushed into that side as a filter, which still leaves two
+    broadcasts of the same rows.  The filter's ``kept_match IS NULL``
+    conjunct is implied by ``new_id IS NULL`` (a NULL-extended row); it
+    only keeps ``kept_match`` read, so the copy is not pruned."""
+    bc = F.broadcast if broadcast_new else (lambda d: d)
+    kdup = bc(verified.groupBy("new_id").agg(
+        F.expr("min(kept_id) AS kept_match")
+    ))
+    qid = H.q(id_col)
+    nn_drop = bc(
+        nn.join(kdup, F.expr("id_a = new_id"), "left")
+        .where("new_id IS NULL AND kept_match IS NULL")
+        .selectExpr(f"id_b AS {qid}")
         .distinct()
-        .withColumn("_nn", F.lit(True))
+        .selectExpr(qid, "true AS _nn")
     )
     ids = new_df.select(id_col)
     out = (
-        ids.join(kdup, ids[id_col] == kdup["new_id"], "left")
+        ids.join(kdup, F.expr(f"{qid} = new_id"), "left")
         .join(nn_drop, id_col, "left")
     )
-    return out.select(
-        ids[id_col],
-        F.col("kept_match").isNotNull().alias("dup_of_kept"),
-        F.col("kept_match"),
-        F.coalesce(F.col("_nn"), F.lit(False)).alias("dup_within_new"),
-        (F.col("kept_match").isNull() & F.col("_nn").isNull()).alias("keep"),
+    return out.selectExpr(
+        qid,
+        "kept_match IS NOT NULL AS dup_of_kept",
+        "kept_match",
+        "coalesce(_nn, false) AS dup_within_new",
+        "kept_match IS NULL AND _nn IS NULL AS keep",
     )
 
 
@@ -1341,8 +1374,10 @@ def embed_incremental(
     prunes unprobed bucket directories at the file level).  No
     kept-side shuffle anywhere; the only shuffles are over shard-sized
     frames (the per-new-id min and the shard's own bucket self-join).
-    ``broadcast_new=False`` drops the hint for giant shards and lets
-    AQE choose.  Degenerate vectors (zero-norm / non-finite, NULL
+    The kept-index probe join and its per-pair cosine run ONCE per
+    query: both readers of the verified matches share one subtree (see
+    ``_incremental_verdicts``).  ``broadcast_new=False`` drops the hint
+    for giant shards and lets AQE choose.  Degenerate vectors (zero-norm / non-finite, NULL
     cosine) match nothing on either engine.
 
     ``kept_index``: a persisted :func:`embed_index` output; its planes
@@ -1430,38 +1465,12 @@ def embed_incremental(
         )
         .select("new_id", "kept_id")
     )
-    # kdup is consumed TWICE (left join + survivor anti-join); keep both
-    # consumers on the IDENTICAL canonical subtree so physical planning
-    # dedups them into one ReusedExchange and the kept-index probe join +
-    # per-pair cosine folds run ONCE instead of twice (round 13 — the
-    # incremental_dedup restructure, same reasoning and value-identity).
-    kdup = verified.groupBy("new_id").agg(F.min("kept_id").alias("kept_match"))
-    if broadcast_new:
-        kdup = F.broadcast(kdup)
-
     # new-vs-new among kept-survivors: one-level min-id-first greedy over
     # the shard's own bucketed pairs (shard-sized self-join)
     nn = embed_dup_pairs(
         new_df, float(threshold), id_col, vec_col, planes
     ).select("id_a", "id_b")
-    nn_drop = (
-        nn.join(kdup, nn["id_a"] == kdup["new_id"], "left_anti")
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-        .withColumn("_nn", F.lit(True))
-    )
-    ids = new_df.select(id_col)
-    out = (
-        ids.join(kdup, ids[id_col] == kdup["new_id"], "left")
-        .join(nn_drop, id_col, "left")
-    )
-    return out.select(
-        ids[id_col],
-        F.col("kept_match").isNotNull().alias("dup_of_kept"),
-        F.col("kept_match"),
-        F.coalesce(F.col("_nn"), F.lit(False)).alias("dup_within_new"),
-        (F.col("kept_match").isNull() & F.col("_nn").isNull()).alias("keep"),
-    )
+    return _incremental_verdicts(new_df, id_col, verified, nn, broadcast_new)
 
 
 def embed_incremental_sql(
@@ -2066,7 +2075,7 @@ def _kept_new(new_df: DataFrame, verdicts: DataFrame, id_col: str) -> DataFrame:
     if "keep" not in verdicts.columns:
         raise ValueError("verdicts frame has no 'keep' column — pass the "
                          "output of incremental_dedup / embed_incremental")
-    keep_ids = verdicts.where(F.col("keep")).select(id_col)
+    keep_ids = verdicts.where("keep").select(id_col)
     return new_df.join(F.broadcast(keep_ids), id_col)
 
 

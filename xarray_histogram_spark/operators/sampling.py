@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import hashing as H
+
 _SPACE = 16**8
 
 
@@ -134,15 +136,20 @@ def assign_splits(
     fractions = list(fractions)
     if len(fractions) < 2:
         raise ValueError("need at least two splits")
-    d = draw_hex(F.col(key_col), salt)
-    acc = 0.0
-    expr = None
+    # one Spark SQL CASE string (parsed once) — the Column spelling of
+    # the same draw is draw_hex
+    d = (
+        f"substring(md5(CAST(concat({H.sstr(salt)}, "
+        f"CAST({H.q(key_col)} AS STRING)) AS BINARY)), 1, 8)"
+    )
+    acc, parts = 0.0, []
     for name, frac in fractions[:-1]:
         acc += frac
-        cond = d < F.lit(_hex_threshold(acc))
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    expr = expr.otherwise(F.lit(fractions[-1][0]))
-    return df.withColumn(split_col, expr)
+        parts.append(
+            f"WHEN {d} < '{_hex_threshold(acc)}' THEN {H.sstr(name)}"
+        )
+    case = f"CASE {' '.join(parts)} ELSE {H.sstr(fractions[-1][0])} END"
+    return df.withColumn(split_col, F.expr(case))
 
 
 def assign_splits_sql(
@@ -1327,8 +1334,6 @@ def upsample_corpus(
     plan-frame column names like n_epochs/epoch_frac are fine on the
     corpus side, and the one genuinely colliding output column
     repeat_idx gets a contract message instead)."""
-    from ..functions import hashing as H
-
     cols = list(df.columns)
     _check_upsample_columns(cols, group_col)
     ndup = F.count(F.lit(1)).over(Window.partitionBy(group_col))
@@ -1394,8 +1399,6 @@ def upsample_corpus_sql(
     the engine side's NULL-guarded sequence.  The same
     ``_UPSAMPLE_RESERVED`` contract raise guards ``cols`` (plus the
     group/key columns) up front — one contract, both engines."""
-    from ..functions import hashing as H
-
     _check_upsample_columns([*cols, key_col], group_col)
     # __ud must carry group_col even when the caller's cols omit it —
     # the join ON clause and the coverage-raise message read it

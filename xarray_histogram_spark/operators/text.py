@@ -22,8 +22,8 @@ STOPWORDS = {
 LANGS = tuple(STOPWORDS)
 
 
-def _tok(text: Column) -> Column:
-    return H.tokens(text)
+def _tok(text_col: str) -> Column:
+    return F.expr(H.tokens(H.q(text_col)))
 
 
 # GPT-2-style pre-tokenization pieces: letter runs / digit runs / punctuation
@@ -34,22 +34,23 @@ def _tok(text: Column) -> Column:
 BPE_PIECE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]+"
 
 
-def token_count_cols(text_col: str, toks: Optional[Column] = None) -> list:
+def token_count_cols(text_col: str, toks: Optional[str] = None) -> list:
     """The token-count Column expressions (shared by ``token_count`` and
-    the one-pass curation pipeline).  ``toks`` substitutes a
-    pre-materialized token-array column (identical values either way)."""
+    the one-pass curation pipeline), each parsed from one Spark SQL
+    string.  ``toks`` substitutes a pre-materialized token-array column
+    by name (identical values either way)."""
+    text = H.q(text_col)
     if toks is None:
-        toks = _tok(F.col(text_col))
-    n_tok = F.size(toks)
-    n_pieces = F.regexp_count(F.col(text_col), F.lit(BPE_PIECE_RE))
-    n_sub = F.ceil(F.length(F.col(text_col)).cast("double") / F.lit(4.0)).cast(
-        "bigint"
-    )
+        toks = H.tokens(text)
     return [
-        n_tok.cast("bigint").alias("n_tokens"),
-        n_pieces.cast("bigint").alias("n_pieces"),
-        n_sub.alias("n_subwords"),
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars"),
+        F.expr(s) for s in (
+            f"CAST(size({toks}) AS BIGINT) AS n_tokens",
+            f"CAST(regexp_count({text}, {H.sstr(BPE_PIECE_RE)}) AS BIGINT) "
+            "AS n_pieces",
+            f"CAST(ceil(CAST(length({text}) AS DOUBLE) / 4.0D) AS BIGINT) "
+            "AS n_subwords",
+            f"CAST(length({text}) AS BIGINT) AS n_chars",
+        )
     ]
 
 
@@ -72,8 +73,11 @@ def token_count_sql(table: str, text_col: str, id_col: str) -> str:
     )
 
 
-def _stop_hits(toks: Column, words) -> Column:
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
+def _stop_hits(toks: str, words) -> str:
+    """Spark SQL text: how many tokens of the array ``toks`` are in
+    ``words``."""
+    lst = ", ".join(H.sstr(w) for w in words)
+    return f"size(filter({toks}, _w -> _w IN ({lst})))"
 
 
 def _stop_hits_sql(toks: str, words) -> str:
@@ -81,52 +85,39 @@ def _stop_hits_sql(toks: str, words) -> str:
     return f"len(list_filter({toks}, t -> t IN ({lst})))"
 
 
-def quality_base_cols(text_col: str, toks: Optional[Column] = None) -> list:
-    """The four integer-count bases of the quality features, aliased
-    ``__q_{ntok,nchars,alpha,stop}`` — materialize these in a projection
-    and feed the attributes to ``quality_cols(base=...)`` so the ratio /
-    score arithmetic re-references cheap attributes instead of
-    re-embedding the tokenizer and regexp subtrees (identical values)."""
-    text = F.col(text_col)
-    if toks is None:
-        toks = _tok(text)
-    return [
-        F.size(toks).cast("double").alias("__q_ntok"),
-        F.length(text).cast("double").alias("__q_nchars"),
-        F.length(F.regexp_replace(text, "[^A-Za-z]", ""))
-        .cast("double")
-        .alias("__q_alpha"),
-        _stop_hits(toks, STOPWORDS["en"]).cast("double").alias("__q_stop"),
-    ]
-
-
 def quality_cols(text_col: str, base: Optional[dict] = None) -> list:
     """The quality-feature Column expressions (shared by ``quality_score``
-    and the one-pass curation pipeline).  ``base`` (ntok/nchars/alpha/stop
-    → Column) substitutes pre-materialized count bases (see
-    ``quality_base_cols``); the default inlines them — identical values
-    either way."""
+    and the one-pass curation pipeline), each parsed from one Spark SQL
+    string.  ``base`` (ntok/nchars/alpha/stop → Spark SQL text over
+    materialized columns) substitutes pre-materialized DOUBLE count
+    bases so the ratio / score arithmetic re-references cheap attributes
+    instead of re-embedding the tokenizer and regexp subtrees; the
+    default inlines them — identical values either way."""
     if base is not None:
         n_tok, n_chars = base["ntok"], base["nchars"]
         alpha, stop = base["alpha"], base["stop"]
     else:
-        text = F.col(text_col)
-        toks = _tok(text)
-        n_tok = F.size(toks).cast("double")
-        n_chars = F.length(text).cast("double")
-        alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("double")
-        stop = _stop_hits(toks, STOPWORDS["en"]).cast("double")
-    mean_tok_len = n_chars / F.nullif(n_tok, F.lit(0.0))
-    alpha_ratio = alpha / F.nullif(n_chars, F.lit(0.0))
-    stop_ratio = stop / F.nullif(n_tok, F.lit(0.0))
-    score = alpha_ratio * F.lit(0.5) + stop_ratio * F.lit(0.3) + F.when(
-        (mean_tok_len >= F.lit(3.0)) & (mean_tok_len <= F.lit(10.0)), F.lit(0.2)
-    ).otherwise(F.lit(0.0))
+        text = H.q(text_col)
+        toks = H.tokens(text)
+        n_tok = f"CAST(size({toks}) AS DOUBLE)"
+        n_chars = f"CAST(length({text}) AS DOUBLE)"
+        alpha = (
+            f"CAST(length(regexp_replace({text}, '[^A-Za-z]', '')) AS DOUBLE)"
+        )
+        stop = f"CAST({_stop_hits(toks, STOPWORDS['en'])} AS DOUBLE)"
+    mean_tok_len = f"({n_chars} / nullif({n_tok}, 0.0D))"
+    alpha_ratio = f"({alpha} / nullif({n_chars}, 0.0D))"
+    stop_ratio = f"({stop} / nullif({n_tok}, 0.0D))"
+    score = (
+        f"{alpha_ratio} * 0.5D + {stop_ratio} * 0.3D + "
+        f"CASE WHEN {mean_tok_len} >= 3.0D AND {mean_tok_len} <= 10.0D "
+        "THEN 0.2D ELSE 0.0D END"
+    )
     return [
-        mean_tok_len.alias("mean_tok_len"),
-        alpha_ratio.alias("alpha_ratio"),
-        stop_ratio.alias("stop_ratio"),
-        score.alias("quality"),
+        F.expr(f"{mean_tok_len} AS mean_tok_len"),
+        F.expr(f"{alpha_ratio} AS alpha_ratio"),
+        F.expr(f"{stop_ratio} AS stop_ratio"),
+        F.expr(f"{score} AS quality"),
     ]
 
 
@@ -164,37 +155,37 @@ def quality_score_sql(table: str, text_col: str, id_col: str) -> str:
     )
 
 
-def lang_hit_cols(text_col: str, toks: Optional[Column] = None) -> list:
+def lang_hit_cols(text_col: str, toks: Optional[str] = None) -> list:
     """Per-language stopword hit counts as aliased ``__h_{lang}`` columns —
     materialize these in a projection and feed the attributes to
     ``lang_pred_col(hits=...)``: the argmax when-chain embeds each hit
     expression up to 2^(len(LANGS)-1) times, so inlined hits re-tokenize
     the text ~12× per row (round-13 measurement: lang_id 277 → 188 ms at
     sf0.1 from this materialization alone, values identical).  ``toks``
-    substitutes a pre-materialized token-array column."""
+    substitutes a pre-materialized token-array column by name."""
     if toks is None:
-        toks = _tok(F.col(text_col))
+        toks = H.tokens(H.q(text_col))
     return [
-        _stop_hits(toks, ws).alias(f"__h_{lang}")
+        F.expr(f"{_stop_hits(toks, ws)} AS __h_{lang}")
         for lang, ws in STOPWORDS.items()
     ]
 
 
 def lang_pred_col(text_col: str, hits: Optional[dict] = None) -> Column:
     """The language-ID Column expression (shared by ``lang_id`` and the
-    one-pass curation pipeline).  ``hits`` (lang → Column) substitutes
-    pre-materialized hit counts (see ``lang_hit_cols``); the default
-    inlines them — identical values either way."""
+    one-pass curation pipeline).  ``hits`` (lang → Spark SQL text)
+    substitutes pre-materialized hit counts (see ``lang_hit_cols``); the
+    default inlines them — identical values either way."""
     if hits is None:
-        toks = _tok(F.col(text_col))
+        toks = H.tokens(H.q(text_col))
         hits = {lang: _stop_hits(toks, ws) for lang, ws in STOPWORDS.items()}
     # deterministic argmax: fold in declared order, strict > keeps earlier lang
-    best: Column = F.lit("und")
-    best_n: Column = F.lit(0)
+    best, best_n = "'und'", "0"
     for lang in LANGS:
-        best = F.when(hits[lang] > best_n, F.lit(lang)).otherwise(best)
-        best_n = F.when(hits[lang] > best_n, hits[lang]).otherwise(best_n)
-    return best.alias("lang_pred")
+        h = hits[lang]
+        best = f"CASE WHEN {h} > {best_n} THEN {H.sstr(lang)} ELSE {best} END"
+        best_n = f"CASE WHEN {h} > {best_n} THEN {h} ELSE {best_n} END"
+    return F.expr(f"{best} AS lang_pred")
 
 
 def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -206,7 +197,7 @@ def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     attributes instead of re-embedding (and re-tokenizing) each hit
     expression up to 2^(len(LANGS)-1) times."""
     pre = df.select(F.col(id_col), *lang_hit_cols(text_col))
-    hits = {lang: F.col(f"__h_{lang}") for lang in STOPWORDS}
+    hits = {lang: f"__h_{lang}" for lang in STOPWORDS}
     return pre.select(F.col(id_col), lang_pred_col(text_col, hits=hits))
 
 
@@ -236,8 +227,9 @@ def fingerprint(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFr
     pre = df.select(F.col(id_col), norm.alias("__norm"))
     nrm = F.col("__norm")
     fp_doc = F.md5(nrm.cast("binary"))
-    mins = F.array_min(
-        F.transform(H.shingles(nrm, k), lambda s: F.md5(s.cast("binary")))
+    mins = F.expr(
+        f"array_min(transform({H.shingles('__norm', k)}, "
+        "_s -> md5(CAST(_s AS BINARY))))"
     )
     return pre.select(
         F.col(id_col), fp_doc.alias("fp_doc"), mins.alias("fp_shingle")
@@ -292,11 +284,10 @@ def top_terms(
         raise ValueError("top_terms: need k >= 1")
     if min_df < 1:
         raise ValueError("top_terms: need min_df >= 1")
-    text = F.col(text_col)
     if n_docs is None:
         n_docs = df.count()
     toks = df.select(
-        F.col(id_col), F.explode(_tok(text)).alias("term")
+        F.col(id_col), F.explode(_tok(text_col)).alias("term")
     )
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
@@ -366,7 +357,7 @@ def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     otherwise re-run ``lower(text)`` per shingle position (higher-order
     lambdas re-evaluate outer references per element)."""
     text = F.col(text_col)
-    toks = _tok(text)
+    toks = _tok(text_col)
     lines = F.filter(F.split(text, "\n"), lambda l: l != "")
     pre = df.select(
         F.col(id_col),
@@ -378,7 +369,7 @@ def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # materialized __low attribute, not the lower(text) expression
     sh2 = pre.select(
         F.col(id_col), F.col("__toks"), F.col("__lines"), F.col("__low"),
-        H.shingles(F.col("__low"), 3).alias("__sh"),
+        F.expr(H.shingles("__low", 3)).alias("__sh"),
     )
     n_tok = F.size(F.col("__toks")).cast("double")
     tok_ratio = F.size(F.array_distinct(F.col("__toks"))).cast(
@@ -558,7 +549,7 @@ def vocabulary(
         raise ValueError("vocabulary: need min_df >= 1")
     from pyspark.sql.window import Window
 
-    toks = df.select(F.col(id_col), F.explode(_tok(F.col(text_col))).alias("term"))
+    toks = df.select(F.col(id_col), F.explode(_tok(text_col)).alias("term"))
     per_doc = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("c"))
     vocab = per_doc.groupBy("term").agg(
         F.sum("c").cast("bigint").alias("tf"),
@@ -617,7 +608,7 @@ def dup_ngram_stats(
     from pyspark.sql.window import Window
 
     n = _check_ngram_n(n)
-    toks = H.tokens(F.col(text_col))
+    toks = _tok(text_col)
     grams = _gram_array(toks, n, distinct=True)
     g = df.select(F.col(id_col), F.explode(grams).alias("__g"))
     dfreq = F.count(F.lit(1)).over(Window.partitionBy("__g"))
@@ -740,7 +731,7 @@ def ngram_familiarity(
     from pyspark.sql.window import Window
 
     n = _check_ngram_n(n)
-    toks = H.tokens(F.col(text_col))
+    toks = _tok(text_col)
     grams = _gram_array(toks, n, distinct=False)
     g = df.select(F.col(id_col), F.explode(grams).alias("__g"))
     cfreq = F.count(F.lit(1)).over(Window.partitionBy("__g"))
@@ -1066,7 +1057,7 @@ def gopher_metric_exprs(
     values either way."""
     text = F.col(text_col)
     if toks is None:
-        toks = _tok(text)
+        toks = _tok(text_col)
     if lines is None:
         lines = F.split(text, "\n", -1)
     n_words = F.size(toks)
@@ -1951,7 +1942,7 @@ def linear_quality_score(
     n = len(w)
     if not 2 <= n <= 4096:
         raise ValueError("weights must have 2..4096 entries")
-    toks = H.tokens(F.col(text_col))
+    toks = _tok(text_col)
     warr = F.array(*[F.lit(x) for x in w])
     # two-stage: per-token weight array first, then a homogeneous
     # left-to-right double fold — DuckDB's fold-with-initial idiom
