@@ -1,21 +1,26 @@
-"""Job and stage timeline of one registry entry.
+"""Job and stage timeline of one registry entry or baseline mirror.
 
     SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 python scripts/profile_jobs.py [entry] [runs]
 
-Builds the entry (``dedup_incremental`` by default) and reports the
-build's py4j round trips and wall time, then runs it ``runs`` times
-(default 2: the first warms codegen and any scratch builds) through a
-noop sink, each run under its own job group.  For the last run it prints
-every Spark job's submission -> completion window relative to the run's
-start and, under each job, its stages' windows with task count, input
-bytes, shuffle read/write bytes and the stage's call site — enough to
-see which sub-jobs run serially and which subtree a stage belongs to.
+``entry`` is a registry name (``dedup_incremental`` by default) or one of
+bench.py's three ``baseline_*`` Dask-reference mirrors, whose synthetic
+input is cached and materialized untimed first, as bench.py does.
+Builds the entry and reports the build's py4j round trips (proxy
+releases not counted, see ``tests/util.py:py4j_calls``) and wall time,
+then runs it ``runs`` times (default 2: the first warms codegen and any
+scratch builds) through a noop sink, each run under its own job group.
+For the last run it prints every Spark job's submission -> completion
+window relative to the run's start and, under each job, its stages'
+windows with task count, input bytes, shuffle read/write bytes and the
+stage's call site — enough to see which sub-jobs run serially and which
+subtree a stage belongs to.
 Jobs and stages are read from the application status store
 (``SparkContext.statusStore``), so the Spark UI need not be on.
 
 Session: ``local[$SPARK_GRAFT_CPUS]`` (default: all cores), 8 shuffle
 partitions, AQE off — the plan-capture configuration, so the stages
-match ``scripts/capture_plans.py``'s executed shape.
+match ``scripts/capture_plans.py``'s executed shape — and bench.py's
+uncompressed in-memory cache.
 """
 
 from __future__ import annotations
@@ -23,11 +28,14 @@ from __future__ import annotations
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from bench import synthetic_baseline_builders  # noqa: E402
+from tests.util import py4j_calls  # noqa: E402
 from xarray_histogram_spark import entry_queries as eq  # noqa: E402
 
 
@@ -52,36 +60,33 @@ def main() -> int:
         print("set SPARK_GRAFT_SF_DIR to the testdata scale-factor directory")
         return 2
     registry = eq.registry()
-    if entry not in registry:
-        print(f"unknown entry {entry!r}")
-        return 1
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("xhs-profile-jobs")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "false")
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+        .config("spark.sql.inMemoryColumnarStorage.batchSize", "131072")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
-    client = sc._gateway._gateway_client
-    send = client.send_command
-    calls = [0]
-
-    def counting(*args, **kwargs):
-        calls[0] += 1
-        return send(*args, **kwargs)
-
-    client.send_command = counting
+    mirrors = synthetic_baseline_builders(spark)
+    if entry in mirrors:
+        inp, build = mirrors[entry]()
+        inp.count()
+    elif entry in registry:
+        build = partial(registry[entry][0], spark, sf_dir)
+    else:
+        print(f"unknown entry {entry!r}")
+        return 1
     t0 = time.perf_counter()
-    try:
-        df = registry[entry][0](spark, sf_dir)
-    finally:
-        client.send_command = send
+    with py4j_calls(spark) as n:
+        df = build()
     build_ms = (time.perf_counter() - t0) * 1e3
-    print(f"{entry}: build {build_ms:.0f} ms, {calls[0]} py4j round trips")
+    print(f"{entry}: build {build_ms:.0f} ms, {n.calls} py4j round trips")
 
     t0 = time.perf_counter()
     df._jdf.queryExecution().executedPlan()

@@ -1,4 +1,4 @@
-"""Quiet-window bench capture (round-14 record).
+"""Quiet-window bench capture: ``bench.py`` repeated in settled windows.
 
 Protocol (the BENCH_quiet_* lineage): each run launches only after BOTH
 the 1-minute and 5-minute loadavg drop below 0.4, with >= 7 minutes
@@ -6,13 +6,12 @@ between runs so they cannot contaminate each other; per-run loadavgs are
 published in the record; the primary fields are the LAST run and the
 best-of fields are per-mirror / per-op minima across all runs.
 
-Round-14 fixes (ADVICE r13): the always-true gate condition is gone; a
-run that exhausts MAX_WAIT_S without the loadavg settling is LAUNCHED
+A run that exhausts MAX_WAIT_S without the loadavg settling is LAUNCHED
 but FLAGGED (``gate_timed_out`` per run, and excluded from the best-of
 fields); a bench invocation that emits no JSON line fails loudly with
-its stderr instead of an opaque IndexError.
+its stderr.
 
-    python scripts/quiet_bench_r14.py <n_runs> <out_json>
+    python scripts/quiet_bench.py <n_runs> <out_json>
 """
 import json
 import os
@@ -21,7 +20,7 @@ import sys
 import time
 
 N_RUNS = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/quiet_r14.json"
+OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/quiet_bench.json"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SETTLE_S = 7 * 60
 MAX_WAIT_S = 25 * 60
@@ -92,7 +91,7 @@ rec["quiet_note"] = (
     "required < 0.4 before launch; runs that exhausted the "
     f"{MAX_WAIT_S//60}-minute gate are flagged and excluded from "
     "best-of).  Primary fields are the last run; best-of fields are "
-    "per-mirror/per-op minima across settled runs.  Round-14 capture."
+    "per-mirror/per-op minima across settled runs."
 )
 rec["runs"] = runs
 with open(OUT, "w") as f:

@@ -205,22 +205,48 @@ def test_sum_sq_bound_escape_hatch(spark):
 
 
 def test_broadcast_optouts_match(spark, sf_dir):
-    """broadcast=False variants of remove_repeated_lines and
-    ngram_contamination produce identical rows (only the join strategy
-    changes)."""
-    from xarray_histogram_spark.operators.dedup import ngram_contamination
+    """The broadcast hints of the dedup and text operators are only a
+    join-strategy choice: under ``spark.sql.optimizer.disableHints``
+    (with the size-based broadcast off) each operator plans without a
+    broadcast hash join and returns the same rows as the hinted
+    default."""
+    from xarray_histogram_spark.operators import dedup as dd
     from xarray_histogram_spark.operators.text import remove_repeated_lines
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = docs.where(F.col("doc_id") % 5 == 0).select("text")
-    a = ngram_contamination(docs, bench, "text", "doc_id").collect()
-    b = ngram_contamination(
-        docs, bench, "text", "doc_id", broadcast=False
-    ).collect()
-    assert sorted(map(str, a)) == sorted(map(str, b))
-    c = remove_repeated_lines(docs, "text", "doc_id").collect()
-    d = remove_repeated_lines(docs, "text", "doc_id", broadcast=False).collect()
-    assert sorted(map(str, c)) == sorted(map(str, d))
+    kept = docs.where(F.col("doc_id") % 2 == 0)
+    new = docs.where(F.col("doc_id") % 2 == 1)
+    builders = {
+        "ngram_contamination": lambda: dd.ngram_contamination(
+            docs, bench, "text", "doc_id"),
+        "remove_repeated_lines": lambda: remove_repeated_lines(
+            docs, "text", "doc_id"),
+        "jaccard_pairs": lambda: dd.jaccard_pairs(docs, "text", "doc_id"),
+        "incremental_dedup": lambda: dd.incremental_dedup(
+            new, kept, "text", "doc_id"),
+    }
+
+    def run(build):
+        df = build()
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        return plan, sorted(map(str, df.collect()))
+
+    hinted = {name: run(build) for name, build in builders.items()}
+    keys = ("spark.sql.optimizer.disableHints",
+            "spark.sql.autoBroadcastJoinThreshold")
+    old = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], "true")
+    spark.conf.set(keys[1], "-1")
+    try:
+        plain = {name: run(build) for name, build in builders.items()}
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
+    for name in builders:
+        assert "BroadcastHashJoin" in hinted[name][0], name
+        assert "BroadcastHashJoin" not in plain[name][0], name
+        assert hinted[name][1] == plain[name][1], name
 
 
 def test_weight_storage_grouped(spark, sf_dir):

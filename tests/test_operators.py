@@ -3008,6 +3008,24 @@ def test_extend_loop_entry_sentinel_causality(spark, sf_dir):
     assert any(r["keep"] for r in rows.values())
 
 
+def test_scratch_root_rebuilt_after_cleanup(spark, sf_dir):
+    """A mid-process ``_cleanup_scratch`` reaps the persisted state of
+    the loop/index entries; building ``dedup_extend_loop`` again then
+    rebuilds that state instead of reading the reaped path, and the
+    verdicts are unchanged."""
+    import os
+
+    from xarray_histogram_spark import entry_queries as eq
+
+    build = eq.registry()["dedup_extend_loop"][0]
+    first = sorted(map(str, build(spark, sf_dir).collect()))
+    old_root = eq._extend_loop_root(spark, sf_dir)
+    eq._cleanup_scratch()
+    assert not os.path.exists(old_root)
+    again = sorted(map(str, build(spark, sf_dir).collect()))
+    assert again == first
+
+
 def test_pack_sequences_semantics(spark):
     """Packed-sequence emission: per-shard document streams slice into
     exact context-token windows (short final window only), concatenation

@@ -11,6 +11,7 @@ from contextlib import contextmanager
 import duckdb
 import numpy as np
 import pandas as pd
+from py4j import protocol as proto
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -62,23 +63,36 @@ def assert_matches_sql(sdf, sql: str, con, exact: bool = True, rtol: float = 0.0
 
 
 class Py4jCount:
-    """Round-trip tally filled by :func:`py4j_calls`."""
+    """Tallies filled by :func:`py4j_calls`: ``calls`` round trips, and
+    ``releases`` proxy-release commands (not round trips)."""
 
     calls = 0
+    releases = 0
+
+
+# py4j's "memory: delete" command, which releases one JVM proxy
+_RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
 
 
 @contextmanager
 def py4j_calls(spark):
     """Count the py4j round trips the block makes (by wrapping the
     gateway client's ``send_command``); the count is read from the
-    yielded object's ``calls``."""
+    yielded object's ``calls``.  Proxy releases are tallied apart in
+    ``releases``: py4j sends one through the same ``send_command``
+    whenever Python's garbage collector frees a JVM proxy (from a
+    finalizer thread in clientserver mode), so their number depends on
+    when the collector runs, not on what the block does."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     tally = Py4jCount()
 
-    def counting(*args, **kwargs):
-        tally.calls += 1
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if command.startswith(_RELEASE):
+            tally.releases += 1
+        else:
+            tally.calls += 1
+        return send(command, *args, **kwargs)
 
     client.send_command = counting
     try:

@@ -151,7 +151,7 @@ _STALE_PRIORITY = (
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
     # values_at_ranks now builds its bucket-offset map literal server-side
     # (one parsed SQL string instead of 2*B py4j lit round trips — plan
-    # byte-identical modulo expr IDs, plans/r14/*_before|after.txt); both
+    # byte-identical modulo expr IDs in a capture_plans.py diff); both
     # consumers are r13-fresh so they re-gate
     "hist_quantile_bins", "sample_top_quality",
 )
@@ -701,6 +701,9 @@ _LOOP_SENTINEL = (
     "shard loop marker phrase"
 )
 _EXTEND_LOOP_CACHE: dict[str, str] = {}
+# written into a scratch root after its build returns; a leading "_"
+# keeps it out of Spark's file listing of the root
+_SCRATCH_DONE = "_xhs_complete"
 
 
 def _scratch_root(cache: dict, sf_dir: str, prefix: str, build) -> str:
@@ -709,21 +712,30 @@ def _scratch_root(cache: dict, sf_dir: str, prefix: str, build) -> str:
     copies of the mkdtemp/try/rmtree/cache pattern had appeared, the
     BPE three-copies hazard; and the older ANN/embed index builders
     lacked the failure cleanup entirely).  ``build(root)`` writes the
-    state under the fresh root; a FAILED build removes the half-written
+    state under a fresh root; a FAILED build removes the half-written
     root instead of leaking it — only cache entries are atexit-reaped
-    (see _cleanup_scratch)."""
-    if sf_dir not in cache:
-        import shutil
-        import tempfile
+    (see _cleanup_scratch).  A cached root is reused only while its
+    completion marker exists: a root reaped after caching (by
+    _cleanup_scratch or a temp-dir cleaner) is rebuilt, never read as a
+    missing path."""
+    import os
+    import shutil
+    import tempfile
 
-        root = tempfile.mkdtemp(prefix=prefix)
-        try:
-            build(root)
-        except BaseException:
-            shutil.rmtree(root, ignore_errors=True)
-            raise
-        cache[sf_dir] = root
-    return cache[sf_dir]
+    root = cache.get(sf_dir)
+    if root is not None and os.path.exists(os.path.join(root, _SCRATCH_DONE)):
+        return root
+    if root is not None:
+        shutil.rmtree(root, ignore_errors=True)
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        build(root)
+    except BaseException:
+        shutil.rmtree(root, ignore_errors=True)
+        raise
+    open(os.path.join(root, _SCRATCH_DONE), "w").close()
+    cache[sf_dir] = root
+    return root
 
 
 def _loop_kept0(docs: DataFrame) -> DataFrame:
@@ -2531,9 +2543,10 @@ _ADOPT_SCRATCH: dict[str, str] = {}
 
 
 def _cleanup_scratch() -> None:
-    """Remove the session-scoped CSV/adopt scratch roots at process exit
-    (ADVICE r07: the membership guards stop per-CALL leaks, but each
-    bench/driver PROCESS still left one corpus copy under /tmp)."""
+    """Remove the session-scoped scratch roots (registered atexit; ADVICE
+    r07: the membership guards stop per-CALL leaks, but each bench/driver
+    PROCESS still left one corpus copy under /tmp) and forget them, so a
+    call after a mid-process cleanup builds fresh state."""
     import os
     import shutil
 
@@ -2541,15 +2554,12 @@ def _cleanup_scratch() -> None:
         shutil.rmtree(os.path.dirname(leaf), ignore_errors=True)
     # the ANN/embed/band-loop/embed-loop/curation caches hold the
     # scratch ROOT itself
-    for root in (
-        list(_ANN_INDEX_CACHE.values())
-        + list(_EMBED_INDEX_CACHE.values())
-        + list(_EXTEND_LOOP_CACHE.values())
-        + list(_EMBED_LOOP_CACHE.values())
-        + list(_CURATE_MIX_CACHE.values())
-        + list(_PRETRAIN_CACHE.values())
-    ):
+    roots = (_ANN_INDEX_CACHE, _EMBED_INDEX_CACHE, _EXTEND_LOOP_CACHE,
+             _EMBED_LOOP_CACHE, _CURATE_MIX_CACHE, _PRETRAIN_CACHE)
+    for root in [r for cache in roots for r in cache.values()]:
         shutil.rmtree(root, ignore_errors=True)
+    for cache in (_CSV_SCRATCH, _ADOPT_SCRATCH, *roots):
+        cache.clear()
 
 
 import atexit  # noqa: E402 — registered next to the state it cleans

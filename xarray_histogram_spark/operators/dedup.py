@@ -229,7 +229,6 @@ def lsh_candidate_pairs_sql(
 
 def jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str, k: int = 8,
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for every LSH candidate pair:
     (id_a, id_b, jaccard).
@@ -270,12 +269,12 @@ def jaccard_pairs(
     own null-matching semantics must not leak in) — a null-null
     candidate pair is dropped, not scored 1.0.
 
-    ``broadcast_pairs=False`` drops the broadcast hint for corpora whose
-    candidate set exceeds driver/broadcast memory and lets AQE pick the
-    join strategy (same opt-out pattern as ``ngram_contamination``)."""
-    pairs = lsh_candidate_pairs(df, text_col, id_col, k).select("id_a", "id_b")
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
+    For corpora whose candidate set exceeds driver/broadcast memory, set
+    ``spark.sql.optimizer.disableHints=true`` on the session: the hint is
+    then ignored and Spark picks the join strategy by size."""
+    pairs = F.broadcast(
+        lsh_candidate_pairs(df, text_col, id_col, k).select("id_a", "id_b")
+    )
     shset = _shingle_set(H.q(text_col), k)
     shs = df.selectExpr(
         f"{H.q(id_col)} AS _sid", f"{shset} AS shset", f"size({shset}) AS nsh"
@@ -895,7 +894,6 @@ def ngram_contamination(
     id_col: str,
     k: int = 12,
     min_hits: int = 1,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Corpus documents sharing char n-grams with ANY benchmark document —
     the training-data decontamination primitive (flag or strip training
@@ -918,13 +916,14 @@ def ngram_contamination(
     (interleaved A/B at sf0.1: 702-778 → 593-667 ms even on the
     contamination-HEAVY fixture).  The matched pairs then aggregate per
     doc (map-side combined, output ≤ flagged docs).  With a very large
-    benchmark pass ``broadcast=False`` to drop the hint — Spark then
-    plans a shuffle join on uniform shingle keys."""
+    benchmark set ``spark.sql.optimizer.disableHints=true`` on the
+    session to drop the hint — Spark then plans a shuffle join on
+    uniform shingle keys."""
     shingles = H.shingles(H.q(text_col), k)
     sh_b = benchmark.selectExpr(f"explode({shingles}) AS sh").distinct()
     matched = corpus.selectExpr(
         H.q(id_col), f"explode({shingles}) AS sh"
-    ).join(F.broadcast(sh_b) if broadcast else sh_b, "sh")
+    ).join(F.broadcast(sh_b), "sh")
     return (
         matched.distinct()
         .groupBy(id_col)
@@ -1022,7 +1021,6 @@ def incremental_dedup(
     k: int = 8,
     threshold: float = 0.8,
     kept_bands: Optional[DataFrame] = None,
-    broadcast_new: bool = True,
     max_kept_per_band: Optional[int] = None,
 ) -> DataFrame:
     """Dedup an incoming shard against an existing KEEPER corpus — the
@@ -1052,8 +1050,9 @@ def incremental_dedup(
     band buckets feed both the kept probe and the new-vs-new pairs), the
     shard's shingle sets (one broadcast for the kept check and both
     sides of the new-vs-new check) and the kept-side verification (see
-    ``_incremental_verdicts``).  ``broadcast_new=False`` drops the hints
-    for giant shards and lets AQE choose.
+    ``_incremental_verdicts``).  For giant shards set
+    ``spark.sql.optimizer.disableHints=true`` on the session: the hints
+    are then ignored and Spark chooses each join by size.
 
     ``kept_bands``: a persisted ``band_rows(kept_df, ...)`` output; when
     given, ``kept_df`` is only scanned to fetch candidate texts.
@@ -1072,7 +1071,6 @@ def incremental_dedup(
     this per-shard pass free).
     """
     thr = H.dlit(threshold)
-    bc = F.broadcast if broadcast_new else (lambda d: d)
     # The shard's band-key buckets, read by BOTH the kept-index probe
     # below and the new-vs-new pairs further down: one canonical subtree,
     # so physical planning reuses its exchange and the shard's MinHash
@@ -1117,7 +1115,7 @@ def incremental_dedup(
         )
         kb = kb.join(F.broadcast(big), ["bi", "bk"], "left_anti")
     cand = (
-        kb.join(bc(buckets), ["bi", "bk"])
+        kb.join(F.broadcast(buckets), ["bi", "bk"])
         .selectExpr("explode(ids) AS new_id", "kept_id")
         .distinct()
     )
@@ -1127,7 +1125,7 @@ def incremental_dedup(
     # array_distinct sets, a-side nulls filtered before array_intersect,
     # empty intersections dropped — the oracle's inner join has no row)
     nset = _shingle_set(H.q(text_col), k)
-    nsh = bc(new_df.selectExpr(
+    nsh = F.broadcast(new_df.selectExpr(
         f"{H.q(id_col)} AS _nid", f"{nset} AS _nset", f"size({nset}) AS _nsz"
     ))
     # Kept side, restructured round 13.  The former spelling broadcast
@@ -1147,7 +1145,9 @@ def incremental_dedup(
         f"{H.q(id_col)} AS _kid", f"{H.q(text_col)} AS _ktxt"
     )
     kset = _shingle_set("_ktxt", k)
-    kverif = ktext.join(bc(cand), F.expr("kept_id = _kid")).selectExpr(
+    kverif = ktext.join(
+        F.broadcast(cand), F.expr("kept_id = _kid")
+    ).selectExpr(
         "new_id", "kept_id", f"{kset} AS _kset", f"size({kset}) AS _ksz"
     )
     joined = kverif.join(nsh, F.expr("new_id = _nid"))
@@ -1180,19 +1180,18 @@ def incremental_dedup(
         .where(f"{overlap} AND {jac} >= {thr}")
         .select("id_a", "id_b")
     )
-    return _incremental_verdicts(new_df, id_col, verified, nn, broadcast_new)
+    return _incremental_verdicts(new_df, id_col, verified, nn)
 
 
 def _incremental_verdicts(
     new_df: DataFrame, id_col: str, verified: DataFrame, nn: DataFrame,
-    broadcast_new: bool,
 ) -> DataFrame:
     """The verdict rows of ``incremental_dedup``/``embed_incremental``
     from the verified new-vs-kept matches ``verified`` (new_id, kept_id)
-    and the verified new-vs-new pairs ``nn`` (id_a < id_b).  With
-    ``broadcast_new`` the per-new-id matches ``kdup`` and the dropped
-    new ids are broadcast (both are shard-bounded), so the verdict rows
-    come out of one map-side pass over the shard ids.
+    and the verified new-vs-new pairs ``nn`` (id_a < id_b).  The
+    per-new-id matches ``kdup`` and the dropped new ids are broadcast
+    (both are shard-bounded), so the verdict rows come out of one
+    map-side pass over the shard ids.
 
     ``kdup`` is read TWICE: the per-new-id left join and the survivor
     filter.  Both must see the IDENTICAL canonical subtree for physical
@@ -1207,12 +1206,11 @@ def _incremental_verdicts(
     broadcasts of the same rows.  The filter's ``kept_match IS NULL``
     conjunct is implied by ``new_id IS NULL`` (a NULL-extended row); it
     only keeps ``kept_match`` read, so the copy is not pruned."""
-    bc = F.broadcast if broadcast_new else (lambda d: d)
-    kdup = bc(verified.groupBy("new_id").agg(
+    kdup = F.broadcast(verified.groupBy("new_id").agg(
         F.expr("min(kept_id) AS kept_match")
     ))
     qid = H.q(id_col)
-    nn_drop = bc(
+    nn_drop = F.broadcast(
         nn.join(kdup, F.expr("id_a = new_id"), "left")
         .where("new_id IS NULL AND kept_match IS NULL")
         .selectExpr(f"id_b AS {qid}")
@@ -1346,7 +1344,6 @@ def embed_incremental(
     vec_col: str = "embedding",
     planes=None,
     kept_index: Optional[DataFrame] = None,
-    broadcast_new: bool = True,
     max_kept_per_bucket: Optional[int] = None,
 ) -> DataFrame:
     """Semantic (embedding) dedup of an incoming shard against an
@@ -1376,9 +1373,11 @@ def embed_incremental(
     frames (the per-new-id min and the shard's own bucket self-join).
     The kept-index probe join and its per-pair cosine run ONCE per
     query: both readers of the verified matches share one subtree (see
-    ``_incremental_verdicts``).  ``broadcast_new=False`` drops the hint
-    for giant shards and lets AQE choose.  Degenerate vectors (zero-norm / non-finite, NULL
-    cosine) match nothing on either engine.
+    ``_incremental_verdicts``).  For giant shards set
+    ``spark.sql.optimizer.disableHints=true`` on the session: the hints
+    are then ignored and Spark chooses each join by size.  Degenerate
+    vectors (zero-norm / non-finite, NULL cosine) match nothing on
+    either engine.
 
     ``kept_index``: a persisted :func:`embed_index` output; its planes
     fingerprint stamp is REQUIRED and must match ``planes`` — a
@@ -1412,15 +1411,13 @@ def embed_incremental(
         )
     planes = PLANES if planes is None else planes
     thr = F.lit(float(threshold))
-    nb = with_lsh_bucket(new_df, vec_col, planes).select(
+    nb = F.broadcast(with_lsh_bucket(new_df, vec_col, planes).select(
         F.col(id_col).alias("new_id"), F.col(vec_col).alias("_nv"), "bucket",
         # round 13: each side's norm fold runs once per ROW before the
         # probe join instead of once per joined PAIR (cosine inline
         # re-folds both self-dots per pair); cosine_pre is bit-identical
         V.norm(F.col(vec_col)).alias("_nvn"),
-    )
-    if broadcast_new:
-        nb = F.broadcast(nb)
+    ))
     if kept_index is not None:
         if "bucket" not in kept_index.columns or vec_col not in kept_index.columns:
             raise ValueError(
@@ -1470,7 +1467,7 @@ def embed_incremental(
     nn = embed_dup_pairs(
         new_df, float(threshold), id_col, vec_col, planes
     ).select("id_a", "id_b")
-    return _incremental_verdicts(new_df, id_col, verified, nn, broadcast_new)
+    return _incremental_verdicts(new_df, id_col, verified, nn)
 
 
 def embed_incremental_sql(
@@ -1910,8 +1907,8 @@ def chunk_near_pairs(
     wide documents.  It stays OFF by default because the default must
     serve the common interactive case: measured interleaved at sf0.1
     (~89k pairs) the scratch write costs more than the re-chunking it
-    saves (see PLANS.md / the bench ledger); flip it on when the corpus
-    outgrows gate scale.  On a non-local master ``scratch_dir`` (a
+    saves (default min 1.63 s vs materialize 2.07 s); flip it on when
+    the corpus outgrows gate scale.  On a non-local master ``scratch_dir`` (a
     cluster-visible path) is REQUIRED and the caller owns deleting its
     unique subdirectory — surfaced as ``xhs_scratch_path`` on the
     returned DataFrame; the local default is atexit-reaped, one new

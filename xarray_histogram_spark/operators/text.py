@@ -435,7 +435,6 @@ def remove_repeated_lines(
     id_col: str,
     max_occurrences: int = 1,
     keep_first: bool = False,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Corpus-wide repeated-line removal (the C4/RefinedWeb boilerplate
     filter): drop every line occurring in more than ``max_occurrences``
@@ -456,11 +455,12 @@ def remove_repeated_lines(
     ``keep_first`` is not implemented corpus-wide (it would need a global
     order); the filter drops ALL copies of an offending line, matching C4.
 
-    ``broadcast=False`` drops the broadcast hint on the offending-line
-    set: with ``max_occurrences=1`` over a big corpus that set is every
-    line occurring twice or more, which can exceed broadcast/driver
-    memory — without the hint AQE picks the join strategy (the line keys
-    are uniform hashes of content, so a shuffle join is skew-safe).
+    With ``max_occurrences=1`` over a big corpus the offending-line set
+    is every line occurring twice or more, which can exceed
+    broadcast/driver memory: set ``spark.sql.optimizer.disableHints=true``
+    on the session to drop the hint — Spark then picks the join strategy
+    by size (the line keys are uniform hashes of content, so a shuffle
+    join is skew-safe).
     """
     if keep_first:
         raise NotImplementedError(
@@ -477,7 +477,7 @@ def remove_repeated_lines(
         .where(F.col("__n") > F.lit(int(max_occurrences)))
         .select("__line", F.lit(True).alias("__bad"))
     )
-    flagged = lines.join(F.broadcast(bad) if broadcast else bad, "__line", "left")
+    flagged = lines.join(F.broadcast(bad), "__line", "left")
     kept_arr = F.array_sort(
         F.collect_list(
             F.when(
