@@ -6,15 +6,17 @@ refactor) compare directly with ``diff -r``.
 
 Writes ``<out_dir>/<name>.txt``.  Run-dependent parts are normalized:
 ``#<digits>`` expression IDs, ``plan_id=<digits>`` exchange IDs and
-``RDD[<digits>]`` ids lose their digits (JVM-global counters that shift
-with anything that ran before), lambda variables print as ``lambda v``
+``RDD[<digits>]`` ids and the ``_common_expr_<digits>`` names of shared
+subexpressions lose their digits (JVM-global counters that shift with
+anything that ran before), lambda variables print as ``lambda v``
 (a Python-lambda builder names them ``x_<counter>``, a Spark SQL text
 builder by its own spelling), and the random 8-character suffix of a
 ``mkdtemp`` directory becomes ``XXXXXXXX``.  With a name list, only those
 entries (registry names or ``baseline_*`` mirror names) are captured.  An
 entry whose builder raises gets its error text as the file content, so a
 diff shows it too.  Runs under the bench's session config (AQE off, 8
-shuffle partitions) so the captured plan is the executed shape.
+shuffle partitions, session time zone UTC) so the captured plan is the
+executed shape and does not depend on which entries ran before.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from xarray_histogram_spark import entry_queries as eq  # noqa: E402
 
-_ID = re.compile(r"(#|plan_id=|RDD\[)\d+")
+_ID = re.compile(r"(#|plan_id=|RDD\[|_common_expr_)\d+")
 _LAMBDA = re.compile(r"\blambda [A-Za-z_][A-Za-z0-9_]*")
 _TMP = re.compile(
     re.escape(tempfile.gettempdir()) + r"/([^/\]\s,]*?)[a-z0-9_]{8}(?=[/\]\s,])"
@@ -85,6 +87,10 @@ def main() -> int:
         .appName("xhs-plan-capture")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "false")
+        # pinned: the events entries set this zone themselves, so a
+        # timezone-aware expression would otherwise print the host zone in
+        # a name-filtered capture and UTC in a full one
+        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

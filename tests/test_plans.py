@@ -49,23 +49,28 @@ def test_no_python_in_data_path(grouped_plan):
 
 
 def test_grouped_inline_spine(grouped_plan):
-    """Small spines expand each group's packed map via inline(array(...)) —
-    a Generate in the same stage, no join node and no broadcast-exchange
-    job per execution.  (Spines wider than 1024 bins fall back to a
-    broadcast literal-relation crossJoin.)"""
+    """The grouped dense fill expands each group's packed map over the
+    dense spine with one explode(sequence(...)) — a Generate in the same
+    stage, no join node and no broadcast-exchange job per execution; the
+    per-axis ids and labels are div/mod positions and literal-array
+    lookups, whatever the spine's width."""
     assert "Generate" in grouped_plan
     assert "BroadcastExchange" not in grouped_plan
     assert "Join" not in grouped_plan
 
 
 def test_grouped_wide_spine_broadcast(lineitem):
-    """>1024-bin grouped spine: broadcast literal-relation expand."""
+    """A >1024-bin grouped spine takes the one grouped dense-fill path (it
+    used to fall back to a broadcast literal-relation crossJoin): a
+    Generate, no join and no broadcast exchange."""
     r = histogram(
         lineitem, "l_quantity", Regular(1200, 1.0, 51.0),
         group_by=["l_returnflag"],
     )
     p = plan_of(r.df)
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
+    assert "Generate" in p
+    assert "Join" not in p
+    assert "BroadcastExchange" not in p
 
 
 def test_ungrouped_union_fill_single_exchange(lineitem):
@@ -219,12 +224,16 @@ def test_shard_step_build_py4j_budget(spark, sf_dir, tmp_path):
     node: each build (the second, once the session is warm) stays under
     a fixed round-trip budget, a third or less of what the Column-tree
     builders made (band_rows ~1070, curate_documents ~1670,
-    incremental_dedup with a kept index ~4900)."""
+    incremental_dedup with a kept index ~4900, read_jsonl_corpus 121)."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from xarray_histogram_spark.operators.curate import curate_documents
     from xarray_histogram_spark.operators.dedup import (
         band_rows, incremental_dedup,
+    )
+    from xarray_histogram_spark.sources.corpus import (
+        read_jsonl_corpus, write_jsonl_corpus,
     )
 
     from .util import py4j_calls
@@ -237,7 +246,15 @@ def test_shard_step_build_py4j_budget(spark, sf_dir, tmp_path):
     idx = str(tmp_path / "bands")
     band_rows(kept_df, "text", "doc_id").write.parquet(idx)
     kept_bands = spark.read.parquet(idx)
+    corpus = str(tmp_path / "corpus")
+    write_jsonl_corpus(docs, corpus)
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ])
     builds = {
+        "read_jsonl_corpus": (40, lambda: read_jsonl_corpus(
+            spark, corpus, schema)),
         "band_rows": (350, lambda: band_rows(new_df, "text", "doc_id")),
         "curate_documents": (400, lambda: curate_documents(
             docs, "text", "doc_id", quality_min=0.5)),
@@ -249,6 +266,71 @@ def test_shard_step_build_py4j_budget(spark, sf_dir, tmp_path):
         with py4j_calls(spark) as n:
             build()
         assert n.calls <= budget, (name, n.calls)
+
+
+def test_interactive_chain_build_py4j_budget(spark, lineitem):
+    """The interactive result chains (builder → transform → statistic) are
+    Spark SQL text parsed once per output column, and each stage is one
+    analyzed step: the second build of each chain stays under a fixed
+    round-trip budget, a third or less of what the Column-tree builders
+    made (rebin→median 1710, normalize→mean 1452, grouped 20×4×4
+    slice_bins→ppf 2091, histogram_columns slice_bins→ppf 1163,
+    binned_statistic 1065, rollup_histogram 426)."""
+    from xarray_histogram_spark import (
+        binned_statistic, histogram2d, histogram_columns, histogramdd,
+        rollup_histogram,
+    )
+
+    from .util import py4j_calls
+
+    qty = Regular(40, 1.0, 51.0)
+    q20 = Regular(20, 1.0, 51.0)
+    builds = {
+        "histogram_rebin_median": (570, lambda: histogram(
+            lineitem, "l_quantity", qty, weights="l_extendedprice",
+            group_by=["l_returnflag"]).rebin(2).median()),
+        "histogram2d_normalize_mean": (480, lambda: histogram2d(
+            lineitem, "l_quantity", "l_discount",
+            [q20, Regular(10, 0.0, 0.1)]).normalize().mean("l_quantity")),
+        "histogramdd_slice_ppf": (690, lambda: histogramdd(
+            lineitem, ["l_quantity", "l_discount", "l_tax"],
+            [q20, Regular(4, 0.0, 0.1), Regular(4, 0.0, 0.08)],
+            group_by=["l_returnflag"],
+        ).slice_bins(5, 15, "l_quantity").ppf(0.25, "l_quantity")),
+        "histogram_columns_slice_ppf": (380, lambda: histogram_columns(
+            lineitem, ["l_discount", "l_tax"], Regular(20, 0.0, 0.1),
+        ).slice_bins(5, 15).ppf(0.25)),
+        "binned_statistic": (350, lambda: binned_statistic(
+            lineitem, "l_quantity", qty, "l_extendedprice",
+            ("count", "sum", "mean"), group_by=["l_returnflag"])),
+        "rollup_histogram": (140, lambda: rollup_histogram(
+            lineitem, "l_quantity", q20, ["l_returnflag", "l_linestatus"])),
+    }
+    for name, (budget, build) in builds.items():
+        build()
+        with py4j_calls(spark) as n:
+            build()
+        assert n.calls <= budget, (name, n.calls)
+
+
+def test_hinted_broadcast_survives_without_auto_broadcast(spark, sf_dir):
+    """``sim_ann_topk``'s probe join is broadcast by its hint, not by the
+    size-based rule: with auto-broadcast off
+    (``autoBroadcastJoinThreshold=-1``) it must still plan as a
+    BroadcastHashJoin.  (At test scale both sides are small enough to
+    auto-broadcast, so the registry-wide claim alone cannot see a dropped
+    hint.)"""
+    from xarray_histogram_spark import entry_queries as eq
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        p = plan_of(eq.registry()["sim_ann_topk"][0](spark, sf_dir))
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" in p
+    assert "SortMergeJoin" not in p
 
 
 def test_py4j_calls_skips_proxy_releases(spark):

@@ -8,12 +8,16 @@ flags, flow-label encodings (±inf for floats, int64 min/max for ints,
 See /root/reference/src/xarray_histogram/core.py:524-646 and
 accessor.py:148-250 for the semantics being reproduced.
 
-Spark-first design: each spec compiles the value→bin-id lookup to a pure
-Catalyst Column expression (``raw_id_col``) that stays inside whole-stage
-codegen — O(1) arithmetic for Regular/Integer, a vectorised JVM fold for
-Variable, ``array_position`` for categories.  Every spec ALSO emits the exact
-same arithmetic as a DuckDB SQL snippet (``raw_id_sql``) so the driver's
-oracle comparison is bit-identical: both engines run the same IEEE-754
+Spark-first design: each spec compiles the value→bin-id lookup to Spark
+SQL text (``id_expr``) that parses to a pure Catalyst expression inside
+whole-stage codegen — O(1) arithmetic for Regular/Integer, a literal-edge
+search for Variable, equality chains or ``array_position`` for categories.
+The planners compose these strings and parse each output column once, so
+a bucketize costs one round trip to the JVM instead of one per expression
+node (``raw_id_col``/``keep_pred_col`` are the Column forms of the same
+text).  Every spec ALSO emits the exact same arithmetic as a DuckDB SQL
+snippet (``raw_id_sql``) so the driver's oracle comparison is
+bit-identical: both engines run the same IEEE-754
 double operations in the same order (no transcendentals in the hot path —
 log-transformed axes precompute their edges Python-side for the exact path).
 
@@ -32,6 +36,8 @@ from typing import Any, Callable, Optional, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .functions.hashing import dlit, sstr
 
 I64_MIN = -(2**63)
 I64_MAX = 2**63 - 1
@@ -62,6 +68,36 @@ def flit(v: float) -> str:
 def slit(s: str) -> str:
     """DuckDB single-quoted string literal."""
     return "'" + s.replace("'", "''") + "'"
+
+
+def sdouble(v: float) -> str:
+    """Spark SQL DOUBLE literal of any Python float (``dlit`` for finite
+    values; infinities and NaN through a string cast, which constant-folds
+    to the same literal)."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'Infinity' if v > 0 else '-Infinity'}' AS DOUBLE)"
+    return dlit(v)
+
+
+def sql_chain(op: str, parts: Sequence[str]) -> str:
+    """``parts`` joined by the logical ``op`` (AND/OR) as a LEFT-nested
+    tree — the shape a left fold of Columns builds.  The SQL parser
+    balances a flat ``a OR b OR c OR d`` chain instead, which would change
+    the predicate tree (and the pushed scan filters) of four or more
+    terms."""
+    out = f"({parts[0]})"
+    for p in parts[1:]:
+        out = f"({out} {op} ({p}))"
+    return out
+
+
+def col_sql(c: Column) -> str:
+    """Spark SQL text of a column expression (a parenthesized column name
+    for ``F.col``), for the Column forms of the text builders."""
+    return f"({c._jc.node().sql()})"
 
 
 @dataclass(frozen=True)
@@ -135,21 +171,39 @@ class BinSpec:
         return [b.label for b in self.bins(flow)]
 
     # ---- compilation ----
-    def raw_id_col(self, c: Column) -> Column:
-        """Spark Column: value -> raw bin id in [-1, n]."""
+    # ``sql_ok``: the bucketize compiles to Spark SQL text (every family
+    # except a MonotoneRegular fast path, whose transform is a Column
+    # builder — see ``plans.histogram.keep_and_bucketize``)
+    sql_ok: bool = True
+
+    def id_expr(self, e: str) -> str:
+        """Spark SQL text: value expression ``e`` -> raw bin id in [-1, n]."""
         raise NotImplementedError
 
     def raw_id_sql(self, expr: str) -> str:
-        """DuckDB SQL mirroring raw_id_col exactly (same IEEE ops, same order)."""
+        """DuckDB SQL mirroring id_expr exactly (same IEEE ops, same order)."""
         raise NotImplementedError
 
-    def raw_id_col_kept(self, c: Column) -> Column:
-        """``raw_id_col`` under the caller's guarantee that ``c`` already
-        passed ``keep_pred_col(c, flow=False)`` (non-null, non-NaN,
+    def id_expr_kept(self, e: str) -> str:
+        """``id_expr`` under the caller's guarantee that ``e`` already
+        passed ``keep_expr(e, flow=False)`` (non-null, non-NaN,
         in-range): families that can drop the NULL/NaN/flow CASE wrapper
         return the bare bucketize arithmetic — identical ids on kept rows,
         measurably cheaper per row.  Default: the full expression."""
-        return self.raw_id_col(c)
+        return self.id_expr(e)
+
+    def raw_id_col(self, c: Column) -> Column:
+        """Column form of ``id_expr``."""
+        return F.expr(self.id_expr(col_sql(c)))
+
+    def raw_id_col_kept(self, c: Column) -> Column:
+        """Column form of ``id_expr_kept``."""
+        return F.expr(self.id_expr_kept(col_sql(c)))
+
+    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
+        """Column form of ``keep_expr``."""
+        p = self.keep_expr(col_sql(c), flow)
+        return None if p is None else F.expr(p)
 
     def keep_range(self, flow: bool) -> tuple[int, int]:
         """Inclusive [lo, hi] raw-id range of EMITTED bins.
@@ -170,8 +224,9 @@ class BinSpec:
         0 for category axes, which have no underflow)."""
         return -1
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        """Raw-VALUE predicate equivalent to ``raw_id_col(c) ∈ keep_range``.
+    def keep_expr(self, e: str, flow: bool) -> Optional[str]:
+        """Raw-VALUE predicate (Spark SQL text) equivalent to
+        ``id_expr(e) ∈ keep_range``.
 
         Filtering on the raw column instead of the computed id matters:
         Catalyst pushes the keep filter below the bucketize projection by
@@ -186,7 +241,8 @@ class BinSpec:
         lo, hi = self.keep_range(flow)
         if lo <= self._raw_id_min() and hi >= self.n:
             return None
-        return self.raw_id_col(c).between(F.lit(lo), F.lit(hi))
+        i = self.id_expr(e)
+        return f"({i}) >= {lo} AND ({i}) <= {hi}"
 
     def label_sql_lit(self, label: Any) -> str:
         if self.label_type == "double":
@@ -383,93 +439,78 @@ class Regular(BinSpec):
             raise TypeError(f"Regular axis needs a numeric column, got {col}: {dt}")
 
     # -- compilation --
-    def _y_span(self, c: Column) -> tuple[Column, float, float]:
+    def _y_expr(self, e: str) -> tuple[str, float, float]:
+        x = f"CAST({e} AS DOUBLE)"
         if self.transform is None:
-            return c.cast("double"), float(self.lo), float(self.hi)
+            return x, float(self.lo), float(self.hi)
         if self.transform == "log":
-            return F.log(c.cast("double")), math.log(self.lo), math.log(self.hi)
+            return f"ln({x})", math.log(self.lo), math.log(self.hi)
         if self.transform == "pow":
             # Math.pow is within-1-ulp, not correctly rounded — the fast
             # path may differ from another engine near an edge; use
             # exact=True (literal-edge scan) when oracle determinism matters
             p = float(self.power)
-            return (
-                F.pow(c.cast("double"), F.lit(p)),
-                math.pow(self.lo, p),
-                math.pow(self.hi, p),
-            )
+            y = f"pow({x}, {sdouble(p)})"
+            return y, math.pow(self.lo, p), math.pow(self.hi, p)
         # sqrt — IEEE correctly rounded, safe to mirror
-        return F.sqrt(c.cast("double")), math.sqrt(self.lo), math.sqrt(self.hi)
+        return f"sqrt({x})", math.sqrt(self.lo), math.sqrt(self.hi)
 
-    def _linear_core(self, c: Column) -> Column:
+    def _linear_core(self, y: str, ylo: float, yhi: float) -> str:
         """Bare bucketize for in-range values: least(floor((y-lo)·n/span), n-1)."""
         n = self.n
-        y, ylo, yhi = self._y_span(c)
-        t = (y - F.lit(ylo)) * F.lit(float(n)) / F.lit(yhi - ylo)
-        return F.least(F.floor(t).cast("int"), F.lit(n - 1))
-
-    def _linear_id_col(self, c: Column) -> Column:
-        y, ylo, yhi = self._y_span(c)
-        core = self._linear_core(c)
-        x = c.cast("double")
-        bad = x.isNull() | F.isnan(x)
-        if self.transform == "log":
-            bad = bad | (x <= F.lit(0.0))
-        out = F.when(bad, F.lit(self.n))
-        if self.transform == "pow":
-            # x < 0 is out of the pow domain (lo >= 0 enforced): underflow,
-            # matching the exact=True edge scan (x < edges[0]).  Without
-            # this, even powers fold negatives onto positive core bins
-            # (pow(-3, 2) = 9) and the two paths of the same spec disagree.
-            out = out.when(x < F.lit(0.0), F.lit(-1))
         return (
-            out
-            .when(y < F.lit(ylo), F.lit(-1))
-            .when(y >= F.lit(yhi), F.lit(self.n))
-            .otherwise(core)
+            f"least(CAST(floor(({y} - {sdouble(ylo)}) * {sdouble(float(n))} / "
+            f"{sdouble(yhi - ylo)}) AS INT), {n - 1})"
         )
 
-    def raw_id_col(self, c: Column) -> Column:
+    def id_expr(self, e: str) -> str:
         if self.transform is not None and self.exact:
-            return _search_id_col(c, self.edges())
-        return self._linear_id_col(c)
+            return _search_id_expr(e, self.edges())
+        y, ylo, yhi = self._y_expr(e)
+        x = f"CAST({e} AS DOUBLE)"
+        bad = f"{x} IS NULL OR isnan({x})"
+        if self.transform == "log":
+            bad += f" OR {x} <= 0.0D"
+        # pow: x < 0 is out of the pow domain (lo >= 0 enforced): underflow,
+        # matching the exact=True edge scan (x < edges[0]).  Without this,
+        # even powers fold negatives onto positive core bins (pow(-3, 2) =
+        # 9) and the two paths of the same spec disagree.
+        neg = f"WHEN {x} < 0.0D THEN -1 " if self.transform == "pow" else ""
+        return (
+            f"CASE WHEN {bad} THEN {self.n} {neg}"
+            f"WHEN {y} < {sdouble(ylo)} THEN -1 "
+            f"WHEN {y} >= {sdouble(yhi)} THEN {self.n} "
+            f"ELSE {self._linear_core(y, ylo, yhi)} END"
+        )
 
-    def raw_id_col_kept(self, c: Column) -> Column:
+    def id_expr_kept(self, e: str) -> str:
         # kept rows satisfy ylo <= y < yhi (the keep pred uses the same
         # transformed comparisons), so the NaN/flow wrapper is redundant
         # and the bare core emits identical ids
         if self.transform is not None and self.exact:
-            return _search_id_col_kept(c, self.edges())
-        return self._linear_core(c)
+            return _search_id_expr_kept(e, self.edges())
+        return self._linear_core(*self._y_expr(e))
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
+    def keep_expr(self, e: str, flow: bool) -> Optional[str]:
         lo_id, hi_id = self.keep_range(flow)
         if lo_id == -1 and hi_id == self.n:
             return None
         if (lo_id, hi_id) != (0, self.n - 1):
-            return super().keep_pred_col(c, flow)
+            return super().keep_expr(e, flow)
+        x = f"CAST({e} AS DOUBLE)"
         if self.transform is not None and not self.exact:
             # the fast transform path buckets the TRANSFORMED value, so the
             # keep set must be decided by the same comparisons (log(x) vs
             # log(lo)) — a value-space bound could disagree by a libm ulp.
             # NULL/NaN/out-of-domain transform results all fail the range.
-            if self.transform == "pow":
-                # the x >= 0 domain term mirrors _linear_id_col's
-                # negative→underflow guard (underflow is outside keep range
-                # here)
-                x = c.cast("double")
-                y = F.pow(x, F.lit(float(self.power)))
-                return (
-                    (x >= F.lit(0.0))
-                    & (y >= F.lit(self._tf(self.lo)))
-                    & (y < F.lit(self._tf(self.hi)))
-                )
-            y = (F.log if self.transform == "log" else F.sqrt)(c.cast("double"))
-            return (y >= F.lit(self._tf(self.lo))) & (y < F.lit(self._tf(self.hi)))
+            y, ylo, yhi = self._y_expr(e)
+            # the x >= 0 domain term of pow mirrors id_expr's
+            # negative→underflow guard (underflow is outside keep range)
+            dom = f"{x} >= 0.0D AND " if self.transform == "pow" else ""
+            return f"{dom}{y} >= {sdouble(ylo)} AND {y} < {sdouble(yhi)}"
         # linear & exact edge-scan: endpoints are pinned to lo/hi, so
         # id ∈ [0, n-1] ⟺ lo <= x < hi; NULL and NaN both fail the range
-        x = c.cast("double")
-        return (x >= F.lit(float(self.lo))) & (x < F.lit(float(self.hi)))
+        return f"{x} >= {sdouble(self.lo)} AND {x} < {sdouble(self.hi)}"
 
     def raw_id_sql(self, expr: str) -> str:
         if self.transform is not None and self.exact:
@@ -513,18 +554,20 @@ class Regular(BinSpec):
         }
 
 
-def _edge_scan_id_col(c: Column, edges: Sequence[float]) -> Column:
-    """raw id via exact edge comparisons: (#edges <= x) - 1. JVM fold, codegen'd."""
+def _edge_scan_id_expr(e: str, edges: Sequence[float]) -> str:
+    """raw id via exact edge comparisons: (#edges <= x) - 1, a JVM fold
+    (Spark SQL text)."""
     n = len(edges) - 1
-    x = c.cast("double")
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    cnt = F.aggregate(
-        arr,
-        F.lit(0),
-        lambda acc, e: acc + F.when(x >= e, F.lit(1)).otherwise(F.lit(0)),
+    x = f"CAST({e} AS DOUBLE)"
+    arr = ", ".join(sdouble(v) for v in edges)
+    cnt = (
+        f"aggregate(array({arr}), 0, (_acc, _e) -> _acc + "
+        f"CASE WHEN {x} >= _e THEN 1 ELSE 0 END)"
     )
-    bad = x.isNull() | F.isnan(x)
-    return F.when(bad, F.lit(n)).otherwise(F.least(cnt - 1, F.lit(n)))
+    return (
+        f"CASE WHEN {x} IS NULL OR isnan({x}) THEN {n} "
+        f"ELSE least({cnt} - 1, {n}) END"
+    )
 
 
 def _edge_scan_id_sql(expr: str, edges: Sequence[float]) -> str:
@@ -538,33 +581,33 @@ def _edge_scan_id_sql(expr: str, edges: Sequence[float]) -> str:
     )
 
 
-def _bsearch_core(c: Column, edges: Sequence[float]) -> Column:
+def _bsearch_core(e: str, edges: Sequence[float]) -> str:
     """Binary search body — precondition: edges[0] <= x < edges[-1]."""
-    x = c.cast("double")
+    x = f"CAST({e} AS DOUBLE)"
 
-    def rec(lo: int, hi: int) -> Column:
+    def rec(lo: int, hi: int) -> str:
         # precondition: edges[lo] <= x < edges[hi]; bins lo..hi-1
         if hi - lo == 1:
-            return F.lit(lo)
+            return str(lo)
         mid = (lo + hi) // 2
-        return F.when(x < F.lit(float(edges[mid])), rec(lo, mid)).otherwise(
-            rec(mid, hi)
+        return (
+            f"CASE WHEN {x} < {sdouble(edges[mid])} THEN {rec(lo, mid)} "
+            f"ELSE {rec(mid, hi)} END"
         )
 
     return rec(0, len(edges) - 1)
 
 
-def _bsearch_id_col(c: Column, edges: Sequence[float]) -> Column:
+def _bsearch_id_expr(e: str, edges: Sequence[float]) -> str:
     """O(log n) binary-search bucketize as a balanced nested-CASE tree —
     codegen'd, exact comparisons, mirrored 1:1 in SQL."""
-    x = c.cast("double")
+    x = f"CAST({e} AS DOUBLE)"
     n = len(edges) - 1
-    bad = x.isNull() | F.isnan(x)
     return (
-        F.when(bad, F.lit(n))
-        .when(x < F.lit(float(edges[0])), F.lit(-1))
-        .when(x >= F.lit(float(edges[-1])), F.lit(n))
-        .otherwise(_bsearch_core(c, edges))
+        f"CASE WHEN {x} IS NULL OR isnan({x}) THEN {n} "
+        f"WHEN {x} < {sdouble(edges[0])} THEN -1 "
+        f"WHEN {x} >= {sdouble(edges[-1])} THEN {n} "
+        f"ELSE {_bsearch_core(e, edges)} END"
     )
 
 
@@ -579,16 +622,16 @@ def _bsearch_id_col(c: Column, edges: Sequence[float]) -> Column:
 _BSEARCH_MAX_BINS = 256
 
 
-def _search_id_col(c: Column, edges: Sequence[float]) -> Column:
+def _search_id_expr(e: str, edges: Sequence[float]) -> str:
     if len(edges) - 1 <= _BSEARCH_MAX_BINS:
-        return _bsearch_id_col(c, edges)
-    return _edge_scan_id_col(c, edges)
+        return _bsearch_id_expr(e, edges)
+    return _edge_scan_id_expr(e, edges)
 
 
-def _search_id_col_kept(c: Column, edges: Sequence[float]) -> Column:
+def _search_id_expr_kept(e: str, edges: Sequence[float]) -> str:
     if len(edges) - 1 <= _BSEARCH_MAX_BINS:
-        return _bsearch_core(c, edges)
-    return _edge_scan_id_col(c, edges)
+        return _bsearch_core(e, edges)
+    return _edge_scan_id_expr(e, edges)
 
 
 def _search_id_sql(expr: str, edges: Sequence[float]) -> str:
@@ -783,18 +826,35 @@ class MonotoneRegular(Regular):
         return float(self.inv(v))
 
     # -- compilation --
-    def _y_span(self, c: Column) -> tuple[Column, float, float]:
-        return (
-            self.fwd_col(c.cast("double")),
-            self._tf(self.lo),
-            self._tf(self.hi),
-        )
+    # exact: the literal-edge search as Spark SQL text.  The fast path's
+    # transform is a Column builder (``fwd_col``), so it compiles to
+    # Columns only (``sql_ok`` is False; the planners bucketize it as a
+    # hidden column, see ``plans.histogram.keep_and_bucketize``).
+    @property
+    def sql_ok(self) -> bool:
+        return self.exact
+
+    def id_expr(self, e: str) -> str:
+        if not self.exact:
+            raise ValueError("the fwd_col fast path compiles to Columns only")
+        return _search_id_expr(e, self.edges())
+
+    def id_expr_kept(self, e: str) -> str:
+        if not self.exact:
+            raise ValueError("the fwd_col fast path compiles to Columns only")
+        return _search_id_expr_kept(e, self.edges())
+
+    def _y_core(self, c: Column) -> tuple[Column, float, float, Column]:
+        """Transformed value, its span and the bare bucketize (Columns)."""
+        y = self.fwd_col(c.cast("double"))
+        ylo, yhi = self._tf(self.lo), self._tf(self.hi)
+        t = (y - F.lit(ylo)) * F.lit(float(self.n)) / F.lit(yhi - ylo)
+        return y, ylo, yhi, F.least(F.floor(t).cast("int"), F.lit(self.n - 1))
 
     def raw_id_col(self, c: Column) -> Column:
         if self.exact:
-            return _search_id_col(c, self.edges())
-        y, ylo, yhi = self._y_span(c)
-        core = self._linear_core(c)
+            return super().raw_id_col(c)
+        y, ylo, yhi, core = self._y_core(c)
         x = c.cast("double")
         # NULL/NaN input, or a transform result outside the real line
         # (out-of-domain → NaN/NULL), routes to overflow like boost's NaN
@@ -808,22 +868,19 @@ class MonotoneRegular(Regular):
 
     def raw_id_col_kept(self, c: Column) -> Column:
         if self.exact:
-            return _search_id_col_kept(c, self.edges())
-        return self._linear_core(c)
+            return super().raw_id_col_kept(c)
+        return self._y_core(c)[3]
 
     def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
         lo_id, hi_id = self.keep_range(flow)
-        if lo_id == -1 and hi_id == self.n:
-            return None
+        if self.exact or (lo_id, hi_id) == (-1, self.n):
+            return super().keep_pred_col(c, flow)
         if (lo_id, hi_id) != (0, self.n - 1):
-            return BinSpec.keep_pred_col(self, c, flow)
-        if not self.exact:
-            # fast path buckets the TRANSFORMED value — decide keep with
-            # the same comparisons (see Regular.keep_pred_col)
-            y = self.fwd_col(c.cast("double"))
-            return (y >= F.lit(self._tf(self.lo))) & (y < F.lit(self._tf(self.hi)))
-        x = c.cast("double")
-        return (x >= F.lit(float(self.lo))) & (x < F.lit(float(self.hi)))
+            return self.raw_id_col(c).between(F.lit(lo_id), F.lit(hi_id))
+        # fast path buckets the TRANSFORMED value — decide keep with the
+        # same comparisons (see Regular.keep_expr)
+        y, ylo, yhi, _ = self._y_core(c)
+        return (y >= F.lit(ylo)) & (y < F.lit(yhi))
 
     def raw_id_sql(self, expr: str) -> str:
         if self.exact:
@@ -905,28 +962,29 @@ class Variable(BinSpec):
         if not _numeric_ok(dt):
             raise TypeError(f"Variable axis needs a numeric column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
+    def id_expr(self, e: str) -> str:
         if self.binary:
-            return _bsearch_id_col(c, self.edges_)
-        return _search_id_col(c, self.edges_)
+            return _bsearch_id_expr(e, self.edges_)
+        return _search_id_expr(e, self.edges_)
 
-    def raw_id_col_kept(self, c: Column) -> Column:
+    def id_expr_kept(self, e: str) -> str:
         if self.binary:
             # kept rows satisfy e0 <= x < e_n — the search precondition
-            return _bsearch_core(c, self.edges_)
-        return _search_id_col_kept(c, self.edges_)
+            return _bsearch_core(e, self.edges_)
+        return _search_id_expr_kept(e, self.edges_)
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
+    def keep_expr(self, e: str, flow: bool) -> Optional[str]:
         lo_id, hi_id = self.keep_range(flow)
         if lo_id == -1 and hi_id == self.n:
             return None
         if (lo_id, hi_id) != (0, self.n - 1):
-            return super().keep_pred_col(c, flow)
+            return super().keep_expr(e, flow)
         # both scan variants compare x against the edges directly, so
         # id ∈ [0, n-1] ⟺ e0 <= x < e_n; NULL and NaN both fail the range
-        x = c.cast("double")
-        return (x >= F.lit(float(self.edges_[0]))) & (
-            x < F.lit(float(self.edges_[-1]))
+        x = f"CAST({e} AS DOUBLE)"
+        return (
+            f"{x} >= {sdouble(self.edges_[0])} AND "
+            f"{x} < {sdouble(self.edges_[-1])}"
         )
 
     def raw_id_sql(self, expr: str) -> str:
@@ -999,18 +1057,18 @@ class Integer(BinSpec):
         if not _integral_ok(dt):
             raise TypeError(f"Integer axis needs an integral/boolean column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
-        x = c.cast("bigint")
+    def id_expr(self, e: str) -> str:
+        x = f"CAST({e} AS BIGINT)"
         return (
-            F.when(x.isNull(), F.lit(self.n))
-            .when(x < F.lit(self.lo), F.lit(-1))
-            .when(x >= F.lit(self.hi), F.lit(self.n))
-            .otherwise((x - F.lit(self.lo)).cast("int"))
+            f"CASE WHEN {x} IS NULL THEN {self.n} "
+            f"WHEN {x} < {int(self.lo)} THEN -1 "
+            f"WHEN {x} >= {int(self.hi)} THEN {self.n} "
+            f"ELSE CAST({x} - {int(self.lo)} AS INT) END"
         )
 
-    def raw_id_col_kept(self, c: Column) -> Column:
+    def id_expr_kept(self, e: str) -> str:
         # kept rows are non-null with lo <= x < hi
-        return (c.cast("bigint") - F.lit(self.lo)).cast("int")
+        return f"CAST(CAST({e} AS BIGINT) - {int(self.lo)} AS INT)"
 
     def raw_id_sql(self, expr: str) -> str:
         x = f"CAST({expr} AS BIGINT)"
@@ -1021,14 +1079,14 @@ class Integer(BinSpec):
             f"ELSE CAST({x} - {self.lo} AS INT) END"
         )
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
+    def keep_expr(self, e: str, flow: bool) -> Optional[str]:
         lo_id, hi_id = self.keep_range(flow)
         if lo_id == -1 and hi_id == self.n:
             return None
         if (lo_id, hi_id) != (0, self.n - 1):
-            return super().keep_pred_col(c, flow)
-        x = c.cast("bigint")
-        return (x >= F.lit(int(self.lo))) & (x < F.lit(int(self.hi)))
+            return super().keep_expr(e, flow)
+        x = f"CAST({e} AS BIGINT)"
+        return f"{x} >= {int(self.lo)} AND {x} < {int(self.hi)}"
 
     def to_dict(self) -> dict:
         return {
@@ -1039,6 +1097,38 @@ class Integer(BinSpec):
             "overflow": self.overflow,
             "bool_labels": self.bool_labels,
         }
+
+
+def _resolved(spec) -> None:
+    if spec.growth:
+        raise ValueError(
+            "unresolved growth axis — pass it through histogram()/"
+            "resolve_specs, which discovers the categories first"
+        )
+
+
+def _category_id_expr(x: str, lits: Sequence[str]) -> str:
+    """Category id of ``x`` among the literal texts ``lits``: misses and
+    NULL → overflow id n (Spark SQL text)."""
+    n = len(lits)
+    if n <= _CAT_CASE_MAX:
+        # small sets: a codegen'd when-chain of direct equality compares
+        # (measured ~1.5× faster per row than array_position's generic
+        # array machinery); ids identical by construction.  A NULL value
+        # makes every equality NULL → falls through to overflow
+        arms = " ".join(f"WHEN {x} = {v} THEN {i}" for i, v in enumerate(lits))
+        return f"CAST(CASE {arms} ELSE {n} END AS INT)"
+    pos = f"array_position(array({', '.join(lits)}), {x})"  # 1-based, 0 if absent
+    return (
+        f"CASE WHEN {x} IS NULL THEN {n} "
+        f"WHEN {pos} > 0 THEN CAST({pos} - 1 AS INT) ELSE {n} END"
+    )
+
+
+def _category_keep_expr(x: str, lits: Sequence[str]) -> str:
+    if len(lits) <= _CAT_CASE_MAX:
+        return sql_chain("OR", [f"{x} = {v}" for v in lits])
+    return f"array_contains(array({', '.join(lits)}), {x})"
 
 
 @dataclass(frozen=True)
@@ -1090,32 +1180,10 @@ class IntCategory(BinSpec):
         if not _integral_ok(dt):
             raise TypeError(f"IntCategory axis needs an integral column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
-        if self.growth:
-            raise ValueError(
-                "unresolved growth axis — pass it through histogram()/"
-                "resolve_specs, which discovers the categories first"
-            )
-        x = c.cast("bigint")
-        if self.n <= _CAT_CASE_MAX:
-            # small sets: a codegen'd when-chain of direct equality compares
-            # (measured ~1.5× faster per row than array_position's generic
-            # array machinery); ids identical by construction
-            expr = None
-            for i, v in enumerate(self.categories):
-                cond = x == F.lit(int(v))
-                expr = (
-                    F.when(cond, F.lit(i)) if expr is None
-                    else expr.when(cond, F.lit(i))
-                )
-            return expr.otherwise(F.lit(self.n)).cast("int")
-        arr = F.array(*[F.lit(int(v)) for v in self.categories])
-        pos = F.array_position(arr, x)  # 1-based, 0 if absent
-        return (
-            F.when(x.isNull(), F.lit(self.n))
-            .when(pos > 0, (pos - 1).cast("int"))
-            .otherwise(F.lit(self.n))
-        )
+    def id_expr(self, e: str) -> str:
+        _resolved(self)
+        x = f"CAST({e} AS BIGINT)"
+        return _category_id_expr(x, [str(int(v)) for v in self.categories])
 
     def raw_id_sql(self, expr: str) -> str:
         x = f"CAST({expr} AS BIGINT)"
@@ -1130,20 +1198,13 @@ class IntCategory(BinSpec):
     def _raw_id_min(self) -> int:
         return 0
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
+    def keep_expr(self, e: str, flow: bool) -> Optional[str]:
         lo_id, hi_id = self.keep_range(flow)
         if lo_id == 0 and hi_id == self.n:
             return None
         # flow=False: keep = category membership (NULL/miss → overflow → drop)
-        if self.n <= _CAT_CASE_MAX:
-            x = c.cast("bigint")
-            preds = [x == F.lit(int(v)) for v in self.categories]
-            out = preds[0]
-            for pr in preds[1:]:
-                out = out | pr
-            return out
-        arr = F.array(*[F.lit(int(v)) for v in self.categories])
-        return F.array_contains(arr, c.cast("bigint"))
+        x = f"CAST({e} AS BIGINT)"
+        return _category_keep_expr(x, [str(int(v)) for v in self.categories])
 
     def to_dict(self) -> dict:
         if self.growth:
@@ -1192,30 +1253,9 @@ class StrCategory(BinSpec):
         if not isinstance(dt, T.StringType):
             raise TypeError(f"StrCategory axis needs a string column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
-        if self.growth:
-            raise ValueError(
-                "unresolved growth axis — pass it through histogram()/"
-                "resolve_specs, which discovers the categories first"
-            )
-        if self.n <= _CAT_CASE_MAX:
-            # direct-equality when-chain (see _CAT_CASE_MAX); a NULL value
-            # makes every equality NULL → falls through to overflow
-            expr = None
-            for i, v in enumerate(self.categories):
-                cond = c == F.lit(v)
-                expr = (
-                    F.when(cond, F.lit(i)) if expr is None
-                    else expr.when(cond, F.lit(i))
-                )
-            return expr.otherwise(F.lit(self.n)).cast("int")
-        arr = F.array(*[F.lit(v) for v in self.categories])
-        pos = F.array_position(arr, c)
-        return (
-            F.when(c.isNull(), F.lit(self.n))
-            .when(pos > 0, (pos - 1).cast("int"))
-            .otherwise(F.lit(self.n))
-        )
+    def id_expr(self, e: str) -> str:
+        _resolved(self)
+        return _category_id_expr(e, [sstr(v) for v in self.categories])
 
     def raw_id_sql(self, expr: str) -> str:
         lst = "[" + ", ".join(slit(v) for v in self.categories) + "]"
@@ -1229,18 +1269,11 @@ class StrCategory(BinSpec):
     def _raw_id_min(self) -> int:
         return 0
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
+    def keep_expr(self, e: str, flow: bool) -> Optional[str]:
         lo_id, hi_id = self.keep_range(flow)
         if lo_id == 0 and hi_id == self.n:
             return None
-        if self.n <= _CAT_CASE_MAX:
-            preds = [c == F.lit(v) for v in self.categories]
-            out = preds[0]
-            for pr in preds[1:]:
-                out = out | pr
-            return out
-        arr = F.array(*[F.lit(v) for v in self.categories])
-        return F.array_contains(arr, c)
+        return _category_keep_expr(e, [sstr(v) for v in self.categories])
 
     def to_dict(self) -> dict:
         if self.growth:

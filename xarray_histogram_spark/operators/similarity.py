@@ -787,15 +787,16 @@ def kmeans_refine(
             raise ValueError("kmeans_refine: cannot infer dim (empty input?)")
         dim = int(probe["d"])
 
-    from ..plans.histogram import scaled_weight_col
+    from ..functions.hashing import q
+    from ..plans.histogram import scaled_weight_expr
 
     def _sums(assigned: DataFrame) -> DataFrame:
         qs = [
-            F.sum(
-                scaled_weight_col(
-                    F.element_at(F.col(vec_col), d + 1).cast("double"), scale
-                )
-            ).alias(f"__s{d}")
+            F.expr(
+                "sum(" + scaled_weight_expr(
+                    f"CAST(element_at({q(vec_col)}, {d + 1}) AS DOUBLE)", scale
+                ) + f") AS __s{d}"
+            )
             for d in range(dim)
         ]
         return assigned.groupBy("cid").agg(

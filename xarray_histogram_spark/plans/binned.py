@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..binspec import BinSpec
+from ..functions.hashing import dlit, q
 from .histogram import (
     axis_meta_exprs,
     check_inputs,
@@ -75,10 +76,10 @@ def binned_statistic(
         raise ValueError(f"unknown stats {bad}; choose from {STATS}")
     group_by = list(group_by)
     (spec,), _ = check_inputs(df, [x], [spec], flow=flow)
-    src, (idc,) = keep_and_bucketize(df, [F.col(x)], [spec], flow)
+    src, (idc,) = keep_and_bucketize(df, [q(x)], [spec], flow)
     vm = value_mode(value, weight_scale)
     divisor = vm.divisor
-    v = F.col(value).cast("double")
+    v = f"CAST({q(value)} AS DOUBLE)"
     vsum = vm.value()
     # sum of squares: in quantized mode q² is an EXACT integer product of
     # the quantized weight with itself (Σq² deterministic; value = Σq²/10^2s;
@@ -86,7 +87,7 @@ def binned_statistic(
     # weights); raw mode sums v·v doubles (fast, order-sensitive).
     # Only materialized when a squared stat is requested.
     need_sq = bool({"sum_sq", "sample_var"} & set(stats))
-    vsq = (vsum * vsum) if vm.int_mode else (v * v)
+    vsq = f"({vsum}) * ({vsum})" if vm.int_mode else f"{v} * {v}"
     if vm.int_mode and need_sq:
         # Σq² must stay inside int64 (Spark would WRAP silently while the
         # DuckDB oracle raises — silent corruption either way).  Worst
@@ -110,12 +111,12 @@ def binned_statistic(
                     f"weight_scale (or weight_scale=None for raw double "
                     f"sums)"
                 )
-    base = src.select(
-        *[F.col(g) for g in group_by],
-        idc.alias(id_col(x)),
-        vsum.alias("__s"),
-        *([vsq.alias("__s2")] if need_sq else []),
-        v.alias("__v"),
+    base = src.selectExpr(
+        *[q(g) for g in group_by],
+        f"{idc} AS {q(id_col(x))}",
+        f"{vsum} AS __s",
+        *([f"{vsq} AS __s2"] if need_sq else []),
+        f"{v} AS __v",
     )
     if not group_by:
         # dense by construction: NULL-valued spine rows union in BEFORE the
@@ -126,59 +127,46 @@ def binned_statistic(
         spine0 = spine_ids_zero(
             base.sparkSession, [x], [spec], flow, f"CAST(NULL AS {sum_t})",
             val_name="__s",
+        ).selectExpr(
+            "*", *([f"CAST(NULL AS {sum_t}) AS __s2"] if need_sq else []),
+            "CAST(NULL AS DOUBLE) AS __v",
         )
-        if need_sq:
-            spine0 = spine0.withColumn("__s2", F.lit(None).cast(sum_t))
-        spine0 = spine0.withColumn("__v", F.lit(None).cast("double"))
         base = base.unionByName(spine0)
     aggs = [
-        F.count(F.col("__v")).alias("__n"),
-        F.sum("__s").alias("__sum"),
-        *([F.sum("__s2").alias("__sum_sq")] if need_sq else []),
-        F.min("__v").alias("__min"),
-        F.max("__v").alias("__max"),
+        "count(__v) AS __n", "sum(__s) AS __sum",
+        *(["sum(__s2) AS __sum_sq"] if need_sq else []),
+        "min(__v) AS __min", "max(__v) AS __max",
     ]
-    agg = base.groupBy(*group_by, id_col(x)).agg(*aggs)
-    sum_d = F.col("__sum").cast("double") / F.lit(divisor)
+    agg = base.groupBy(*group_by, id_col(x)).agg(*[F.expr(a) for a in aggs])
+    d = dlit(divisor)
+    n_d = "CAST(__n AS DOUBLE)"
+    sum_d = f"CAST(__sum AS DOUBLE) / {d}"
+    sum_sq_d = f"CAST(__sum_sq AS DOUBLE) / {d} / {d}"
     out_cols = {
-        "count": F.col("__n").alias(f"count_{value}"),
-        "sum": sum_d.alias(f"sum_{value}"),
-        "mean": (
-            F.col("__sum").cast("double")
-            / F.col("__n").cast("double")
-            / F.lit(divisor)
-        ).alias(f"mean_{value}"),
-        "min": F.col("__min").alias(f"min_{value}"),
-        "max": F.col("__max").alias(f"max_{value}"),
-        "sum_sq": (
-            F.col("__sum_sq").cast("double") / F.lit(divisor) / F.lit(divisor)
-        ).alias(f"sum_sq_{value}"),
+        "count": "__n",
+        "sum": sum_d,
+        "mean": f"CAST(__sum AS DOUBLE) / {n_d} / {d}",
+        "min": "__min",
+        "max": "__max",
+        "sum_sq": sum_sq_d,
         # unbiased per-bin sample variance from the exact sums: the
         # expression order below is mirrored CHARACTER-FOR-CHARACTER in the
         # SQL so the doubles hash-match
         # clamped at 0: for a near-constant bin the two ~equal large
         # doubles' rounding difference can exceed the tiny true variance
         # and go (harmlessly but confusingly) negative
-        "sample_var": F.when(
-            F.col("__n") >= F.lit(2),
-            F.greatest(
-                (
-                    F.col("__sum_sq").cast("double") / F.lit(divisor) / F.lit(divisor)
-                    - (F.col("__sum").cast("double") / F.lit(divisor))
-                    * (F.col("__sum").cast("double") / F.lit(divisor))
-                    / F.col("__n").cast("double")
-                )
-                / (F.col("__n").cast("double") - F.lit(1.0)),
-                F.lit(0.0),
-            ),
-        ).alias(f"sample_var_{value}"),
+        "sample_var": (
+            f"CASE WHEN __n >= 2 THEN greatest(({sum_sq_d} - ({sum_d}) * "
+            f"({sum_d}) / {n_d}) / ({n_d} - 1.0D), 0.0D) END"
+        ),
     }
-    meta = axis_meta_exprs(x, spec, flow)
-    return agg.selectExpr(meta[0], "*").select(
-        *group_by,
-        id_col(x),
-        label_col(x),
-        *[out_cols[s] for s in stats],
+    # the label lookup first (it folds into the aggregate's results), then
+    # the output statistics
+    return agg.selectExpr(axis_meta_exprs(x, spec, flow)[0], "*").selectExpr(
+        *[q(g) for g in group_by],
+        q(id_col(x)),
+        q(label_col(x)),
+        *[f"{out_cols[s]} AS {q(f'{s}_{value}')}" for s in stats],
     )
 
 

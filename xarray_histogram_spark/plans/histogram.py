@@ -9,14 +9,21 @@ reference collapses into ``groupBy().agg()`` and Catalyst does the rest
 bucketize arithmetic).
 
 Scale notes (designed for ~100 TB inputs, 1000 executors):
-- Bucketize is pure Column arithmetic → stays in WholeStageCodegen; no UDFs.
+- Bucketize is pure expression arithmetic → stays in WholeStageCodegen; no
+  UDFs.
+- Plans are built as Spark SQL text, parsed once per output column (the
+  ``selectExpr``/``F.expr`` strings of ``BinSpec.id_expr``, ``flat_key``,
+  ``axis_meta`` …), and each stage is one analyzed DataFrame step: a
+  Column tree costs a py4j round trip per node, and every extra step
+  re-analyzes the plan below it — both are driver time an interactive
+  user waits for.
 - The only shuffle is the groupBy on (group_keys, bin_ids); its output is
   tiny (|groups| × extent rows) because histograms compress.
 - Dense fill, one aggregation either way: ungrouped, a zero-valued spine
   (cross-product of per-axis bin ids, a literal relation) unions in BEFORE
-  the aggregation — on the Column path and the Arrow-fill path alike;
-  grouped, each group's packed bins expand against a literal spine after
-  it — no second scan of the raw data.
+  the aggregation — on the SQL path and the Arrow-fill path alike;
+  grouped, each group's packed bins expand over one generated dense index
+  after it — no second scan of the raw data.
 - One shared planner core (``check_inputs``, ``value_mode``,
   ``keep_and_bucketize``, ``flat_key``) makes the input check, weight
   mode, keep/bucketize rule and flat multi-axis key for EVERY planner of
@@ -49,9 +56,9 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
-from ..binspec import Bin, BinSpec, Integer, Regular
+from ..binspec import BinSpec, Integer, Regular, col_sql, sql_chain
+from ..functions.hashing import dlit, q
 from .result import HistogramResult
 
 BinsArg = Union[int, BinSpec, Sequence[Union[int, BinSpec]]]
@@ -163,12 +170,12 @@ def resolve_specs(
     return specs
 
 
-def scaled_weight_col(w: Column, divisor: float) -> Column:
-    """Exact-int64 weight quantization: half-away-from-zero rounding of
-    ``w·divisor`` via sign-aware floor — pure IEEE double ops, so Spark,
-    DuckDB (same CASE/FLOOR mirror) and the numpy fill path compute the
-    BIT-IDENTICAL int64 for every input.  ``F.round`` would round the
-    decimal string repr through BigDecimal: subtly different on
+def scaled_weight_expr(w: str, divisor: float) -> str:
+    """Exact-int64 weight quantization (Spark SQL text): half-away-from-zero
+    rounding of ``w·divisor`` via sign-aware floor — pure IEEE double ops,
+    so Spark, DuckDB (same CASE/FLOOR mirror) and the numpy fill path
+    compute the BIT-IDENTICAL int64 for every input.  ``round`` would
+    round the decimal string repr through BigDecimal: subtly different on
     adversarial doubles AND ~1.8× slower per row (BigDecimal allocation
     in the hot path).
 
@@ -179,13 +186,17 @@ def scaled_weight_col(w: Column, divisor: float) -> Column:
     fill kernel receives Spark NULLs as pandas NaN so it cannot tell the
     two apart (it already skips both).  Raw-double mode
     (``weight_scale=None``) keeps IEEE semantics (NaN poisons the sum)."""
-    x = w.cast("double") * F.lit(divisor)
+    x = f"CAST({w} AS DOUBLE) * {dlit(divisor)}"
     return (
-        F.when(F.isnan(x), F.lit(None))
-        .when(x >= 0, F.floor(x + F.lit(0.5)))
-        .otherwise(-F.floor(-x + F.lit(0.5)))
-        .cast("bigint")
+        f"CAST(CASE WHEN isnan({x}) THEN NULL "
+        f"WHEN {x} >= 0 THEN floor({x} + 0.5D) "
+        f"ELSE -floor(-({x}) + 0.5D) END AS BIGINT)"
     )
+
+
+def scaled_weight_col(w: Column, divisor: float) -> Column:
+    """Column form of ``scaled_weight_expr``."""
+    return F.expr(scaled_weight_expr(col_sql(w), divisor))
 
 
 # ---- shared planner core --------------------------------------------------
@@ -277,21 +288,31 @@ class ValueMode:
         """The typed zero of the aggregate (spine rows, empty bins)."""
         return "CAST(0 AS BIGINT)" if self.int_mode else "CAST(0.0 AS DOUBLE)"
 
-    def value(self, c: Optional[Column] = None) -> Optional[Column]:
-        """Per-row value of ``c`` (default: the weights column); ``None``
-        when unweighted — the aggregate is then a COUNT."""
+    def value(self, e: Optional[str] = None) -> Optional[str]:
+        """Per-row value of the SQL expression ``e`` (default: the weights
+        column) as Spark SQL text; ``None`` when unweighted — the
+        aggregate is then a COUNT."""
         if self.weights is None:
             return None
-        c = F.col(self.weights) if c is None else c
+        e = q(self.weights) if e is None else e
         if self.int_mode:
-            return scaled_weight_col(c, self.divisor)
-        return c.cast("double")
+            return scaled_weight_expr(e, self.divisor)
+        return f"CAST({e} AS DOUBLE)"
 
-    def display_sum(self, c: Column) -> Column:
-        """Display double of SUM(value(c)): the exact int64 sum, then one
+    def display_sum(self, e: str) -> str:
+        """Display double of SUM(value(e)): the exact int64 sum, then one
         division, in int_mode; the raw double sum otherwise."""
-        s = F.sum(self.value(c))
-        return s.cast("double") / F.lit(self.divisor) if self.int_mode else s
+        s = f"sum({self.value(e)})"
+        if not self.int_mode:
+            return s
+        return f"CAST({s} AS DOUBLE) / {dlit(self.divisor)}"
+
+
+def int_display(v: str, divisor: float) -> str:
+    """Display double of an exact int64 aggregate ``v``: one cast, then
+    one division by the quantization divisor (Spark SQL text)."""
+    d = f"CAST({v} AS DOUBLE)"
+    return d if divisor == 1.0 else f"{d} / {dlit(divisor)}"
 
 
 def value_mode(weights: Optional[str], weight_scale: Optional[int]) -> ValueMode:
@@ -307,29 +328,47 @@ def value_mode(weights: Optional[str], weight_scale: Optional[int]) -> ValueMode
 
 def keep_and_bucketize(
     df: DataFrame,
-    xs: Sequence[Column],
+    xs: Sequence[str],
     specs: Sequence[BinSpec],
     flow: bool,
     keep: bool = True,
-) -> tuple[DataFrame, list[Column]]:
-    """Keep filter plus per-axis raw bin ids of the values ``xs``.
+) -> tuple[DataFrame, list[str]]:
+    """Keep filter plus per-axis raw bin ids (Spark SQL text) of the value
+    expressions ``xs`` (Spark SQL text, e.g. ``q(column)``).
 
-    The keep filter runs FIRST, on the raw values (``keep_pred_col``):
-    pushed into the scan, and the bucketize is then evaluated exactly once
-    per row — an id-range filter would be pushdown-substituted into both
+    The keep filter runs FIRST, on the raw values (``keep_expr``): pushed
+    into the scan, and the bucketize is then evaluated exactly once per
+    row — an id-range filter would be pushdown-substituted into both
     BETWEEN bounds, tripling the bucketize work per row.  An axis uses the
-    kept-fast id (``raw_id_col_kept``: no NULL/NaN/flow CASE wrapper,
+    kept-fast id (``id_expr_kept``: no NULL/NaN/flow CASE wrapper,
     identical ids on kept rows) exactly when its keep predicate was applied
-    and ``flow`` is off.  ``keep=False`` keeps every row (flow ids too)."""
-    preds = [
-        s.keep_pred_col(x, flow) if keep else None for x, s in zip(xs, specs)
-    ]
-    applied = [p for p in preds if p is not None]
-    src = df.where(reduce(lambda a, b: a & b, applied)) if applied else df
-    ids = [
-        s.raw_id_col_kept(x) if p is not None and not flow else s.raw_id_col(x)
-        for x, s, p in zip(xs, specs, preds)
-    ]
+    and ``flow`` is off.  ``keep=False`` keeps every row (flow ids too).
+    The filter is one parsed predicate; an axis whose bucketize exists only
+    as Columns (``sql_ok`` False) filters and bucketizes through the
+    Column forms, its id a hidden ``__id<i>`` column."""
+    preds, ids, hidden = [], [], []
+    col_preds = []
+    for i, (x, s) in enumerate(zip(xs, specs)):
+        if s.sql_ok:
+            p = s.keep_expr(x, flow) if keep else None
+            if p is not None:
+                preds.append(p)
+            kept = p is not None and not flow
+            ids.append(s.id_expr_kept(x) if kept else s.id_expr(x))
+            continue
+        c = F.expr(x)
+        p = s.keep_pred_col(c, flow) if keep else None
+        if p is not None:
+            col_preds.append(p)
+        kept = p is not None and not flow
+        idc = s.raw_id_col_kept(c) if kept else s.raw_id_col(c)
+        hidden.append((f"__id{i}", idc))
+        ids.append(q(f"__id{i}"))
+    src = df.where(sql_chain("AND", preds)) if preds else df
+    for p in col_preds:
+        src = src.where(p)
+    for name, c in hidden:
+        src = src.withColumn(name, c)
     return src, ids
 
 
@@ -342,23 +381,21 @@ def flat_strides(specs: Sequence[BinSpec]) -> list[int]:
     return strides
 
 
-def flat_key(ids: Sequence[Column], specs: Sequence[BinSpec]) -> Column:
-    """One bigint key from k bin ids: the hash-aggregate hashes/compares a
-    single long instead of k ints, and a map probe compares longs."""
-    return reduce(
-        lambda a, b: a + b,
-        [
-            (i + F.lit(1)).cast("bigint") * F.lit(st)
-            for i, st in zip(ids, flat_strides(specs))
-        ],
+def flat_key(ids: Sequence[str], specs: Sequence[BinSpec]) -> str:
+    """One bigint key (Spark SQL text) from k bin-id expressions: the
+    hash-aggregate hashes/compares a single long instead of k ints, and a
+    map probe compares longs."""
+    return " + ".join(
+        f"CAST(({i}) + 1 AS BIGINT) * {st}"
+        for i, st in zip(ids, flat_strides(specs))
     )
 
 
-def flat_key_ids(cols: Sequence[str], specs: Sequence[BinSpec]) -> list[Column]:
+def flat_key_ids(cols: Sequence[str], specs: Sequence[BinSpec]) -> list[str]:
     """Inverse of ``flat_key`` on the ``__fk`` column: the per-axis ids as
-    ``<col>_bin`` columns (integer div/mod)."""
+    ``<col>_bin`` columns (integer div/mod), as ``selectExpr`` text."""
     return [
-        F.expr(f"CAST((__fk div {st}) % {s.n + 2} - 1 AS INT)").alias(id_col(c))
+        f"CAST((__fk div {st}) % {s.n + 2} - 1 AS INT) AS {q(id_col(c))}"
         for c, s, st in zip(cols, specs, flat_strides(specs))
     ]
 
@@ -381,7 +418,7 @@ def spark_lit(v, typ: str) -> str:
 def spine_df(spark: SparkSession, var: str, spec: BinSpec, flow: bool) -> DataFrame:
     """Tiny per-axis bin table: (id, label, width, center, is_flow) — the
     analog of the reference's bin coordinate (core.py:524-587), broadcast
-    into the dense join.
+    into the streaming histograms' label join.
 
     Built as a pure-Catalyst literal relation (``inline`` of literal structs
     → LocalRelation after constant folding): a ``createDataFrame`` here would
@@ -401,6 +438,7 @@ def spine_df(spark: SparkSession, var: str, spec: BinSpec, flow: bool) -> DataFr
     return spark.range(1).selectExpr(f"inline(array({rows}))")
 
 
+
 def _axis_id_range(spec: BinSpec, flow: bool) -> tuple[int, int]:
     """Contiguous [lo, hi] id range of the emitted bins (every BinSpec
     family emits consecutive ids: underflow −1, core 0..n−1, overflow n)."""
@@ -414,40 +452,61 @@ def _axis_id_range(spec: BinSpec, flow: bool) -> tuple[int, int]:
 
 def spine_ids_zero(
     spark: SparkSession, cols: Sequence[str], specs: Sequence[BinSpec],
-    flow: bool, zero_sql: str, val_name: str = "__v",
+    flow: bool, zero_sql: Optional[str], val_name: str = "__v",
+    flat: bool = False,
 ) -> DataFrame:
     """Cross-product of per-axis bin ids with a typed zero value — the
     union branch that densifies the aggregation (every bin appears in some
     group even if no data row hits it).  Pure literal `sequence`/`explode`
-    plan: a few hundred driver-local rows, no job, no broadcast."""
+    plan: a few hundred driver-local rows, no job, no broadcast.
+    ``zero_sql=None`` emits no value column; ``flat`` emits the ids as
+    one ``__fk`` key (``flat_key``) instead of ``<col>_bin`` columns."""
     df = spark.range(1)
     for c, s in zip(cols, specs):
         lo, hi = _axis_id_range(s, flow)
         df = df.selectExpr("*", f"explode(sequence({lo}, {hi})) AS __seq_{c}")
-    return df.selectExpr(
-        *[f"CAST(__seq_{c} AS INT) AS {id_col(c)}" for c in cols],
-        f"{zero_sql} AS {val_name}",
-    )
+    ids = [f"CAST(__seq_{c} AS INT)" for c in cols]
+    if flat:
+        out = [f"{flat_key([f'CAST({i} AS BIGINT)' for i in ids], specs)} AS __fk"]
+    else:
+        out = [f"{i} AS {q(id_col(c))}" for i, c in zip(ids, cols)]
+    if zero_sql is not None:
+        out.append(f"{zero_sql} AS {val_name}")
+    return df.selectExpr(*out)
 
 
-def axis_meta_exprs(var: str, spec: BinSpec, flow: bool) -> list[str]:
-    """Post-aggregation label/width/center/is_flow columns as literal-array
-    lookups on the bin id — O(1) per OUTPUT row (the aggregate is
-    bin-bounded), replacing the reference's dense coordinate arrays
-    (core.py:524-587) without any join."""
+def axis_meta(
+    var: str, spec: BinSpec, flow: bool, pos: Optional[str] = None
+) -> list[tuple[str, str]]:
+    """Post-aggregation label/width/center/is_flow of axis ``var`` as
+    (Spark SQL expression, column name) pairs: literal-array lookups — O(1)
+    per OUTPUT row (the aggregate is bin-bounded), replacing the
+    reference's dense coordinate arrays (core.py:524-587) without any
+    join.  ``pos`` is the 0-based position of the bin among the emitted
+    bins (default: from the ``<var>_bin`` id column)."""
     bins = spec.bins(flow)
-    lo, _ = _axis_id_range(spec, flow)
-    idx = f"({id_col(var)} + {1 - lo})"
+    if pos is None:
+        lo, _ = _axis_id_range(spec, flow)
+        idx = f"({q(id_col(var))} + {1 - lo})"
+    else:
+        idx = f"{pos} + 1"
     labels = ", ".join(spark_lit(b.label, spec.label_type) for b in bins)
     widths = ", ".join(spark_lit(b.width, "double") for b in bins)
     centers = ", ".join(spark_lit(b.center, "double") for b in bins)
     flows = ", ".join(spark_lit(b.is_flow, "boolean") for b in bins)
     return [
-        f"element_at(array({labels}), {idx}) AS {label_col(var)}",
-        f"element_at(array({widths}), {idx}) AS __{var}_width",
-        f"element_at(array({centers}), {idx}) AS __{var}_center",
-        f"element_at(array({flows}), {idx}) AS __{var}_is_flow",
+        (f"element_at(array({labels}), {idx})", label_col(var)),
+        (f"element_at(array({widths}), {idx})", f"__{var}_width"),
+        (f"element_at(array({centers}), {idx})", f"__{var}_center"),
+        (f"element_at(array({flows}), {idx})", f"__{var}_is_flow"),
     ]
+
+
+def axis_meta_exprs(
+    var: str, spec: BinSpec, flow: bool, pos: Optional[str] = None
+) -> list[str]:
+    """``axis_meta`` as aliased ``selectExpr`` text."""
+    return [f"{e} AS {q(n)}" for e, n in axis_meta(var, spec, flow, pos)]
 
 
 def histogramdd(
@@ -495,8 +554,8 @@ def histogramdd(
     vm = value_mode(weights, weight_scale)
     # preserve_groups aggregates flow ids too: the dense fill drops them
     # but the group's spine rows survive (reference loop-slice semantics)
-    src, id_exprs = keep_and_bucketize(
-        df, [F.col(c) for c in cols], specs, flow,
+    src, ids = keep_and_bucketize(
+        df, [q(c) for c in cols], specs, flow,
         keep=not (preserve_groups and group_by),
     )
     # unweighted: no value column AT ALL — the aggregate is COUNT(*)
@@ -505,7 +564,8 @@ def histogramdd(
     # then contributes exactly ONE row per bin, corrected by a
     # post-aggregate −1 (below).
     vsrc = vm.value()
-    vcols = [vsrc.alias("__v")] if vsrc is not None else []
+    vcols = [f"{vsrc} AS __v"] if vsrc is not None else []
+    gsel = [q(g) for g in group_by]
     multi = len(cols) > 1
     if multi:
         # flatten the k bin ids into ONE bigint grouping key (flat_key; the
@@ -513,18 +573,14 @@ def histogramdd(
         # ids are recovered post-agg (≤ extent rows) by div/mod, so the
         # output is bit-identical.  The ids widen to bigint BEFORE the +1
         # (flat_key's own cast is then redundant and Catalyst drops it).
-        fk = flat_key([e.cast("bigint") for e in id_exprs], specs)
-        base = src.select(
-            *[F.col(g) for g in group_by], fk.alias("__fk"), *vcols
-        )
+        fk = flat_key([f"CAST({i} AS BIGINT)" for i in ids], specs)
+        base = src.selectExpr(*gsel, f"{fk} AS __fk", *vcols)
         agg_keys = group_by + ["__fk"]
     else:
-        base = src.select(
-            *[F.col(g) for g in group_by],
-            *[e.alias(id_col(c)) for c, e in zip(cols, id_exprs)],
-            *vcols,
+        base = src.selectExpr(
+            *gsel, f"{ids[0]} AS {q(id_col(cols[0]))}", *vcols
         )
-        agg_keys = group_by + [id_col(c) for c in cols]
+        agg_keys = group_by + [id_col(cols[0])]
     dense = not group_by
     if dense:
         # dense fill by construction: union the zero-valued bin spine with
@@ -532,28 +588,18 @@ def histogramdd(
         # HashAggregate then emits every spine bin.  No join, no broadcast
         # of a computed aggregate (a broadcast subtree costs an extra job
         # per execution), one exchange of ≤ extent rows.
-        spine0 = spine_ids_zero(spark, cols, specs, flow, vm.zero_sql)
-        if multi:
-            spine0 = spine0.select(
-                flat_key(
-                    [F.col(id_col(c)).cast("bigint") for c in cols], specs
-                ).alias("__fk"),
-                F.col("__v"),
-            )
-        if vsrc is None:
-            spine0 = spine0.drop("__v")
-        base = base.unionByName(spine0)
+        base = base.unionByName(spine_ids_zero(
+            spark, cols, specs, flow,
+            None if vsrc is None else vm.zero_sql, flat=multi,
+        ))
     if vsrc is None:
         # COUNT(*); the dense spine added exactly one row per bin → −1
-        cnt = F.count(F.lit(1))
-        val = (cnt - F.lit(1)) if dense else cnt
-        agg = base.groupBy(*agg_keys).agg(val.alias("__val"))
+        val = "count(1) - 1" if dense else "count(1)"
     else:
-        agg = base.groupBy(*agg_keys).agg(
-            F.coalesce(F.sum("__v"), F.expr(vm.zero_sql)).alias("__val")
-        )
+        val = f"coalesce(sum(__v), {vm.zero_sql})"
+    agg = base.groupBy(*agg_keys).agg(F.expr(f"{val} AS __val"))
     if multi:
-        agg = agg.select(*group_by, *flat_key_ids(cols, specs), "__val")
+        agg = agg.selectExpr(*gsel, *flat_key_ids(cols, specs), "__val")
     return finish_from_agg(
         agg, cols, specs, group_by=group_by, flow=flow, density=density,
         storage=storage, int_mode=vm.int_mode, divisor=vm.divisor,
@@ -579,7 +625,7 @@ def finish_from_agg(
     sparse_ok: bool = True,
 ) -> HistogramResult:
     """Shared finish stage: (group, bin-ids, __val) aggregate → dense
-    labelled result.  Used by both the pure-Column path and the
+    labelled result.  Used by both the pure-SQL path and the
     Arrow/numpy fill path (plans.fast_fill) — identical output.
 
     ``sparse_ok``: whether downstream statistics may read the sparse
@@ -591,116 +637,75 @@ def finish_from_agg(
     NULL-statistic row for it — but the core-bin filter on the sparse
     aggregate would drop it with no row at all.
 
-    Dense output:
+    Dense output (one ``selectExpr`` with the display value column; a
+    density adds its window step):
     - Ungrouped: the aggregate must already hold one row per spine bin —
       every caller unions the zero spine in before its aggregation
       (``spine_ids_zero``), or re-aggregates an already dense result.  The
       bin labels/widths/centers attach as O(1) literal-array lookups on the
-      id, so NO join and NO broadcast of a computed aggregate appears in
-      the ungrouped plan at all.
-    - Grouped: pack each group's sparse bins into a map and expand against
-      the broadcast literal spine — ONE scan of the input and no self-join
+      id (``axis_meta_exprs``), so NO join and NO broadcast of a computed
+      aggregate appears in the ungrouped plan at all.
+    - Grouped: pack each group's sparse bins into a map, then expand every
+      group over the dense spine — ONE scan of the input and no self-join
       (a groups-distinct + join-back plan scans and aggregates the raw
       data twice; at 100 TB the scan dominates, so this halves the query).
-      The map is keyed by the FLAT bin id (``flat_key``), not a struct: the unavoidable linear map probe then does cheap long
-      compares instead of struct compares.  (The spine is a literal
-      relation — broadcasting it is driver-local, not a job.)"""
+      The spine is one ``explode(sequence(0, Π extents − 1))`` per group
+      (a Generate in the same stage: no join, no broadcast); each row's
+      per-axis position is a div/mod of that index, its id the position
+      plus the axis's lowest emitted id, and its labels/widths/centers/
+      flow flags the ``axis_meta_exprs`` literal-array lookups at that
+      position — O(Σ extents) literals in the plan whatever the product
+      of the extents.  The map is keyed by the FLAT bin id
+      (``flat_key``), not a struct: the unavoidable linear map probe then
+      does cheap long compares instead of struct compares."""
     cols = list(cols)
     specs = list(specs)
     group_by = list(group_by)
-    spark = agg.sparkSession
-    zero = F.lit(0).cast("bigint") if int_mode else F.lit(0.0)
+    gsel = [q(g) for g in group_by]
     if group_by:
-        # identical flat-key arithmetic on the aggregate and the spine side
-        def fkey():
-            return flat_key([F.col(id_col(c)) for c in cols], specs)
-
-        strides = flat_strides(specs)
-        packed = agg.groupBy(*group_by).agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(fkey().alias("key"), F.col("__val").alias("value"))
-                )
-            ).alias("__m")
+        key = flat_key([q(id_col(c)) for c in cols], specs)
+        packed = agg.groupBy(*group_by).agg(F.expr(
+            f"map_from_entries(collect_list(struct({key} AS key, "
+            "__val AS value))) AS __m"
+        ))
+        exts = [len(s.bins(flow)) for s in specs]
+        total = math.prod(exts)
+        src = packed.selectExpr(
+            *gsel, "__m", f"explode(sequence(0, {total - 1})) AS __j"
         )
-        out_cols = [
-            *group_by,
-            *[F.col(id_col(c)) for c in cols],
-            *[F.col(label_col(c)) for c in cols],
-            None,  # placeholder for __val position
-            *[F.col(f"__{c}_width") for c in cols],
-            *[F.col(f"__{c}_center") for c in cols],
-            *[F.col(f"__{c}_is_flow") for c in cols],
-        ]
-        extent_total = 1
-        for s in specs:
-            extent_total *= len(s.bins(flow))
-        if extent_total <= 1024:
-            # expand each group's packed map against an INLINE literal
-            # spine (`inline(array(named_struct(...)))`): extent rows per
-            # group generated in the same stage — no join node and no
-            # broadcast-exchange job per execution
-            import itertools
-
-            entries = []
-            for combo in itertools.product(
-                *[s.bins(flow) for s in specs]
-            ):
-                k = sum((b.id + 1) * st for b, st in zip(combo, strides))
-                fields = [f"'__k', CAST({k} AS BIGINT)"]
-                for c, s, b in zip(cols, specs, combo):
-                    fields.append(f"'{id_col(c)}', CAST({b.id} AS INT)")
-                    fields.append(
-                        f"'{label_col(c)}', {spark_lit(b.label, s.label_type)}"
-                    )
-                    fields.append(f"'__{c}_width', {spark_lit(b.width, 'double')}")
-                    fields.append(
-                        f"'__{c}_center', {spark_lit(b.center, 'double')}"
-                    )
-                    fields.append(
-                        f"'__{c}_is_flow', {'true' if b.is_flow else 'false'}"
-                    )
-                entries.append("named_struct(" + ", ".join(fields) + ")")
-            expanded = packed.selectExpr(
-                "*", f"inline(array({', '.join(entries)}))"
-            )
-            val = F.coalesce(F.element_at(F.col("__m"), F.col("__k")), zero)
-        else:
-            # very wide spines: broadcast the literal spine relation and
-            # cross-expand (driver-local literal, no job for the build side)
-            spine = reduce(
-                lambda a, b: a.crossJoin(b),
-                [spine_df(spark, c, s, flow) for c, s in zip(cols, specs)],
-            )
-            expanded = packed.crossJoin(F.broadcast(spine))
-            val = F.coalesce(F.element_at(F.col("__m"), fkey()), zero)
-        filled = expanded.select(
-            *[c for c in out_cols[: len(group_by) + 2 * len(cols)]],
-            val.alias("__val"),
-            *[c for c in out_cols[len(group_by) + 2 * len(cols) + 1 :]],
-        )
+        # row-major position of each axis within the dense index __j
+        ids, per_axis = [], []
+        for i, (c, s) in enumerate(zip(cols, specs)):
+            stride = math.prod(exts[i + 1:])
+            j = "__j" if stride == 1 else f"(__j div {stride})"
+            p = f"CAST({j} % {exts[i]} AS INT)"
+            lo = _axis_id_range(s, flow)[0]
+            ids.append(f"{p} + {lo}" if lo else p)
+            per_axis.append(axis_meta_exprs(c, s, flow, pos=p))
+        zero = "CAST(0 AS BIGINT)" if int_mode else "0.0D"
+        val = f"coalesce(element_at(__m, {flat_key(ids, specs)}), {zero})"
+        id_sel = [f"{i} AS {q(id_col(c))}" for i, c in zip(ids, cols)]
     else:
-        ids = [id_col(c) for c in cols]
         # NOTE on a rejected "optimization": coalescing this post-shuffle
         # tail to one task (fewer near-empty task dispatches) measured
         # neutral on the 1-D mirror and consistently ~20 ms SLOWER on the
         # along-dim mirror across interleaved A/B runs — the extra plan
         # node buys nothing locally and single-threads the (remote at real
         # scale) shuffle fetch, so the tail keeps shuffle.partitions tasks.
-        # column order: ids, labels, __val, widths, centers, is_flow
+        src = agg
         per_axis = [axis_meta_exprs(c, s, flow) for c, s in zip(cols, specs)]
-        filled = agg.selectExpr(
-            *ids,
-            *[a[0] for a in per_axis],
-            "__val",
-            *[a[1] for a in per_axis],
-            *[a[2] for a in per_axis],
-            *[a[3] for a in per_axis],
-        )
-
+        val = "__val"
+        id_sel = [q(id_col(c)) for c in cols]
+    # column order: groups, ids, labels, __val, widths, centers, is_flow
+    sel = [
+        *gsel, *id_sel, *[a[0] for a in per_axis], f"{val} AS __val",
+        *[a[1] for a in per_axis], *[a[2] for a in per_axis],
+        *[a[3] for a in per_axis],
+    ]
     return _finish_value_col(
-        filled, cols, specs, group_by=group_by, flow=flow, density=density,
-        storage=storage, int_mode=int_mode, divisor=divisor, weighted=weighted,
+        src, sel, val, cols, specs, group_by=group_by, flow=flow,
+        density=density, storage=storage, int_mode=int_mode,
+        divisor=divisor, weighted=weighted,
         sparse=agg if (sparse_ok and not flow) else None,
     )
 
@@ -710,33 +715,33 @@ def _density_expr(
     partition_keys: Sequence[str],
     int_mode: bool,
     divisor: float,
-) -> Column:
-    """Histogram → PDF along ``norm_vars`` (core.py:649-663 semantics):
-    the total EXCLUDES flow bins, and EVERY cell — flow included — is
-    divided by ``area × total``; ``get_area`` (core.py:638-646) forces flow
-    areas to 1, so flow cells come out as ``raw / total``.  In int_mode the
-    window total is an exact integer sum → deterministic under any
+) -> str:
+    """Histogram → PDF along ``norm_vars`` (core.py:649-663 semantics), as
+    Spark SQL text over ``__val`` and the metadata columns: the total
+    EXCLUDES flow bins, and EVERY cell — flow included — is divided by
+    ``area × total``; ``get_area`` (core.py:638-646) forces flow areas to
+    1, so flow cells come out as ``raw / total``.  In int_mode the window
+    total is an exact integer sum → deterministic under any
     partitioning."""
-    any_flow = reduce(
-        lambda a, b: a | b, [F.col(f"__{v}_is_flow") for v in norm_vars]
-    )
-    area = reduce(lambda a, b: a * b, [F.col(f"__{v}_width") for v in norm_vars])
-    w = Window.partitionBy(*[F.col(k) for k in partition_keys])
+    any_flow = sql_chain("OR", [q(f"__{v}_is_flow") for v in norm_vars])
+    area = " * ".join(q(f"__{v}_width") for v in norm_vars)
+    over = f"OVER (PARTITION BY {', '.join(q(k) for k in partition_keys)})" \
+        if partition_keys else "OVER ()"
     if int_mode:
-        zero = F.lit(0).cast("bigint")
-        total = F.sum(F.when(any_flow, zero).otherwise(F.col("__val"))).over(w)
-        raw = F.col("__val").cast("double")
-        total_d = total.cast("double")
-        if divisor != 1.0:
-            raw = raw / F.lit(divisor)
-            total_d = total_d / F.lit(divisor)
+        total = (
+            f"sum(CASE WHEN {any_flow} THEN CAST(0 AS BIGINT) "
+            f"ELSE __val END) {over}"
+        )
+        raw, total_d = int_display(
+            "__val", divisor), int_display(total, divisor)
     else:
-        total_d = F.sum(
-            F.when(any_flow, F.lit(0.0)).otherwise(F.col("__val"))
-        ).over(w)
-        raw = F.col("__val")
-    total_nz = F.nullif(total_d, F.lit(0.0))
-    return F.when(any_flow, raw / total_nz).otherwise(raw / area / total_nz)
+        total_d = f"sum(CASE WHEN {any_flow} THEN 0.0D ELSE __val END) {over}"
+        raw = "__val"
+    total_nz = f"nullif({total_d}, 0.0D)"
+    return (
+        f"CASE WHEN {any_flow} THEN {raw} / {total_nz} "
+        f"ELSE {raw} / ({area}) / {total_nz} END"
+    )
 
 
 def histogram_columns(
@@ -817,6 +822,7 @@ def histogram_columns(
     vm = value_mode(weights, weight_scale)
     # unweighted → COUNT(*) with spine −1 correction, as in histogramdd
     vsrc = vm.value()
+    vcols = [] if vsrc is None else [f"{vsrc} AS __v"]
 
     bin_id = id_col(var_name)
     # flat (column-index, bin) grouping key: __d·(n+2) + id + 1 — one
@@ -840,29 +846,19 @@ def histogram_columns(
         # in as a literal
         branches = []
         for kk, c in enumerate(cols):
-            b, (idc,) = keep_and_bucketize(df, [F.col(c)], [spec], flow)
-            fkc = (idc.cast("bigint") + F.lit(1) + F.lit(kk * width)).alias(
-                "__fk"
-            )
-            branches.append(
-                b.select(fkc) if vsrc is None
-                else b.select(fkc, vsrc.alias("__v"))
-            )
+            b, (idc,) = keep_and_bucketize(df, [q(c)], [spec], flow)
+            branches.append(b.selectExpr(
+                f"CAST({idc} AS BIGINT) + 1 + {kk * width} AS __fk", *vcols
+            ))
         data = reduce(lambda a, b: a.unionByName(b), branches)
     else:
-        arr = F.array(*[F.col(c).cast(elem_t) for c in cols])
-        extra = [F.col(weights)] if weights is not None else []
-        gen = df.select(
-            *extra, F.posexplode(arr).alias("__d", "__x")
-        )
-        gen, (idc,) = keep_and_bucketize(gen, [F.col("__x")], [spec], flow)
-        fkc = (
-            F.col("__d").cast("bigint") * F.lit(width)
-            + idc.cast("bigint") + F.lit(1)
-        ).alias("__fk")
-        data = (
-            gen.select(fkc) if vsrc is None
-            else gen.select(fkc, vsrc.alias("__v"))
+        arr = ", ".join(f"CAST({q(c)} AS {elem_t})" for c in cols)
+        extra = [q(weights)] if weights is not None else []
+        gen = df.selectExpr(*extra, f"posexplode(array({arr})) AS (__d, __x)")
+        gen, (idc,) = keep_and_bucketize(gen, ["__x"], [spec], flow)
+        data = gen.selectExpr(
+            f"CAST(__d AS BIGINT) * {width} + CAST({idc} AS BIGINT) + 1 AS __fk",
+            *vcols,
         )
     lo_id, hi_id = _axis_id_range(spec, flow)
     k = len(cols)
@@ -879,39 +875,32 @@ def histogram_columns(
         )
     )
     u = data.unionByName(spine)
-    if vsrc is None:
-        agg = u.groupBy("__fk").agg(
-            (F.count(F.lit(1)) - F.lit(1)).alias("__val")
-        )
-    else:
-        agg = u.groupBy("__fk").agg(
-            F.coalesce(F.sum("__v"), F.expr(vm.zero_sql)).alias("__val")
-        )
-    agg = agg.select(
-        F.expr(f"CAST(__fk div {width} AS INT)").alias("__d"),
-        F.expr(f"CAST(__fk % {width} - 1 AS INT)").alias(bin_id),
+    val = "count(1) - 1" if vsrc is None else f"coalesce(sum(__v), {vm.zero_sql})"
+    # the (column, bin) pair from the fused key (this projection folds
+    # into the aggregate's results), then the labelled projection: column
+    # label and bin metadata are literal-array lookups
+    agg = u.groupBy("__fk").agg(F.expr(f"{val} AS __val")).selectExpr(
+        f"CAST(__fk div {width} AS INT) AS __d",
+        f"CAST(__fk % {width} - 1 AS INT) AS {q(bin_id)}",
         "__val",
     )
     dim_labels = ", ".join(spark_lit(c, "string") for c in cols)
     per_axis = axis_meta_exprs(var_name, spec, flow)
-    filled = agg.selectExpr(
-        f"element_at(array({dim_labels}), __d + 1) AS {dim_name}",
-        bin_id,
-        per_axis[0],
-        "__val",
-        per_axis[1],
-        per_axis[2],
-        per_axis[3],
-    )
+    sel = [
+        f"element_at(array({dim_labels}), __d + 1) AS {q(dim_name)}",
+        q(bin_id), per_axis[0], "__val", *per_axis[1:],
+    ]
     return _finish_value_col(
-        filled, [var_name], [spec], group_by=[dim_name], flow=flow,
-        density=density, storage=storage, int_mode=vm.int_mode,
+        agg, sel, "__val", [var_name], [spec], group_by=[dim_name],
+        flow=flow, density=density, storage=storage, int_mode=vm.int_mode,
         divisor=vm.divisor, weighted=weights is not None,
     )
 
 
 def _finish_value_col(
-    filled: DataFrame,
+    src: DataFrame,
+    sel: list[str],
+    val: str,
     cols: list[str],
     specs: list[BinSpec],
     *,
@@ -924,20 +913,20 @@ def _finish_value_col(
     weighted: bool,
     sparse: Optional[DataFrame] = None,
 ) -> HistogramResult:
-    """Shared tail: dense labelled rows with ``__val`` → display value
-    column + HistogramResult wrapper."""
+    """Shared tail: the dense labelled projection ``sel`` of ``src`` (which
+    defines ``__val`` as the expression ``val``) plus the display value
+    column, in ONE ``selectExpr``; a density's window total is a second
+    step over the projected columns.  Wrapped as a HistogramResult."""
     vname = value_col_name(cols, density)
     if density:
-        vis = _density_expr(cols, group_by, int_mode, divisor)
-    elif int_mode and not weighted and storage == "int64":
-        vis = F.col("__val")
-    elif int_mode:
-        vis = F.col("__val").cast("double")
-        if divisor != 1.0:
-            vis = vis / F.lit(divisor)
+        out = src.selectExpr(*sel).selectExpr(
+            "*", f"{_density_expr(cols, group_by, int_mode, divisor)} AS {q(vname)}"
+        )
     else:
-        vis = F.col("__val")
-    out = filled.withColumn(vname, vis)
+        # unweighted int64 counts show the exact sum itself
+        exact = not weighted and storage == "int64"
+        vis = int_display(val, divisor) if int_mode and not exact else val
+        out = src.selectExpr(*sel, f"{vis} AS {q(vname)}")
     return HistogramResult(
         _df=out,
         variables=cols,

@@ -24,9 +24,9 @@ from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..binspec import BinSpec, Variable
+from ..binspec import BinSpec, Variable, sql_chain
+from ..functions.hashing import q
 
 
 @dataclass
@@ -155,9 +155,10 @@ class HistogramResult:
             if self.value_col.endswith("_histogram")
             else self.value_col + "_pdf"
         )
-        out = (
-            self._df.drop(self.value_col)
-            .withColumn(new_name, pdf)
+        # one step: every column but the old value, plus the pdf
+        out = self._df.selectExpr(
+            *[q(c) for c in self._df.columns if c != self.value_col],
+            f"{pdf} AS {q(new_name)}",
         )
         return replace(self, _df=out, value_col=new_name, density=True)
 
@@ -238,27 +239,13 @@ class HistogramResult:
             underflow=getattr(s, "underflow", True),
             overflow=getattr(s, "overflow", True),
         )
-        old = F.col(f"{v}_bin")
+        old = q(f"{v}_bin")
         new_id = (
-            F.when(old < 0, F.lit(-1))
-            .when(old >= s.n, F.lit(new_spec.n))
-            .otherwise(F.floor(old / F.lit(f)))
-            .cast("int")
+            f"CAST(CASE WHEN {old} < 0 THEN -1 "
+            f"WHEN {old} >= {s.n} THEN {new_spec.n} "
+            f"ELSE floor({old} / {f}) END AS INT)"
         )
-        ids = [
-            (new_id if vv == v else F.col(f"{vv}_bin")).alias(f"{vv}_bin")
-            for vv in self.variables
-        ]
-        agg = (
-            self._df.select(*self.group_by, *ids, F.col("__val"))
-            .groupBy(*self.group_by, *[f"{vv}_bin" for vv in self.variables])
-            .agg(F.sum("__val").alias("__val"))
-        )
-        storage = (
-            "int64"
-            if dict(self._df.dtypes).get(self.value_col) == "bigint"
-            else "double"
-        )
+        agg = self._resum(self.variables, {v: new_id})
         return finish_from_agg(
             agg,
             self.variables,
@@ -266,10 +253,32 @@ class HistogramResult:
             group_by=self.group_by,
             flow=self.flow,
             density=False,
-            storage=storage,
+            storage=self._storage(),
             int_mode=self.int_mode,
             divisor=self.divisor,
             weighted=(self.divisor != 1.0) or not self.int_mode,
+        )
+
+    def _storage(self) -> str:
+        """The value column's storage family (int64 for bigint counts)."""
+        dt = dict(self._df.dtypes).get(self.value_col)
+        return "int64" if dt == "bigint" else "double"
+
+    def _resum(self, variables: Sequence[str], new_ids=None) -> DataFrame:
+        """Re-aggregate ``__val`` by the group keys and the ``<var>_bin``
+        ids of ``variables`` — the aggregated result only, never raw data.
+        ``new_ids`` maps a variable to a Spark SQL expression replacing its
+        id."""
+        new_ids = new_ids or {}
+        names = [f"{v}_bin" for v in variables]
+        ids = [
+            f"{new_ids[v]} AS {q(n)}" if v in new_ids else q(n)
+            for v, n in zip(variables, names)
+        ]
+        return (
+            self._df.selectExpr(*[q(g) for g in self.group_by], *ids, "__val")
+            .groupBy(*self.group_by, *names)
+            .agg(F.expr("sum(__val) AS __val"))
         )
 
     # ---- bin-range slicing (boost UHI h[a:b]) ----
@@ -300,17 +309,14 @@ class HistogramResult:
             raise ValueError(f"need 0 <= lo < hi <= {s.n}")
         edges = s.edges()
         new_spec = _Var(tuple(edges[lo : hi + 1]))
-        kept = self._df.where(
-            F.col(_id(v)).between(F.lit(lo), F.lit(hi - 1))
-        )
-        for other in self.variables:
-            if other != v and self.flow:
-                kept = kept.where(
-                    F.col(_id(other)).between(
-                        F.lit(0), F.lit(self.specs[other].n - 1)
-                    )
-                )
-        out = kept.withColumn(_id(v), (F.col(_id(v)) - F.lit(lo)).cast("int"))
+        ranges = [(v, lo, hi - 1)] + [
+            (o, 0, self.specs[o].n - 1)
+            for o in self.variables if o != v and self.flow
+        ]
+        kept = self._df.where(sql_chain("AND", [
+            f"{q(_id(c))} >= {a} AND {q(_id(c))} <= {b}" for c, a, b in ranges
+        ]))
+        out = kept.withColumn(_id(v), F.expr(f"CAST({q(_id(v))} - {lo} AS INT)"))
         specs = dict(self.specs)
         specs[v] = new_spec
         return replace(self, _df=out, specs=specs, flow=False, _sparse=None)
@@ -344,18 +350,7 @@ class HistogramResult:
             raise ValueError("project needs at least one kept variable")
         from .histogram import finish_from_agg
 
-        agg = (
-            self._df.select(
-                *self.group_by, *[f"{v}_bin" for v in keep], F.col("__val")
-            )
-            .groupBy(*self.group_by, *[f"{v}_bin" for v in keep])
-            .agg(F.sum("__val").alias("__val"))
-        )
-        storage = (
-            "int64"
-            if dict(self._df.dtypes).get(self.value_col) == "bigint"
-            else "double"
-        )
+        agg = self._resum(keep)
         return finish_from_agg(
             agg,
             keep,
@@ -363,7 +358,7 @@ class HistogramResult:
             group_by=self.group_by,
             flow=self.flow,
             density=False,
-            storage=storage,
+            storage=self._storage(),
             int_mode=self.int_mode,
             divisor=self.divisor,
             weighted=(self.divisor != 1.0) or not self.int_mode,

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..binspec import BinSpec
+from ..functions.hashing import q
 from .histogram import check_inputs, id_col, keep_and_bucketize, value_mode
 
 
@@ -83,31 +84,29 @@ def rollup_histogramdd(
     if not group_by:
         raise ValueError("rollup_histogramdd needs at least one group column")
     specs, _ = check_inputs(df, cols, specs, flow=flow)
-    src, ids = keep_and_bucketize(df, [F.col(c) for c in cols], specs, flow)
-    proj = [F.col(g) for g in group_by] + [
-        i.alias(id_col(c)) for c, i in zip(cols, ids)
-    ]
-    if weights is not None:
-        proj.append(F.col(weights).alias("__w"))
-    base = src.select(*proj)
-    vm = value_mode(weights, weight_scale)
+    src, ids = keep_and_bucketize(df, [q(c) for c in cols], specs, flow)
+    idc = [id_col(c) for c in cols]
+    base = src.selectExpr(
+        *[q(g) for g in group_by],
+        *[f"{i} AS {q(n)}" for i, n in zip(ids, idc)],
+        *([f"{q(weights)} AS __w"] if weights is not None else []),
+    )
     if weights is None:
-        val = F.count(F.lit(1)).cast("bigint")
+        val = "CAST(count(1) AS BIGINT)"
     else:
-        val = vm.display_sum(F.col("__w"))
-    idc = [F.col(id_col(c)) for c in cols]
-    sets = [
-        [F.col(g) for g in gs] + idc for gs in _group_sets(group_by, cube)
-    ]
-    grouped = base.groupingSets(sets, *[F.col(g) for g in group_by], *idc)
-    out = grouped.agg(F.grouping_id().alias("__gid_raw"), val.alias("n"))
+        val = value_mode(weights, weight_scale).display_sum("__w")
+    sets = [gs + idc for gs in _group_sets(group_by, cube)]
+    grouped = base.groupingSets(sets, *group_by, *idc)
+    out = grouped.agg(
+        F.expr("grouping_id() AS __gid_raw"), F.expr(f"{val} AS n")
+    )
     # the lowest len(cols) grouping bits belong to the bin columns and are
     # always 0 — strip them so the id encodes only the group hierarchy
-    return out.select(
-        *group_by,
-        (F.col("__gid_raw") / (2 ** len(cols))).cast("int").alias("__grouping_id"),
-        *idc,
-        F.col("n"),
+    return out.selectExpr(
+        *[q(g) for g in group_by],
+        f"CAST(__gid_raw / {2 ** len(cols)} AS INT) AS __grouping_id",
+        *[q(n) for n in idc],
+        "n",
     )
 
 

@@ -27,17 +27,20 @@ from __future__ import annotations
 import math
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..binspec import IntCategory, StrCategory
-from .histogram import axis_meta_exprs, id_col, label_col
+from ..binspec import IntCategory, StrCategory, sql_chain
+from ..functions.hashing import dlit, q
+from ..functions.hashing import q as quote  # ``ppf`` takes a ``q`` argument
+from .histogram import axis_meta, id_col, label_col
 from .result import HistogramResult
 
 
-def _prep(result: HistogramResult, variable: Optional[str]):
-    """Strip flow rows (all variables), resolve target var + partition keys.
+def _prep(result: HistogramResult, variable: Optional[str], project: bool = True):
+    """Strip flow rows (all variables) in ONE filter, resolve the target
+    var + partition keys.  Returns ``(v, part, df, meta)``: ``meta`` maps
+    label/width/center of ``v`` to Spark SQL text over ``df``.
 
     When the result still carries its sparse pre-dense aggregate
     (``_sparse``: group keys + bin ids + ``__val``), the statistic reads
@@ -46,8 +49,10 @@ def _prep(result: HistogramResult, variable: Optional[str]):
     are unchanged; a ``0·x`` term cannot change an IEEE fold), so the
     dense-fill stages — the grouped pack-map aggregation + spine expansion
     — drop out of the statistic's plan entirely.  The target variable's
-    label/width/center attach as O(1) literal-array lookups on the bin id
-    (same doubles the dense path carries, from the same BinSpec)."""
+    label/width/center are then O(1) literal-array lookups on the bin id
+    (same doubles the dense path carries, from the same BinSpec): projected
+    as columns when ``project``, else left as expressions for the
+    caller's own projection."""
     v = result._one_var(variable)
     spec = result.specs[v]
     if isinstance(spec, (IntCategory, StrCategory)):
@@ -55,72 +60,76 @@ def _prep(result: HistogramResult, variable: Optional[str]):
     df = result._sparse if result._sparse is not None else result._df
     # core-bin filter FIRST (accessor.py:415-417 flow strip); on the sparse
     # path it also guards the literal-array meta lookup below
-    for c in result.variables:
-        n = result.specs[c].n
-        df = df.where(F.col(id_col(c)).between(F.lit(0), F.lit(n - 1)))
+    df = df.where(sql_chain("AND", [
+        f"{q(id_col(c))} >= 0 AND {q(id_col(c))} <= {result.specs[c].n - 1}"
+        for c in result.variables
+    ]))
+    names = (label_col(v), f"__{v}_width", f"__{v}_center")
+    meta = dict(zip(("label", "width", "center"), [q(n) for n in names]))
     if result._sparse is not None:
-        df = df.selectExpr("*", *axis_meta_exprs(v, spec, False))
+        exprs = axis_meta(v, spec, False)[:3]
+        if project:
+            df = df.selectExpr("*", *[f"{e} AS {q(n)}" for e, n in exprs])
+        else:
+            meta = dict(zip(meta, [e for e, _ in exprs]))
     part = result.group_by + [id_col(c) for c in result.variables if c != v]
-    return v, part, df
+    return v, part, df, meta
 
 
-def _fold(arr: Column, term) -> Column:
-    """Strict sequential left fold with 0.0 seed — deterministic sum order."""
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + term(x))
+def _fold(term: str) -> str:
+    """Strict sequential left fold of ``term`` (over the struct ``_x`` of
+    each bin of ``__a``) with a 0.0 seed — deterministic sum order."""
+    return f"aggregate(__a, 0.0D, (_acc, _x) -> _acc + {term})"
 
 
 def _moment_fold_df(result: HistogramResult, variable: Optional[str]):
-    v, part, df = _prep(result, variable)
-    arr = F.array_sort(
-        F.collect_list(
-            F.struct(
-                F.col(id_col(v)).alias("i"),
-                F.col("__val").cast("double").alias("m"),
-                F.col(f"__{v}_center").alias("c"),
-                F.col(f"__{v}_width").alias("w"),
-            )
-        )
-    )
-    g = df.groupBy(*part).agg(arr.alias("__a"))
+    v, part, df, m = _prep(result, variable)
+    g = df.groupBy(*part).agg(F.expr(
+        f"array_sort(collect_list(struct({q(id_col(v))} AS i, "
+        f"CAST(__val AS DOUBLE) AS m, {m['center']} AS c, "
+        f"{m['width']} AS w))) AS __a"
+    ))
     return v, part, g
 
 
-def _ratio(num: Column, tot: Column) -> Column:
-    return num / F.nullif(tot, F.lit(0.0))
+def _ratio(num: str, tot: str) -> str:
+    return f"{num} / nullif({tot}, 0.0D)"
+
+
+def _moment_df(result, variable, name: str, stat) -> DataFrame:
+    """One statistic of the folded per-group bin arrays: ``stat(v)`` is
+    its Spark SQL text, the output column is ``<v>_<name>``."""
+    v, part, g = _moment_fold_df(result, variable)
+    return g.selectExpr(*[q(p) for p in part], f"{stat} AS {q(f'{v}_{name}')}")
+
+
+_TOT = _fold("_x.m")
 
 
 def mean(result: HistogramResult, variable: Optional[str] = None) -> DataFrame:
     """Distribution mean Σ mass·center (accessor.py:473-484)."""
-    v, part, g = _moment_fold_df(result, variable)
-    a = F.col("__a")
-    tot = _fold(a, lambda x: x["m"])
-    num = _fold(a, lambda x: x["m"] * x["c"])
-    return g.select(*part, _ratio(num, tot).alias(f"{v}_mean"))
+    return _moment_df(
+        result, variable, "mean", _ratio(_fold("_x.m * _x.c"), _TOT)
+    )
 
 
-def _var_expr(a) -> "F.Column":
+def _var_expr() -> str:
     """Σ mass·(c² + w²/12)/Σmass − mean² — shared by var and std so the
     piecewise-uniform formula lives in exactly one place."""
-    tot = _fold(a, lambda x: x["m"])
-    e1 = _ratio(_fold(a, lambda x: x["m"] * x["c"]), tot)
-    e2 = _ratio(
-        _fold(a, lambda x: x["m"] * (x["c"] * x["c"] + x["w"] * x["w"] / F.lit(12.0))),
-        tot,
-    )
-    return e2 - e1 * e1
+    e1 = _ratio(_fold("_x.m * _x.c"), _TOT)
+    e2 = _ratio(_fold("_x.m * (_x.c * _x.c + _x.w * _x.w / 12.0D)"), _TOT)
+    return f"({e2}) - ({e1}) * ({e1})"
 
 
 def var(result: HistogramResult, variable: Optional[str] = None) -> DataFrame:
     """Variance of the piecewise-uniform distribution:
     Σ mass·(c² + w²/12) − mean²  (accessor.py:501-512)."""
-    v, part, g = _moment_fold_df(result, variable)
-    return g.select(*part, _var_expr(F.col("__a")).alias(f"{v}_var"))
+    return _moment_df(result, variable, "var", _var_expr())
 
 
 def std(result: HistogramResult, variable: Optional[str] = None) -> DataFrame:
     """Standard deviation (accessor.py:514-525)."""
-    v, part, g = _moment_fold_df(result, variable)
-    return g.select(*part, F.sqrt(_var_expr(F.col("__a"))).alias(f"{v}_std"))
+    return _moment_df(result, variable, "std", f"sqrt({_var_expr()})")
 
 
 def moment(
@@ -130,34 +139,28 @@ def moment(
     approximation, within the reference's half-bin-width test tolerance)."""
     if order < 1:
         raise ValueError("order must be >= 1")
-    v, part, g = _moment_fold_df(result, variable)
-    a = F.col("__a")
-    tot = _fold(a, lambda x: x["m"])
-
-    def powk(x):
-        e = x["c"]
-        for _ in range(order - 1):
-            e = e * x["c"]
-        return x["m"] * e
-
-    num = _fold(a, powk)
-    return g.select(*part, _ratio(num, tot).alias(f"{v}_moment{order}"))
+    powk = " * ".join(["_x.c"] * order)
+    return _moment_df(
+        result, variable, f"moment{order}",
+        _ratio(_fold(f"_x.m * ({powk})"), _TOT),
+    )
 
 
 def _cum_df(result: HistogramResult, variable: Optional[str]):
-    v, part, df = _prep(result, variable)
-    word = Window.partitionBy(*part).orderBy(id_col(v))
-    wpart = Window.partitionBy(*part)
-    cum = F.sum("__val").over(word)
-    tot = F.sum("__val").over(wpart)
-    df = df.select(
-        *part,
-        F.col(id_col(v)),
-        F.col(label_col(v)).cast("double").alias("__left"),
-        F.col(f"__{v}_width").alias("__w"),
-        F.col("__val"),
-        cum.alias("__cum"),
-        tot.alias("__tot"),
+    """Core-bin rows with the running and total integer sums per partition:
+    the flow filter plus ONE projection (the bin metadata and both window
+    sums)."""
+    v, part, df, m = _prep(result, variable, project=False)
+    pk = ", ".join(q(p) for p in part)
+    over = f"PARTITION BY {pk}" if part else ""
+    df = df.selectExpr(
+        *[q(p) for p in part],
+        q(id_col(v)),
+        f"CAST({m['label']} AS DOUBLE) AS __left",
+        f"{m['width']} AS __w",
+        "__val",
+        f"sum(__val) OVER ({over} ORDER BY {q(id_col(v))}) AS __cum",
+        f"sum(__val) OVER ({over}) AS __tot",
     )
     return v, part, df
 
@@ -180,16 +183,15 @@ def ppf(
     names = list(names) if names else [
         f"{v}_ppf" if len(qs) == 1 else f"{v}_ppf_{i}" for i, _ in enumerate(qs)
     ]
+    cumb = "CAST(__cum - __val AS DOUBLE)"
     sels = []
     for name, qq in zip(names, qs):
-        qt = F.lit(float(qq)) * F.col("__tot").cast("double")
-        cumb = (F.col("__cum") - F.col("__val")).cast("double")
-        cross = (F.col("__cum").cast("double") >= qt) & (cumb < qt)
-        interp = (
-            F.col("__left")
-            + (qt - cumb) / F.col("__val").cast("double") * F.col("__w")
-        )
-        sels.append(F.max(F.when(cross, interp)).alias(name))
+        qt = f"{dlit(qq)} * CAST(__tot AS DOUBLE)"
+        cross = f"CAST(__cum AS DOUBLE) >= {qt} AND {cumb} < {qt}"
+        interp = f"__left + ({qt} - {cumb}) / CAST(__val AS DOUBLE) * __w"
+        sels.append(F.expr(
+            f"max(CASE WHEN {cross} THEN {interp} END) AS {quote(name)}"
+        ))
     return df.groupBy(*part).agg(*sels)
 
 
@@ -217,7 +219,7 @@ def cdf(result: HistogramResult, x: float, variable: Optional[str] = None) -> Da
     """CDF at scalar ``x``: mass below the bracketing bin plus the linear
     within-bin fraction (accessor.py:486-499).  The bracketing bin and the
     fraction are resolved Python-side from the BinSpec (x is a literal)."""
-    v, part, df = _prep(result, variable)
+    v, part, df, _ = _prep(result, variable)
     spec = result.specs[v]
     bins = spec.core_bins()
     x = float(x)
@@ -233,14 +235,11 @@ def cdf(result: HistogramResult, x: float, variable: Optional[str] = None) -> Da
         j = next(i for i, b in enumerate(bins) if b.left <= x < b.right)
         b = bins[j]
         frac = (x - b.left) / (b.right - b.left)
-    below = F.sum(
-        F.when(F.col(id_col(v)) < F.lit(j), F.col("__val")).otherwise(F.lit(0))
-    )
-    at = F.sum(
-        F.when(F.col(id_col(v)) == F.lit(j), F.col("__val")).otherwise(F.lit(0))
-    )
-    tot = F.sum(F.col("__val"))
+    i = q(id_col(v))
+    below = f"sum(CASE WHEN {i} < {j} THEN __val ELSE 0 END)"
+    at = f"sum(CASE WHEN {i} = {j} THEN __val ELSE 0 END)"
     expr = (
-        below.cast("double") + at.cast("double") * F.lit(frac)
-    ) / F.nullif(tot.cast("double"), F.lit(0.0))
-    return df.groupBy(*part).agg(expr.alias(f"{v}_cdf"))
+        f"(CAST({below} AS DOUBLE) + CAST({at} AS DOUBLE) * {dlit(frac)}) / "
+        f"nullif(CAST(sum(__val) AS DOUBLE), 0.0D)"
+    )
+    return df.groupBy(*part).agg(F.expr(f"{expr} AS {q(f'{v}_cdf')}"))

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.hashing import q
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -63,10 +65,19 @@ def read_jsonl_corpus(
         .option("columnNameOfCorruptRecord", corrupt_col)
         .json(path)
     )
-    ok = F.col(corrupt_col).isNull()
-    return raw.select(
-        *[F.when(ok, F.col(f.name)).alias(f.name) for f in schema.fields],
-        F.col(corrupt_col),
+    return _quarantine(raw, schema, corrupt_col)
+
+
+def _quarantine(
+    raw: DataFrame, schema: T.StructType, corrupt_col: str
+) -> DataFrame:
+    """Null every data column on rows that carry a corrupt record: ONE
+    parsed projection (Spark SQL text), not a Column tree per field."""
+    ok = f"{q(corrupt_col)} IS NULL"
+    return raw.selectExpr(
+        *[f"CASE WHEN {ok} THEN {q(f.name)} END AS {q(f.name)}"
+          for f in schema.fields],
+        q(corrupt_col),
     )
 
 
@@ -242,8 +253,4 @@ def read_csv_corpus(
         .option("columnNameOfCorruptRecord", corrupt_col)
         .csv(path)
     )
-    ok = F.col(corrupt_col).isNull()
-    return raw.select(
-        *[F.when(ok, F.col(f.name)).alias(f.name) for f in schema.fields],
-        F.col(corrupt_col),
-    )
+    return _quarantine(raw, schema, corrupt_col)

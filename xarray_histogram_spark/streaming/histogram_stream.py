@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..binspec import BinSpec
+from ..functions.hashing import q
 from ..plans.histogram import (
     check_inputs,
     id_col,
@@ -66,15 +67,15 @@ def streaming_histogram(
         if slide
         else F.window(ts_col, window_duration)
     )
-    sdf, (bin_id,) = keep_and_bucketize(sdf, [F.col(col)], [spec], flow)
+    sdf, (bin_id,) = keep_and_bucketize(sdf, [q(col)], [spec], flow)
     base = sdf.select(
         win.alias("__w"),
         *[F.col(g) for g in group_by],
-        bin_id.alias(id_col(col)),
+        F.expr(bin_id).alias(id_col(col)),
         *([F.col(weights).alias("__wt")] if weights else []),
     )
     if weights is not None:
-        val = value_mode(weights, weight_scale).display_sum(F.col("__wt"))
+        val = F.expr(value_mode(weights, weight_scale).display_sum("__wt"))
     else:
         val = F.count(F.lit(1)).cast("double")
     agg = base.groupBy("__w", *group_by, id_col(col)).agg(val.alias("count"))
@@ -142,11 +143,11 @@ def session_histogram(
     (spec,), _ = check_inputs(sdf, [col], [spec], flow=flow)
     if sdf.isStreaming:
         sdf = sdf.withWatermark(ts_col, watermark)
-    sdf, (bin_id,) = keep_and_bucketize(sdf, [F.col(col)], [spec], flow)
+    sdf, (bin_id,) = keep_and_bucketize(sdf, [q(col)], [spec], flow)
     base = sdf.select(
         F.session_window(F.col(ts_col), gap).alias("__w"),
         *[F.col(g) for g in group_by],
-        bin_id.alias(id_col(col)),
+        F.expr(bin_id).alias(id_col(col)),
     )
     agg = base.groupBy("__w", *group_by).agg(
         F.collect_list(F.col(id_col(col))).alias("__bins")

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..binspec import BinSpec
+from ..functions.hashing import q
 from ..plans.histogram import (
     check_inputs,
     id_col,
@@ -114,8 +115,8 @@ def stateful_cumulative_histogram(
             }
         )
 
-    src, (bin_id,) = keep_and_bucketize(sdf, [F.col(col)], [spec], flow)
-    bucketized = src.select(F.col(key_col), bin_id.alias("__bin"))
+    src, (bin_id,) = keep_and_bucketize(sdf, [q(col)], [spec], flow)
+    bucketized = src.select(F.col(key_col), F.expr(bin_id).alias("__bin"))
     return bucketized.groupBy(key_col).applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
