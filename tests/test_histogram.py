@@ -154,6 +154,25 @@ def test_strcategory_axis(lineitem, con):
     assert "_flow_bin" in labels
 
 
+def test_strcategory_labels_with_backslash_and_quote(spark):
+    """Category labels are emitted verbatim: a backslash or a quote in a
+    category must not be unescaped by the SQL parser (``a\\b`` once came
+    back as ``a`` + backspace), ungrouped and grouped alike."""
+    cats = ("a\\b", "c:\\new", "it's")
+    df = spark.createDataFrame(
+        [(c, g) for g in ("g1", "g2") for c in cats], "c: string, g: string"
+    )
+    spec = StrCategory(cats)
+    flat = histogram(df, "c", spec).df.collect()
+    assert {(r["c_bins"], r["c_histogram"]) for r in flat} == {
+        (c, 2.0) for c in cats
+    }
+    grouped = histogram(df, "c", spec, group_by=["g"]).df.collect()
+    assert {(r["g"], r["c_bins"], r["c_histogram"]) for r in grouped} == {
+        (g, c, 1.0) for g in ("g1", "g2") for c in cats
+    }
+
+
 def test_log_transform_exact(orders, con):
     spec = Regular(12, 100.0, 600000.0, transform="log", exact=True)
     r = histogram(orders, "o_totalprice", spec)

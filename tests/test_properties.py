@@ -251,13 +251,13 @@ def test_scaled_weight_col_matches_numpy_formula(spark, ws):
     determinism contract), including exact .5 ties."""
     import numpy as np
 
-    from xarray_histogram_spark.plans.histogram import scaled_weight_col
+    from xarray_histogram_spark.plans.histogram import scaled_weight_expr
 
     ws = ws + [0.5e-6, -0.5e-6, 2.5e-6, -2.5e-6]  # exact ties at scale 1e6
     df = spark.createDataFrame([(float(w),) for w in ws], "w: double")
     got = [
         r[0]
-        for r in df.select(scaled_weight_col(F.col("w"), 1e6)).collect()
+        for r in df.select(F.expr(scaled_weight_expr("w", 1e6))).collect()
     ]
     x = np.array(ws, dtype=np.float64) * 1e6
     want = np.where(x >= 0, np.floor(x + 0.5), -np.floor(-x + 0.5)).astype(np.int64)

@@ -186,8 +186,15 @@ def test_stateful_bool_label_axis(spark, events_ts):
 
 
 def test_dense_fill(spark, events_ts):
+    from xarray_histogram_spark import histogramdd
+
+    # one extra event with a NULL group key: its own dense group
+    ev = events_ts.unionByName(events_ts.limit(1).select(
+        "ts", F.lit(None).cast("string").alias("event_type"),
+        F.lit(100.0).alias("value"),
+    ))
     sparse = streaming_histogram(
-        events_ts, "value", SPEC, "ts", window_duration="1 day",
+        ev, "value", SPEC, "ts", window_duration="1 day",
         group_by=["event_type"],
     )
     dense = dense_fill(sparse, "value", SPEC, group_by=["event_type"])
@@ -197,6 +204,29 @@ def test_dense_fill(spark, events_ts):
     assert dense.agg(F.sum("count")).first()[0] == sparse.agg(
         F.sum("count")
     ).first()[0]
+    # every dense row, zero rows included, equals the batch histogram's
+    windowed = ev.select(
+        F.window("ts", "1 day").alias("w"), "event_type", "value"
+    ).select(
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"), "event_type", "value",
+    )
+    batch = histogramdd(
+        windowed, ["value"], [SPEC],
+        group_by=["window_start", "window_end", "event_type"],
+    ).df
+
+    def key(rows, val):
+        return {
+            (r["window_start"], r["window_end"], r["event_type"],
+             r["value_bin"]): (r["value_bins"], r[val])
+            for r in rows
+        }
+
+    got = key(dense.collect(), "count")
+    assert len(got) == n_windows * SPEC.n
+    assert got == key(batch.collect(), "value_histogram")
+    assert sum(1 for k in got if k[2] is None) == SPEC.n
 
 
 def test_session_histogram_streaming_append(spark, events_ts):

@@ -4,8 +4,9 @@ A brand-new engine with the query and data-processing capabilities of
 Descanonge/xarray-histogram (reference at /root/reference, MIT), re-expressed
 Spark-first: bucketize is Catalyst-codegen'd column arithmetic, the fill is
 ``groupBy().agg()`` (Spark's partial+final HashAggregate replaces the
-reference's per-chunk boost fill + Dask tree reduce), dense output is a
-broadcast bin-spine join, normalization and distribution statistics are
+reference's per-chunk boost fill + Dask tree reduce), bin labels are
+literal-array lookups on the bin id and the dense fill is one generated
+spine per group (no join), normalization and distribution statistics are
 window queries.  Extensions: Structured Streaming histograms and
 LLM-data-pipeline operators (dedup, similarity search, text analysis,
 multimodal plumbing) designed for 100 TB scale.

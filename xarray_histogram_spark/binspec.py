@@ -253,17 +253,6 @@ class BinSpec:
             return "TRUE" if label else "FALSE"
         return slit(str(label))
 
-    def label_lit(self, label: Any) -> Column:
-        """The bin label as a typed Spark literal (Column twin of
-        ``label_sql_lit``)."""
-        if self.label_type == "double":
-            return F.lit(float(label)).cast("double")
-        if self.label_type == "bigint":
-            return F.lit(int(label)).cast("bigint")
-        if self.label_type == "boolean":
-            return F.lit(bool(label))
-        return F.lit(str(label))
-
     # ---- (de)serialization for sidecar metadata ----
     def to_dict(self) -> dict:
         raise NotImplementedError

@@ -727,7 +727,7 @@ def kmeans_refine(
     The reason ivf_assign skips k-means — iterative float training cannot
     be mirrored bit-exactly — is dissolved by the engine's two standing
     determinism tools: per-component **int64 quantization**
-    (``scaled_weight_col``; integer sums are addition-order independent, so
+    (``scaled_weight_expr``; integer sums are addition-order independent, so
     partial aggregation and DuckDB agree bit-for-bit) and the sequential
     **cosine fold** (functions.vectors).  A centroid component is
     ``(Σq / n) / scale`` — three IEEE ops on exact integers, identical in
@@ -922,7 +922,7 @@ def quantize_embeddings(
     NULL codes/scale/max_err — a NaN amax would otherwise poison every
     code on Spark (NaN >= 0 is true, floor(NaN) → 0) while the DuckDB
     mirror ERRORS on its NaN→INT cast: the same engine divergence
-    ``scaled_weight_col`` guards, applied row-wise here.
+    ``scaled_weight_expr`` guards, applied row-wise here.
 
     Returns (id, codes array<tinyint>, scale, max_err) where ``max_err``
     is the max absolute reconstruction error ``|x_i - code_i·scale|``.

@@ -32,11 +32,11 @@ from .plans.histogram import id_col, label_col, value_col_name
 def scaled_weight_sql(expr: str, divisor: float) -> str:
     """Half-away-from-zero int64 quantization of ``expr·divisor`` via
     sign-aware FLOOR — the exact IEEE mirror of the engine's
-    ``scaled_weight_col`` (plain ROUND would round DuckDB's binary value
+    ``scaled_weight_expr`` (plain ROUND would round DuckDB's binary value
     while Spark's F.round rounds the decimal string: subtly different on
     adversarial doubles)."""
     x = f"(CAST({expr} AS DOUBLE) * {flit(divisor)})"
-    # NaN → NULL (skipped by SUM): matches the engine's scaled_weight_col
+    # NaN → NULL (skipped by SUM): matches the engine's scaled_weight_expr
     # and the Arrow kernel; without the guard DuckDB errors on NaN→BIGINT
     return (
         f"CAST(CASE WHEN isnan({x}) THEN NULL WHEN {x} >= 0 "

@@ -11,7 +11,7 @@ so everything in SCALE.md's contraction analysis applies unchanged.
 
 Determinism (oracle-gated): ``count`` is an int64 count; ``sum`` and
 ``mean`` run on the exact-int64 quantization of ``value·10^scale``
-(``scaled_weight_col`` — identical IEEE ops in DuckDB), so sums are
+(``scaled_weight_expr`` — identical IEEE ops in DuckDB), so sums are
 order-independent and ``mean`` is one double division of two exact ints;
 ``min``/``max`` are order-independent by definition.  Empty bins are NULL
 for sum/mean/min/max and 0 for count (matching scipy, whose empty-bin

@@ -36,7 +36,7 @@ Scale notes (designed for ~100 TB inputs, 1000 executors):
   distributed sum is partitioning-dependent and can never hash-match an
   oracle bit-for-bit.  With ``weight_scale=s`` (default 6) weights are
   quantised to int64 (half-away-from-zero via sign-aware floor — see
-  ``scaled_weight_col``) and summed as integers — exact,
+  ``scaled_weight_expr``) and summed as integers — exact,
   order-independent, identical in Spark and DuckDB (int64→double casts are
   hardware-rounded identically; DuckDB's DECIMAL→DOUBLE cast is NOT
   correctly rounded, which rules the DECIMAL route out).  The quantisation
@@ -53,12 +53,12 @@ from dataclasses import dataclass, replace as dc_replace
 from functools import reduce
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..binspec import BinSpec, Integer, Regular, col_sql, sql_chain
-from ..functions.hashing import dlit, q
+from ..binspec import BinSpec, Integer, Regular, sql_chain
+from ..functions.hashing import dlit, q, sstr
 from .result import HistogramResult
 
 BinsArg = Union[int, BinSpec, Sequence[Union[int, BinSpec]]]
@@ -192,11 +192,6 @@ def scaled_weight_expr(w: str, divisor: float) -> str:
         f"WHEN {x} >= 0 THEN floor({x} + 0.5D) "
         f"ELSE -floor(-({x}) + 0.5D) END AS BIGINT)"
     )
-
-
-def scaled_weight_col(w: Column, divisor: float) -> Column:
-    """Column form of ``scaled_weight_expr``."""
-    return F.expr(scaled_weight_expr(col_sql(w), divisor))
 
 
 # ---- shared planner core --------------------------------------------------
@@ -412,31 +407,7 @@ def spark_lit(v, typ: str) -> str:
         return f"CAST({int(v)} AS BIGINT)"
     if typ == "boolean":
         return "true" if v else "false"
-    return "'" + str(v).replace("'", "''") + "'"
-
-
-def spine_df(spark: SparkSession, var: str, spec: BinSpec, flow: bool) -> DataFrame:
-    """Tiny per-axis bin table: (id, label, width, center, is_flow) — the
-    analog of the reference's bin coordinate (core.py:524-587), broadcast
-    into the streaming histograms' label join.
-
-    Built as a pure-Catalyst literal relation (``inline`` of literal structs
-    → LocalRelation after constant folding): a ``createDataFrame`` here would
-    round-trip through a Python RDD and cost seconds of Python-worker
-    startup per query, serially, for a few dozen constant rows."""
-    rows = ", ".join(
-        "named_struct("
-        f"'{id_col(var)}', CAST({b.id} AS INT), "
-        f"'{label_col(var)}', {spark_lit(b.label, spec.label_type)}, "
-        f"'__{var}_width', {spark_lit(b.width, 'double')}, "
-        f"'__{var}_center', {spark_lit(b.center, 'double')}, "
-        f"'__{var}_is_flow', {'true' if b.is_flow else 'false'})"
-        for b in spec.bins(flow)
-    )
-    # one selectExpr round trip instead of hundreds of py4j lit() calls —
-    # plan-construction latency is real overhead at interactive scale
-    return spark.range(1).selectExpr(f"inline(array({rows}))")
-
+    return sstr(str(v))
 
 
 def _axis_id_range(spec: BinSpec, flow: bool) -> tuple[int, int]:

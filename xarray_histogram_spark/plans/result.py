@@ -722,7 +722,8 @@ def adopt_dataframe(
     Plan shape: ONE bounded aggregation job collects each axis's distinct
     labels (bin-bounded — the frame is an aggregated histogram; a
     ``_ADOPT_MAX_BINS`` guard refuses degenerate inputs), then everything
-    else is literal-map projection — no join, no extra shuffle.  The
+    else is ONE projection (a label→id literal map, then the
+    ``axis_meta`` lookups at that id) — no join, no extra shuffle.  The
     returned result supports the full accessor surface (normalize, stats,
     rebin, slice, merge, export).
     """
@@ -829,28 +830,29 @@ def adopt_dataframe(
                 out.append((core[b.id], b))
         return out
 
-    def lit_map(kb: list, value_of) -> Column:
-        kvs: list[Column] = []
-        for key, b in kb:
-            kvs.append(F.lit(key))
-            kvs.append(F.lit(value_of(b)))
-        return F.create_map(*kvs)
+    # per variable, ONE label→id map keyed by the frame's labels; the
+    # width/center/is_flow are the axis_meta lookups at that id
+    from .histogram import _axis_id_range, axis_meta, id_col, spark_lit
 
-    proj: list[Column] = [F.col(c) for c in group_by]
+    proj = [q(c) for c in group_by]
     for v in variables:
-        kb = keyed_bins(v)
-        lab = F.col(f"{v}_bins")
-        proj.append(lit_map(kb, lambda b: b.id)[lab].cast("int").alias(f"{v}_bin"))
-        proj.append(lab)
-        proj.append(lit_map(kb, lambda b: float(b.width))[lab].alias(f"__{v}_width"))
-        proj.append(lit_map(kb, lambda b: float(b.center))[lab].alias(f"__{v}_center"))
-        proj.append(lit_map(kb, lambda b: bool(b.is_flow))[lab].alias(f"__{v}_is_flow"))
-    proj.append(F.col(value_col))
-    proj.append(
-        F.col(value_col).cast("bigint" if int_mode else "double").alias("__val")
-    )
+        s = specs[v]
+        lab = q(f"{v}_bins")
+        entries = ", ".join(
+            f"{spark_lit(key, s.label_type)}, {b.id}"
+            for key, b in keyed_bins(v)
+        )
+        bid = f"element_at(map({entries}), {lab})"
+        lo = _axis_id_range(s, flow)[0]
+        meta = axis_meta(v, s, flow, pos=f"({bid} - {lo})")
+        proj += [f"{bid} AS {q(id_col(v))}", lab]
+        proj += [f"{e} AS {q(n)}" for e, n in meta[1:]]
+    proj += [
+        q(value_col),
+        f"CAST({q(value_col)} AS {'BIGINT' if int_mode else 'DOUBLE'}) AS __val",
+    ]
     return HistogramResult(
-        _df=df.select(*proj),
+        _df=df.selectExpr(*proj),
         variables=variables,
         specs=specs,
         group_by=group_by,

@@ -9,10 +9,13 @@ stateful operator — no ``applyInPandasWithState`` needed; late events inside
 the watermark merge into their window's partial counts, windows finalise and
 evict when the watermark passes.
 
-Output is SPARSE (window × group × non-empty bin): a dense left join against
-the spine inside a streaming agg would need an outer stream-static join after
-aggregation, which streaming disallows — densify per emitted batch with
-``dense_fill`` in ``foreachBatch`` (the batch is tiny: windows × bins).
+Bin labels use the batch planners' one bin-metadata path: the ``axis_meta``
+literal-array lookup on the bin id, a projection after the aggregate — no
+join against a bin table.  Output is SPARSE (window × group × non-empty
+bin): densifying inside a streaming agg would need a second aggregation
+after it, which append mode disallows — densify per emitted batch with
+``dense_fill`` in ``foreachBatch`` (the batch is tiny: windows × bins),
+which is the batch planners' grouped dense fill (``finish_from_agg``).
 
 Scale notes: state size is |open windows| × |groups| × |non-empty bins|
 rows of long counters — bounded by the watermark horizon; the shuffle key is
@@ -21,7 +24,6 @@ rows of long counters — bounded by the watermark horizon; the shuffle key is
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -30,11 +32,13 @@ from pyspark.sql import functions as F
 from ..binspec import BinSpec
 from ..functions.hashing import q
 from ..plans.histogram import (
+    _axis_id_range,
+    axis_meta,
     check_inputs,
+    finish_from_agg,
     id_col,
     keep_and_bucketize,
     label_col,
-    spine_df,
     value_mode,
 )
 
@@ -79,17 +83,15 @@ def streaming_histogram(
     else:
         val = F.count(F.lit(1)).cast("double")
     agg = base.groupBy("__w", *group_by, id_col(col)).agg(val.alias("count"))
-    # label via broadcast stream-static equi-join with the literal spine
-    sp = spine_df(agg.sparkSession, col, spec, flow).select(
-        id_col(col), label_col(col)
-    )
-    return agg.join(F.broadcast(sp), id_col(col)).select(
-        F.col("__w.start").alias("window_start"),
-        F.col("__w.end").alias("window_end"),
-        *group_by,
-        F.col(id_col(col)),
-        F.col(label_col(col)),
-        F.col("count"),
+    # label: the axis_meta literal-array lookup on the aggregated bin id
+    label, _ = axis_meta(col, spec, flow)[0]
+    return agg.selectExpr(
+        "__w.start AS window_start",
+        "__w.end AS window_end",
+        *[q(g) for g in group_by],
+        q(id_col(col)),
+        f"{label} AS {q(label_col(col))}",
+        "count",
     )
 
 
@@ -152,33 +154,25 @@ def session_histogram(
     agg = base.groupBy("__w", *group_by).agg(
         F.collect_list(F.col(id_col(col))).alias("__bins")
     )
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(b.id).alias("id"),
-                spec.label_lit(b.label).alias("label"),
-                F.size(
-                    F.filter(F.col("__bins"), lambda x: x == F.lit(b.id))
-                ).cast("bigint").alias("count"),
-            )
-            for b in spec.bins(flow)
-        ]
-    )
-    return (
-        agg.select(
-            F.unix_micros(F.col("__w.start")).alias("session_start_us"),
-            F.unix_micros(F.col("__w.end")).alias("session_end_us"),
-            *group_by,
-            F.explode(cells).alias("__c"),
-        )
-        .select(
-            "session_start_us",
-            "session_end_us",
-            *group_by,
-            F.col("__c.id").alias(id_col(col)),
-            F.col("__c.label").alias(label_col(col)),
-            F.col("__c.count").alias("count"),
-        )
+    # dense cells in SQL text: one generated row per emitted bin id, its
+    # axis_meta label, and its count in the session's bin list
+    bid = q(id_col(col))
+    lo, hi = _axis_id_range(spec, flow)
+    label, _ = axis_meta(col, spec, flow)[0]
+    gsel = [q(g) for g in group_by]
+    return agg.selectExpr(
+        "unix_micros(__w.start) AS session_start_us",
+        "unix_micros(__w.end) AS session_end_us",
+        *gsel,
+        "__bins",
+        f"explode(sequence({lo}, {hi})) AS {bid}",
+    ).selectExpr(
+        "session_start_us",
+        "session_end_us",
+        *gsel,
+        bid,
+        f"{label} AS {q(label_col(col))}",
+        f"CAST(size(filter(__bins, x -> x = {bid})) AS BIGINT) AS count",
     )
 
 
@@ -243,23 +237,20 @@ def dense_fill(
     group_by: Sequence[str] = (),
 ) -> DataFrame:
     """Densify one emitted micro-batch (foreachBatch side): every
-    (window, group) × bin combination present, zero-filled."""
-    group_by = list(group_by)
+    (window, group) × bin combination present, zero-filled — the batch
+    planners' grouped dense fill (``finish_from_agg``) with the window and
+    group columns as its groups; a NULL group key is a group of its own."""
     keys = ["window_start", "window_end", *group_by]
-    sp = spine_df(batch.sparkSession, col, spec, flow).select(
-        id_col(col), label_col(col)
+    res = finish_from_agg(
+        batch.selectExpr(
+            *[q(k) for k in keys], q(id_col(col)), "`count` AS __val"
+        ),
+        [col], [spec], group_by=keys, flow=flow, density=False,
+        storage="double", int_mode=False, divisor=1.0, weighted=True,
     )
-    wins = batch.select(*keys).distinct()
-    dense = wins.crossJoin(F.broadcast(sp))
-    d, b = dense.alias("__d"), batch.alias("__b")
-    cond = reduce(
-        lambda x, y: x & y,
-        [F.col(f"__d.{k}").eqNullSafe(F.col(f"__b.{k}")) for k in keys]
-        + [F.col(f"__d.{id_col(col)}") == F.col(f"__b.{id_col(col)}")],
-    )
-    return d.join(b, cond, "left").select(
-        *[F.col(f"__d.{k}").alias(k) for k in keys],
-        F.col(f"__d.{id_col(col)}").alias(id_col(col)),
-        F.col(f"__d.{label_col(col)}").alias(label_col(col)),
-        F.coalesce(F.col("__b.count"), F.lit(0.0)).alias("count"),
+    return res._df.selectExpr(
+        *[q(k) for k in keys],
+        q(id_col(col)),
+        q(label_col(col)),
+        "__val AS count",
     )
