@@ -137,7 +137,7 @@ def test_areas_outer_product():
     from xarray_histogram_spark.plans.result import HistogramResult
 
     r = HistogramResult(
-        _df=None,
+        _agg=None,
         variables=["a", "b"],
         specs={"a": Regular(2, 0.0, 1.0), "b": Variable((0.0, 1.0, 3.0))},
         group_by=[],

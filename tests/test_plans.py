@@ -275,7 +275,9 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
     round-trip budget, a third or less of what the Column-tree builders
     made (rebin→median 1710, normalize→mean 1452, grouped 20×4×4
     slice_bins→ppf 2091, histogram_columns slice_bins→ppf 1163,
-    binned_statistic 1065, rollup_histogram 426)."""
+    binned_statistic 1065, rollup_histogram 426).  ``scale`` changes
+    only the spec, so the dense frame of a scaled 50-bin grouped
+    histogram is one build (three per-bin Column literal maps made 1307)."""
     from xarray_histogram_spark import (
         binned_statistic, histogram2d, histogram_columns, histogramdd,
         rollup_histogram,
@@ -285,6 +287,8 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
 
     qty = Regular(40, 1.0, 51.0)
     q20 = Regular(20, 1.0, 51.0)
+    h50 = histogram(lineitem, "l_quantity", Regular(50, 1.0, 51.0),
+                    group_by=["l_returnflag"])
     builds = {
         "histogram_rebin_median": (570, lambda: histogram(
             lineitem, "l_quantity", qty, weights="l_extendedprice",
@@ -305,6 +309,7 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
             ("count", "sum", "mean"), group_by=["l_returnflag"])),
         "rollup_histogram": (140, lambda: rollup_histogram(
             lineitem, "l_quantity", q20, ["l_returnflag", "l_linestatus"])),
+        "scale_df": (130, lambda: h50.scale(2.0).df),
     }
     for name, (budget, build) in builds.items():
         build()
@@ -316,7 +321,7 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
 def test_stream_and_adopt_build_py4j_budget(spark, sf_dir, tmp_path):
     """The session histogram's dense cells, ``dense_fill`` and
     ``adopt_dataframe`` are Spark SQL text over the ``axis_meta`` lookups
-    and ``finish_from_agg``'s grouped fill, not per-bin Column trees or
+    and ``dense_frame``'s grouped fill, not per-bin Column trees or
     Column literal maps: the second build of each (50-bin axis) stays
     under a fixed round-trip budget, a tenth of what the per-bin Column
     builders made for session_histogram (6388) and well below their
@@ -637,19 +642,38 @@ def test_mirror_plan_regression_histogram_columns(lineitem):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_stats_consume_sparse_aggregate(lineitem):
-    """Statistics read the sparse pre-dense aggregate: a grouped median's
-    plan must NOT contain the dense-fill stages (no pack-map
-    ObjectHashAggregate, no Generate of the literal spine) — one bucketize
-    aggregation plus the window/final reduction only."""
+@pytest.mark.parametrize(
+    "chain", ["fresh", "rebin", "slice_bins", "scale", "remove_flow"]
+)
+def test_stats_consume_sparse_aggregate(lineitem, chain):
+    """Statistics read the sparse aggregate, however the result was
+    reached: a grouped median's plan must NOT contain the dense-fill
+    stages (no pack-map ObjectHashAggregate, no Generate of the literal
+    spine) — one bucketize aggregation (plus a transform's re-sum) and
+    the window/final reduction only."""
     r = histogram(
-        lineitem, "l_quantity", Regular(25, 1.0, 51.0),
-        group_by=["l_returnflag"],
+        lineitem, "l_quantity", Regular(24, 1.0, 51.0),
+        group_by=["l_returnflag"], flow=chain == "remove_flow",
     )
+    r = {
+        "fresh": lambda: r, "rebin": lambda: r.rebin(2),
+        "slice_bins": lambda: r.slice_bins(5, 20),
+        "scale": lambda: r.scale(2.0), "remove_flow": r.remove_flow,
+    }[chain]()
     p = plan_of(r.median())
     assert "ObjectHashAggregate" not in p
     assert "Generate" not in p
     assert "Join" not in p
+
+
+def test_grouped_rebin_fills_once(lineitem):
+    """A grouped ``rebin`` re-sums the sparse aggregate and densifies the
+    result once: exactly one Generate in its plan."""
+    r = histogram(
+        lineitem, "l_quantity", Regular(24, 1.0, 51.0),
+        group_by=["l_returnflag"],
+    ).rebin(2)
+    assert len(re.findall(r"^\(\d+\) Generate", plan_of(r.df), re.M)) == 1
 
 
 def test_curate_single_shuffle(spark, sf_dir):

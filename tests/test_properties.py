@@ -507,7 +507,7 @@ def test_adopt_regular_roundtrip_property(spark, n, lo, span):
     df = spark.createDataFrame([(float(v),) for v in vals], "x double")
     h = histogram(df, "x", spec, flow=True)
     a = adopt_dataframe(h.df)
-    rows = a._df.collect()
+    rows = a._dense.collect()
     assert rows
     for r in rows:
         assert r["x_bin"] is not None

@@ -438,6 +438,35 @@ def test_slice_bins_multi_axis_flow(spark, lineitem):
     assert s.project("l_discount").df.count() == 5
 
 
+@pytest.mark.parametrize("case", ["slice_bins", "remove_flow", "preserve_groups"])
+def test_hidden_bins_keep_group_present(spark, case):
+    """A group whose whole mass lies in bins the result does not emit —
+    outside a slice, in flow bins after ``remove_flow``, or in the flow
+    bins ``preserve_groups`` aggregates — still shows one zero row per
+    emitted bin and a NULL statistic, while the other group keeps its
+    mass."""
+    spec = Regular(4, 0.0, 4.0)
+    if case == "slice_bins":
+        rows = [("A", 0.2), ("A", 1.7), ("B", 2.5), ("B", 3.2)]
+    else:
+        rows = [("A", -1.0), ("A", 9.0), ("B", 2.5), ("B", 3.2)]
+    df = spark.createDataFrame(rows, "g string, x double")
+    if case == "slice_bins":
+        r = histogram(df, "x", spec, group_by=["g"]).slice_bins(2, 4)
+    elif case == "remove_flow":
+        r = histogram(df, "x", spec, group_by=["g"], flow=True).remove_flow()
+    else:
+        r = histogram(df, "x", spec, group_by=["g"], preserve_groups=True)
+    n = 2 if case == "slice_bins" else 4
+    got = sorted((x["g"], x["x_bin"], x["x_histogram"]) for x in r.df.collect())
+    assert [t for t in got if t[0] == "A"] == [("A", i, 0.0) for i in range(n)]
+    assert sum(t[2] for t in got if t[0] == "B") == 2.0
+    for stat in ("median", "mean"):
+        out = {x["g"]: x[f"x_{stat}"] for x in getattr(r, stat)().collect()}
+        assert set(out) == {"A", "B"}, stat
+        assert out["A"] is None and out["B"] is not None, stat
+
+
 # ---------------------------------------------------------------------------
 # foreign-histogram adoption (reference accessor.py:49-130 interop)
 # ---------------------------------------------------------------------------
@@ -577,7 +606,7 @@ def test_adopt_ulp_drift_spacing(spark):
     df = spark.createDataFrame(rows, "x double")
     h = histogram(df, "x", spec, flow=True)
     a = adopt_dataframe(h.df)
-    rows_out = a._df.collect()
+    rows_out = a._dense.collect()
     assert rows_out
     for r in rows_out:
         assert r["x_bin"] is not None, r

@@ -154,8 +154,8 @@ def test_stats_invariant_under_normalize_and_follow_scale(spark, lineitem):
 def test_stats_keep_all_flow_groups(spark):
     """A flow=True group whose every row lands in flow bins must still get
     a (NULL-statistic) row — the dense result carries its zero-mass core
-    bins, and the sparse fast path must not be used in flow mode (it would
-    drop the group entirely)."""
+    bins, so a statistic read from the aggregate must keep a group whose
+    rows are all off the core."""
     rows = [("A", 100.0), ("A", -5.0), ("B", 0.5), ("B", 0.7)]
     df = spark.createDataFrame(rows, "g string, x double")
     h = histogram(df, "x", Regular(4, 0.0, 1.0), group_by=["g"], flow=True)
@@ -167,18 +167,22 @@ def test_stats_keep_all_flow_groups(spark):
 
 
 def test_stats_sparse_and_dense_paths_agree(spark, lineitem, tmp_path):
-    """A reloaded result has no sparse aggregate (_sparse=None → dense
-    statistics path); a fresh result uses the sparse fast path.  Every
-    statistic must be bit-identical across the two paths."""
-    from xarray_histogram_spark import read_result, write_result
+    """Statistics follow one row rule however a result was reached: one
+    row per (group, other-axis core cell) of the dense result, NULL when
+    that slice holds no mass — the DuckDB oracle's rule.  A fresh result,
+    a no-op ``slice_bins`` and a write/read round trip collect identical
+    rows: on a grouped 1-D histogram, and on a grouped 2-D one with an
+    empty (group, y-bin) cell, where they also equal the oracle."""
+    import duckdb
+    import pandas as pd
+
+    from xarray_histogram_spark import histogramdd, read_result, write_result
 
     h = histogram(lineitem, "l_quantity", Regular(12, 1.0, 51.0),
                   group_by=["l_returnflag"])
-    assert h._sparse is not None
     path = str(tmp_path / "h")
     write_result(h, path)
     r = read_result(spark, path)
-    assert r._sparse is None
     for stat in ("median", "mean", "std"):
         fresh = sorted(map(str, getattr(h, stat)().collect()))
         reload = sorted(map(str, getattr(r, stat)().collect()))
@@ -186,3 +190,27 @@ def test_stats_sparse_and_dense_paths_agree(spark, lineitem, tmp_path):
     fresh_ppf = sorted(map(str, h.ppf(0.9).collect()))
     reload_ppf = sorted(map(str, r.ppf(0.9).collect()))
     assert fresh_ppf == reload_ppf
+
+    # group A never reaches y-bin 1: the (A, y=1) slice is empty
+    pdf = pd.DataFrame(
+        [("A", 0.5, 0.5), ("A", 2.5, 0.2), ("B", 1.5, 0.7),
+         ("B", 3.5, 1.5), ("B", 0.2, 1.1)],
+        columns=["g", "x", "y"],
+    )
+    specs = [Regular(4, 0.0, 4.0), Regular(2, 0.0, 2.0)]
+    h2 = histogramdd(spark.createDataFrame(pdf), ["x", "y"], specs,
+                     group_by=["g"])
+    path2 = str(tmp_path / "h2")
+    write_result(h2, path2)
+    results = (h2, h2.slice_bins(0, 4, "x"), read_result(spark, path2))
+    con = duckdb.connect()
+    con.register("t", pdf)
+    for kind, kw in (("mean", {}), ("median", {}), ("ppf", {"q": 0.25})):
+        def stat(res):
+            return res.ppf(0.25, "x") if kind == "ppf" else getattr(res, kind)("x")
+
+        got = [sorted(map(str, stat(res).collect())) for res in results]
+        assert got[0] == got[1] == got[2], kind
+        assert len(got[0]) == 4, kind
+        assert_matches_sql(stat(h2), stats_oracle_sql(
+            kind, "t", ["x", "y"], specs, "x", group_by=["g"], **kw), con)

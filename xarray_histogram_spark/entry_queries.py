@@ -2884,7 +2884,7 @@ def _coords_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "lineitem"), ["l_tax", "l_quantity"], _COORD_SPECS,
         flow=True,
     )
-    d = h._df
+    d = h._dense
     return d.select(
         "l_tax_bin", "l_quantity_bin", "l_tax_bins", "l_quantity_bins",
         F.col("__l_tax_width").alias("tax_width"),

@@ -575,9 +575,9 @@ def histogramdd(
         agg, cols, specs, group_by=group_by, flow=flow, density=density,
         storage=storage, int_mode=vm.int_mode, divisor=vm.divisor,
         weighted=weights is not None,
-        # preserve_groups aggregates flow ids so all-flow groups survive
-        # densely; the sparse fast path would drop them (see finish_from_agg)
-        sparse_ok=not (preserve_groups and group_by),
+        # preserve_groups aggregates flow ids: hidden rows that keep an
+        # all-flow group present
+        hidden=bool(preserve_groups and group_by),
     )
 
 
@@ -593,56 +593,89 @@ def finish_from_agg(
     int_mode: bool,
     divisor: float,
     weighted: bool,
-    sparse_ok: bool = True,
+    hidden: bool = False,
 ) -> HistogramResult:
-    """Shared finish stage: (group, bin-ids, __val) aggregate → dense
-    labelled result.  Used by both the pure-SQL path and the
-    Arrow/numpy fill path (plans.fast_fill) — identical output.
-
-    ``sparse_ok``: whether downstream statistics may read the sparse
-    aggregate directly instead of the dense result.  The fast path is
-    only attached when ``flow`` is off AND the caller did not aggregate
-    flow ids for group preservation: in either of those modes a group (or
-    the global row set) whose mass sits ENTIRELY in flow bins survives
-    into the dense output as zero-mass rows — the statistics then emit a
-    NULL-statistic row for it — but the core-bin filter on the sparse
-    aggregate would drop it with no row at all.
-
-    Dense output (one ``selectExpr`` with the display value column; a
-    density adds its window step):
-    - Ungrouped: the aggregate must already hold one row per spine bin —
-      every caller unions the zero spine in before its aggregation
-      (``spine_ids_zero``), or re-aggregates an already dense result.  The
-      bin labels/widths/centers attach as O(1) literal-array lookups on the
-      id (``axis_meta_exprs``), so NO join and NO broadcast of a computed
-      aggregate appears in the ungrouped plan at all.
-    - Grouped: pack each group's sparse bins into a map, then expand every
-      group over the dense spine — ONE scan of the input and no self-join
-      (a groups-distinct + join-back plan scans and aggregates the raw
-      data twice; at 100 TB the scan dominates, so this halves the query).
-      The spine is one ``explode(sequence(0, Π extents − 1))`` per group
-      (a Generate in the same stage: no join, no broadcast); each row's
-      per-axis position is a div/mod of that index, its id the position
-      plus the axis's lowest emitted id, and its labels/widths/centers/
-      flow flags the ``axis_meta_exprs`` literal-array lookups at that
-      position — O(Σ extents) literals in the plan whatever the product
-      of the extents.  The map is keyed by the FLAT bin id
-      (``flat_key``), not a struct: the unavoidable linear map probe then
-      does cheap long compares instead of struct compares."""
+    """Shared finish stage: wrap a (group, bin-ids, __val) aggregate as a
+    HistogramResult — used by the pure-SQL path, the Arrow/numpy fill
+    path (plans.fast_fill) and the streaming dense fill alike.  Builds no
+    DataFrame: ``dense_frame`` labels and densifies the aggregate when
+    the result is read.  An ungrouped aggregate must already hold one row
+    per spine bin — every caller unions the zero spine in before its
+    aggregation (``spine_ids_zero``) — so it is ``complete``.  ``hidden``:
+    the aggregate may hold rows outside the emitted bins."""
     cols = list(cols)
-    specs = list(specs)
-    group_by = list(group_by)
-    gsel = [q(g) for g in group_by]
-    if group_by:
+    return HistogramResult(
+        _agg=agg,
+        variables=cols,
+        specs=dict(zip(cols, specs)),
+        group_by=list(group_by),
+        value_col=value_col_name(cols, density),
+        density=density,
+        flow=flow,
+        int_mode=int_mode,
+        divisor=divisor,
+        # unweighted int64 counts show the exact sum itself
+        exact=not weighted and storage == "int64",
+        complete=not group_by,
+        hidden=hidden,
+        norm=tuple(cols) if density else (),
+    )
+
+
+def dense_frame(r: HistogramResult) -> DataFrame:
+    """THE dense labelled frame of a result: group keys, ids, labels,
+    ``__val``, widths, centers, flow flags and the display value column,
+    one row per emitted cell of every group of the aggregate ``r._agg``.
+
+    - ``r.complete`` (the aggregate already holds every cell): a
+      visible-row filter (only when the aggregate may hold hidden rows),
+      then ONE projection with the bin labels/widths/centers attached as
+      O(1) literal-array lookups on the id (``axis_meta_exprs``) — NO join
+      and NO broadcast of a computed aggregate.
+    - Otherwise (grouped): pack each group's visible bins into a map, then
+      expand every group over the dense spine — ONE scan of the input and
+      no self-join (a groups-distinct + join-back plan scans and
+      aggregates the raw data twice; at 100 TB the scan dominates, so
+      this halves the query).  The spine is one ``explode(sequence(0,
+      Π extents − 1))`` per group (a Generate in the same stage: no join,
+      no broadcast); each row's per-axis position is a div/mod of that
+      index, its id the position plus the axis's lowest emitted id, and
+      its labels/widths/centers/flow flags the ``axis_meta_exprs``
+      literal-array lookups at that position — O(Σ extents) literals in
+      the plan whatever the product of the extents.  The map is keyed by
+      the FLAT bin id (``flat_key``), not a struct: the unavoidable linear
+      map probe then does cheap long compares instead of struct compares.
+      Hidden rows never enter the map (a slice's shifted ids would break
+      the flat key's injectivity), but their group still expands.
+
+    The display value column is the given one (reloaded/adopted frames),
+    the density over ``r.norm`` (a second step: its window total runs over
+    the projected columns), or the display of ``__val``."""
+    cols = list(r.variables)
+    specs = [r.specs[c] for c in cols]
+    gsel = [q(g) for g in r.group_by]
+    if r.complete:
+        # NOTE on a rejected "optimization": coalescing this post-shuffle
+        # tail to one task (fewer near-empty task dispatches) measured
+        # neutral on the 1-D mirror and consistently ~20 ms SLOWER on the
+        # along-dim mirror across interleaved A/B runs — the extra plan
+        # node buys nothing locally and single-threads the (remote at real
+        # scale) shuffle fetch, so the tail keeps shuffle.partitions tasks.
+        src = r._agg.where(r._visible(cols)) if r.hidden else r._agg
+        per_axis = [axis_meta_exprs(c, s, r.flow) for c, s in zip(cols, specs)]
+        val = "__val"
+        id_sel = [q(id_col(c)) for c in cols]
+    else:
         key = flat_key([q(id_col(c)) for c in cols], specs)
-        packed = agg.groupBy(*group_by).agg(F.expr(
-            f"map_from_entries(collect_list(struct({key} AS key, "
-            "__val AS value))) AS __m"
+        entry = f"struct({key} AS key, __val AS value)"
+        if r.hidden:
+            entry = f"CASE WHEN {r._visible(cols)} THEN {entry} END"
+        packed = r._agg.groupBy(*r.group_by).agg(F.expr(
+            f"map_from_entries(collect_list({entry})) AS __m"
         ))
-        exts = [len(s.bins(flow)) for s in specs]
-        total = math.prod(exts)
+        exts = [len(s.bins(r.flow)) for s in specs]
         src = packed.selectExpr(
-            *gsel, "__m", f"explode(sequence(0, {total - 1})) AS __j"
+            *gsel, "__m", f"explode(sequence(0, {math.prod(exts) - 1})) AS __j"
         )
         # row-major position of each axis within the dense index __j
         ids, per_axis = [], []
@@ -650,35 +683,31 @@ def finish_from_agg(
             stride = math.prod(exts[i + 1:])
             j = "__j" if stride == 1 else f"(__j div {stride})"
             p = f"CAST({j} % {exts[i]} AS INT)"
-            lo = _axis_id_range(s, flow)[0]
+            lo = _axis_id_range(s, r.flow)[0]
             ids.append(f"{p} + {lo}" if lo else p)
-            per_axis.append(axis_meta_exprs(c, s, flow, pos=p))
-        zero = "CAST(0 AS BIGINT)" if int_mode else "0.0D"
+            per_axis.append(axis_meta_exprs(c, s, r.flow, pos=p))
+        zero = "CAST(0 AS BIGINT)" if r.int_mode else "0.0D"
         val = f"coalesce(element_at(__m, {flat_key(ids, specs)}), {zero})"
         id_sel = [f"{i} AS {q(id_col(c))}" for i, c in zip(ids, cols)]
-    else:
-        # NOTE on a rejected "optimization": coalescing this post-shuffle
-        # tail to one task (fewer near-empty task dispatches) measured
-        # neutral on the 1-D mirror and consistently ~20 ms SLOWER on the
-        # along-dim mirror across interleaved A/B runs — the extra plan
-        # node buys nothing locally and single-threads the (remote at real
-        # scale) shuffle fetch, so the tail keeps shuffle.partitions tasks.
-        src = agg
-        per_axis = [axis_meta_exprs(c, s, flow) for c, s in zip(cols, specs)]
-        val = "__val"
-        id_sel = [q(id_col(c)) for c in cols]
+    labels = [
+        q(label_col(c)) if label_col(c) in r.given else a[0]
+        for c, a in zip(cols, per_axis)
+    ]
     # column order: groups, ids, labels, __val, widths, centers, is_flow
     sel = [
-        *gsel, *id_sel, *[a[0] for a in per_axis], f"{val} AS __val",
+        *gsel, *id_sel, *labels, f"{val} AS __val",
         *[a[1] for a in per_axis], *[a[2] for a in per_axis],
         *[a[3] for a in per_axis],
     ]
-    return _finish_value_col(
-        src, sel, val, cols, specs, group_by=group_by, flow=flow,
-        density=density, storage=storage, int_mode=int_mode,
-        divisor=divisor, weighted=weighted,
-        sparse=agg if (sparse_ok and not flow) else None,
-    )
+    vname = q(r.value_col)
+    if r.value_col in r.given:
+        return src.selectExpr(*sel, vname)
+    if r.norm:
+        part = r.group_by + [id_col(c) for c in cols if c not in r.norm]
+        pdf = _density_expr(r.norm, part, r.int_mode, r.divisor)
+        return src.selectExpr(*sel).selectExpr("*", f"{pdf} AS {vname}")
+    vis = int_display(val, r.divisor) if r.int_mode and not r.exact else val
+    return src.selectExpr(*sel, f"{vis} AS {vname}")
 
 
 def _density_expr(
@@ -847,69 +876,23 @@ def histogram_columns(
     )
     u = data.unionByName(spine)
     val = "count(1) - 1" if vsrc is None else f"coalesce(sum(__v), {vm.zero_sql})"
-    # the (column, bin) pair from the fused key (this projection folds
-    # into the aggregate's results), then the labelled projection: column
-    # label and bin metadata are literal-array lookups
+    # the (column label, bin) pair from the fused key: this projection
+    # folds into the aggregate's results (the column label is the
+    # result's group key, so it belongs to the aggregate)
+    dim_labels = ", ".join(spark_lit(c, "string") for c in cols)
     agg = u.groupBy("__fk").agg(F.expr(f"{val} AS __val")).selectExpr(
-        f"CAST(__fk div {width} AS INT) AS __d",
+        f"element_at(array({dim_labels}), CAST(__fk div {width} AS INT) + 1) "
+        f"AS {q(dim_name)}",
         f"CAST(__fk % {width} - 1 AS INT) AS {q(bin_id)}",
         "__val",
     )
-    dim_labels = ", ".join(spark_lit(c, "string") for c in cols)
-    per_axis = axis_meta_exprs(var_name, spec, flow)
-    sel = [
-        f"element_at(array({dim_labels}), __d + 1) AS {q(dim_name)}",
-        q(bin_id), per_axis[0], "__val", *per_axis[1:],
-    ]
-    return _finish_value_col(
-        agg, sel, "__val", [var_name], [spec], group_by=[dim_name],
-        flow=flow, density=density, storage=storage, int_mode=vm.int_mode,
+    res = finish_from_agg(
+        agg, [var_name], [spec], group_by=[dim_name], flow=flow,
+        density=density, storage=storage, int_mode=vm.int_mode,
         divisor=vm.divisor, weighted=weights is not None,
     )
-
-
-def _finish_value_col(
-    src: DataFrame,
-    sel: list[str],
-    val: str,
-    cols: list[str],
-    specs: list[BinSpec],
-    *,
-    group_by: list[str],
-    flow: bool,
-    density: bool,
-    storage: str,
-    int_mode: bool,
-    divisor: float,
-    weighted: bool,
-    sparse: Optional[DataFrame] = None,
-) -> HistogramResult:
-    """Shared tail: the dense labelled projection ``sel`` of ``src`` (which
-    defines ``__val`` as the expression ``val``) plus the display value
-    column, in ONE ``selectExpr``; a density's window total is a second
-    step over the projected columns.  Wrapped as a HistogramResult."""
-    vname = value_col_name(cols, density)
-    if density:
-        out = src.selectExpr(*sel).selectExpr(
-            "*", f"{_density_expr(cols, group_by, int_mode, divisor)} AS {q(vname)}"
-        )
-    else:
-        # unweighted int64 counts show the exact sum itself
-        exact = not weighted and storage == "int64"
-        vis = int_display(val, divisor) if int_mode and not exact else val
-        out = src.selectExpr(*sel, f"{vis} AS {q(vname)}")
-    return HistogramResult(
-        _df=out,
-        variables=cols,
-        specs={c: s for c, s in zip(cols, specs)},
-        group_by=group_by,
-        value_col=vname,
-        density=density,
-        flow=flow,
-        int_mode=int_mode,
-        divisor=divisor,
-        _sparse=sparse,
-    )
+    # every (column, bin) cell is in the aggregate (the spine above)
+    return dc_replace(res, complete=True)
 
 
 def quantile_edges(

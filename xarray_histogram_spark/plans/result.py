@@ -8,21 +8,31 @@ through a naming convention + coordinate attrs; here the wrapper carries the
 BinSpec objects directly (and ``sources.io`` persists them as a JSON sidecar
 next to parquet, the analog of NetCDF attrs).
 
-The wrapped ``_df`` keeps internal ``__<var>_width`` / ``__<var>_is_flow``
-columns so normalization and statistics never re-join the spine; the public
-``df`` drops them.  All algebra on bin coordinates is metadata-only — no
-touch of the aggregated data (matches accessor.py:355-380: transforming a
-coordinate relabels it, the counts are untouched).
+A result holds ONE piece of data: the sparse aggregate ``_agg`` (group
+keys, ``<var>_bin`` ids, the exact ``__val``).  Everything else is
+metadata — the specs and a few flags — so ``remove_flow``, ``apply_func``,
+``scale`` and ``normalize`` build no DataFrame (matches accessor.py:355-380:
+transforming a coordinate relabels it, the counts are untouched).  The
+labelled dense frame is built once, by ``plans.histogram.dense_frame``,
+when ``df``, a handoff or ``write_result`` asks for it, and cached per
+result object; it carries internal ``__<var>_width`` / ``__<var>_center``
+/ ``__<var>_is_flow`` columns and ``__val``, which the public ``df`` drops.
+
+Hidden rows: the aggregate may hold rows whose ids lie outside the bins
+the current specs emit (flow bins after ``remove_flow``, bins outside a
+slice, the flow ids ``preserve_groups`` aggregates).  They add no visible
+mass, but keep their group present: a group whose mass lies entirely in
+hidden bins shows zero rows and a NULL statistic.
 """
 
 from __future__ import annotations
 
 import dataclasses
 from dataclasses import dataclass, replace
-from functools import reduce
+from functools import cached_property
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..binspec import BinSpec, Variable, sql_chain
@@ -31,7 +41,9 @@ from ..functions.hashing import q
 
 @dataclass
 class HistogramResult:
-    _df: DataFrame
+    # group keys + ``<var>_bin`` ids + ``__val`` (exact int64 or raw
+    # double), plus the ``given`` columns
+    _agg: DataFrame
     variables: list[str]
     specs: dict[str, BinSpec]
     group_by: list[str]
@@ -42,21 +54,35 @@ class HistogramResult:
     # sum) with a display divisor, or raw double (int_mode=False)
     int_mode: bool = True
     divisor: float = 1.0
-    # the sparse pre-dense aggregate (group keys + bin ids + __val) the dense
-    # _df was finished from, when available.  Statistics consume it directly:
-    # zero-mass bins contribute exactly nothing to every statistic (integer
-    # cumulative sums are unchanged; a 0·x term cannot change an IEEE fold),
-    # so stats can skip the dense-fill stages (grouped pack-map + spine
-    # expansion) entirely.  Invalidated (None) by transforms that change the
-    # data rows (slice_bins, merge); metadata-only transforms keep it.
-    _sparse: Optional[DataFrame] = None
+    # the display value is the int64 ``__val`` itself (unweighted int64
+    # storage), not its double
+    exact: bool = False
+    # ``_agg`` holds every emitted cell of every group, so the dense frame
+    # needs no fill (ungrouped results — the spine is unioned in — and
+    # ``histogram_columns``, reloaded and adopted frames)
+    complete: bool = False
+    # ``_agg`` may hold hidden rows (ids outside the emitted bins)
+    hidden: bool = False
+    # the variables a ``normalize`` divided by (the density's partition is
+    # the group keys plus the other variables' ids)
+    norm: tuple[str, ...] = ()
+    # columns of ``_agg`` the dense frame takes as they are: a reloaded or
+    # adopted frame's labels and value column (an adopted label can differ
+    # from its inferred spec's by an ulp; a pdf is not normalized twice)
+    given: tuple[str, ...] = ()
 
-    # ---- public DataFrame (internal metadata columns dropped) ----
-    @property
+    # ---- the labelled dense frame, built once per result ----
+    @cached_property
+    def _dense(self) -> DataFrame:
+        from .histogram import dense_frame
+
+        return dense_frame(self)
+
+    @cached_property
     def df(self) -> DataFrame:
-        return self._df.drop(
-            *[c for c in self._df.columns if c.startswith("__")]
-        )
+        """The public dense result (internal ``__`` columns dropped)."""
+        d = self._dense
+        return d.drop(*[c for c in d.columns if c.startswith("__")])
 
     def _one_var(self, variable: Optional[str]) -> str:
         if variable is None:
@@ -66,6 +92,16 @@ class HistogramResult:
         if variable not in self.variables:
             raise ValueError(f"unknown variable {variable!r}")
         return variable
+
+    def _visible(self, variables: Sequence[str]) -> str:
+        """Spark SQL predicate: the ``variables``' ids are emitted bins."""
+        from .histogram import _axis_id_range, id_col
+
+        ranges = [(v, *_axis_id_range(self.specs[v], self.flow)) for v in variables]
+        return sql_chain("AND", [
+            f"{q(id_col(v))} >= {lo} AND {q(id_col(v))} <= {hi}"
+            for v, lo, hi in ranges
+        ])
 
     # ---- coordinate algebra (pure metadata; accessor.py:148-250) ----
     def bins(self, variable: Optional[str] = None, flow: bool = True) -> list:
@@ -118,22 +154,18 @@ class HistogramResult:
 
     # ---- flow removal (accessor.py:278-305) ----
     def remove_flow(self, variables: Optional[Sequence[str]] = None) -> "HistogramResult":
+        """The flow bins of ``variables`` stop being emitted; their rows
+        stay in the aggregate as hidden rows."""
         vs = list(variables) if variables is not None else list(self.variables)
         if not vs:
             raise ValueError("remove_flow: no variables given")
-        conds = []
         new_specs = dict(self.specs)
         for v in vs:
             s = self.specs[v]
-            conds.append(F.col(f"{v}_bin").between(F.lit(0), F.lit(s.n - 1)))
-            fields = {}
-            if "underflow" in {f.name for f in dataclasses.fields(s) if f.init}:
-                fields["underflow"] = False
-            if "overflow" in {f.name for f in dataclasses.fields(s) if f.init}:
-                fields["overflow"] = False
+            init = {f.name for f in dataclasses.fields(s) if f.init}
+            fields = {k: False for k in ("underflow", "overflow") if k in init}
             new_specs[v] = replace(s, **fields) if fields else s
-        out = self._df.where(reduce(lambda a, b: a & b, conds))
-        return replace(self, _df=out, specs=new_specs)
+        return replace(self, specs=new_specs, hidden=True)
 
     # ---- normalization (accessor.py:252-276, core.py:649-663) ----
     def normalize(self, variables: Optional[Sequence[str]] = None) -> "HistogramResult":
@@ -145,22 +177,12 @@ class HistogramResult:
         for v in vs:
             if v not in self.variables:
                 raise ValueError(f"unknown variable {v!r}")
-        other = [v for v in self.variables if v not in vs]
-        part = self.group_by + [f"{v}_bin" for v in other]
-        from .histogram import _density_expr
-
-        pdf = _density_expr(vs, part, self.int_mode, self.divisor)
         new_name = (
             self.value_col[: -len("_histogram")] + "_pdf"
             if self.value_col.endswith("_histogram")
             else self.value_col + "_pdf"
         )
-        # one step: every column but the old value, plus the pdf
-        out = self._df.selectExpr(
-            *[q(c) for c in self._df.columns if c != self.value_col],
-            f"{pdf} AS {q(new_name)}",
-        )
-        return replace(self, _df=out, value_col=new_name, density=True)
+        return replace(self, value_col=new_name, density=True, norm=tuple(vs))
 
     # ---- coordinate transforms (accessor.py:355-395): metadata-only ----
     def apply_func(
@@ -170,10 +192,11 @@ class HistogramResult:
         **kwargs,
     ) -> "HistogramResult":
         """Relabel one variable's bin coordinate by applying ``func`` to its
-        edges — equivalent to having histogrammed ``func(x)``.  Data columns
-        are untouched; only the label column and the spec change.  ``func``
-        must be strictly increasing on the edge range.  Extra ``kwargs`` are
-        forwarded to ``func`` (reference accessor.py:354-380 signature:
+        edges — equivalent to having histogrammed ``func(x)``.  Data is
+        untouched; only the spec changes (labels, widths and centers come
+        from it when the dense frame is built).  ``func`` must be strictly
+        increasing on the edge range.  Extra ``kwargs`` are forwarded to
+        ``func`` (reference accessor.py:354-380 signature:
         ``apply_func(func, variable, **kwargs)``)."""
         v = self._one_var(variable)
         s = self.specs[v]
@@ -183,26 +206,12 @@ class HistogramResult:
         new_edges = [float(func(e, **kwargs)) for e in old_edges]
         if any(b <= a for a, b in zip(new_edges, new_edges[1:])):
             raise ValueError("func must be strictly increasing over the edges")
-        new_spec = Variable(
+        new_specs = dict(self.specs)
+        new_specs[v] = Variable(
             tuple(new_edges), underflow=s.underflow, overflow=s.overflow
         )
-        mapping = {b.id: b for b in new_spec.bins(flow=self.flow)}
-
-        def lit_map(value_of) -> Column:
-            kvs: list[Column] = []
-            for bid, b in mapping.items():
-                kvs.append(F.lit(bid))
-                kvs.append(F.lit(value_of(b)))
-            return F.create_map(*kvs)
-
-        out = (
-            self._df.withColumn(f"{v}_bins", lit_map(lambda b: b.label)[F.col(f"{v}_bin")])
-            .withColumn(f"__{v}_width", lit_map(lambda b: float(b.width))[F.col(f"{v}_bin")])
-            .withColumn(f"__{v}_center", lit_map(lambda b: float(b.center))[F.col(f"{v}_bin")])
-        )
-        new_specs = dict(self.specs)
-        new_specs[v] = new_spec
-        return replace(self, _df=out, specs=new_specs)
+        given = tuple(c for c in self.given if c != f"{v}_bins")
+        return replace(self, specs=new_specs, given=given)
 
     def scale(self, factor: float, variable: Optional[str] = None) -> "HistogramResult":
         """Scale a bin coordinate by a constant factor (accessor.py:382-395)."""
@@ -210,18 +219,29 @@ class HistogramResult:
             raise ValueError("factor must be > 0 (monotonicity)")
         return self.apply_func(lambda e: e * factor, variable)
 
+    def _reaggregated(
+        self, agg: DataFrame, variables: Sequence[str], specs: dict
+    ) -> "HistogramResult":
+        """A result over the re-aggregated ``agg`` (labels and value column
+        computed again, from ``specs``)."""
+        from .histogram import value_col_name
+
+        return replace(
+            self, _agg=agg, variables=list(variables), specs=specs,
+            value_col=value_col_name(variables, False), given=(),
+        )
+
     # ---- rebin (boost UHI-style adjacent-bin merge) ----
     def rebin(self, factor: int, variable: Optional[str] = None) -> "HistogramResult":
         """Merge ``factor`` adjacent bins along one variable — boost's rebin.
-        Runs on the aggregated result only (raw data never re-read): integer
-        id remap + re-sum + the shared dense finish.  The new axis is a
-        ``Variable`` over every ``factor``-th OLD edge, so the label doubles
-        survive EXACTLY (recomputing ``lo + i·span/(n/f)`` could differ in
-        the last ulp from the original edge values).  Flow bins pass
-        through unchanged.  Rebin before ``normalize`` — merging pdf bins
-        is not mass-preserving."""
+        Runs on the aggregate only (raw data never re-read): integer id
+        remap + one re-sum.  The new axis is a ``Variable`` over every
+        ``factor``-th OLD edge, so the label doubles survive EXACTLY
+        (recomputing ``lo + i·span/(n/f)`` could differ in the last ulp
+        from the original edge values).  Flow bins pass through unchanged
+        (hidden ids land on hidden flow ids).  Rebin before ``normalize`` —
+        merging pdf bins is not mass-preserving."""
         from ..binspec import Regular, Variable as _Var
-        from .histogram import finish_from_agg
 
         v = self._one_var(variable)
         if self.density:
@@ -245,40 +265,19 @@ class HistogramResult:
             f"WHEN {old} >= {s.n} THEN {new_spec.n} "
             f"ELSE floor({old} / {f}) END AS INT)"
         )
-        agg = self._resum(self.variables, {v: new_id})
-        return finish_from_agg(
-            agg,
-            self.variables,
-            [new_spec if vv == v else self.specs[vv] for vv in self.variables],
-            group_by=self.group_by,
-            flow=self.flow,
-            density=False,
-            storage=self._storage(),
-            int_mode=self.int_mode,
-            divisor=self.divisor,
-            weighted=(self.divisor != 1.0) or not self.int_mode,
-        )
-
-    def _storage(self) -> str:
-        """The value column's storage family (int64 for bigint counts)."""
-        dt = dict(self._df.dtypes).get(self.value_col)
-        return "int64" if dt == "bigint" else "double"
-
-    def _resum(self, variables: Sequence[str], new_ids=None) -> DataFrame:
-        """Re-aggregate ``__val`` by the group keys and the ``<var>_bin``
-        ids of ``variables`` — the aggregated result only, never raw data.
-        ``new_ids`` maps a variable to a Spark SQL expression replacing its
-        id."""
-        new_ids = new_ids or {}
-        names = [f"{v}_bin" for v in variables]
-        ids = [
-            f"{new_ids[v]} AS {q(n)}" if v in new_ids else q(n)
-            for v, n in zip(variables, names)
-        ]
-        return (
-            self._df.selectExpr(*[q(g) for g in self.group_by], *ids, "__val")
+        names = [f"{c}_bin" for c in self.variables]
+        agg = (
+            self._agg.selectExpr(
+                *[q(g) for g in self.group_by],
+                *[f"{new_id} AS {q(n)}" if c == v else q(n)
+                  for c, n in zip(self.variables, names)],
+                "__val",
+            )
             .groupBy(*self.group_by, *names)
             .agg(F.expr("sum(__val) AS __val"))
+        )
+        return self._reaggregated(
+            agg, self.variables, {**self.specs, v: new_spec}
         )
 
     # ---- bin-range slicing (boost UHI h[a:b]) ----
@@ -290,12 +289,13 @@ class HistogramResult:
         out-of-slice content is DROPPED, not accumulated into flow.  (The
         boost-histogram DEFAULT slice ``h[a:b]`` accumulates cropped
         content into the flow bins instead — not what this implements.)
-        Metadata-only + a filter on the aggregated result: the new axis is
-        a ``Variable`` over the original edge doubles (exact labels), ids
-        remapped to 0-based.  The result is flow-free, so flow rows of
-        EVERY axis are dropped (the sliced axis's flow bins are outside
-        any core slice; the other axes' flow rows would otherwise survive
-        into a flow=False result and break dense export/re-finish)."""
+        One projection of the aggregate's id: the new axis is a
+        ``Variable`` over the original edge doubles (exact labels), ids
+        shifted to 0-based, so the ids outside the slice fall outside the
+        new axis — hidden rows.  The result is flow-free, so the flow rows
+        of EVERY axis become hidden rows too.  (A filter on a shifted id
+        the dense frame pushes into the scan costs the same as one on the
+        original id.)"""
         from ..binspec import Regular as _Reg, Variable as _Var
         from .histogram import id_col as _id
 
@@ -307,28 +307,18 @@ class HistogramResult:
             raise TypeError("slice_bins needs an interval axis")
         if not (0 <= lo < hi <= s.n):
             raise ValueError(f"need 0 <= lo < hi <= {s.n}")
-        edges = s.edges()
-        new_spec = _Var(tuple(edges[lo : hi + 1]))
-        ranges = [(v, lo, hi - 1)] + [
-            (o, 0, self.specs[o].n - 1)
-            for o in self.variables if o != v and self.flow
-        ]
-        kept = self._df.where(sql_chain("AND", [
-            f"{q(_id(c))} >= {a} AND {q(_id(c))} <= {b}" for c, a, b in ranges
-        ]))
-        out = kept.withColumn(_id(v), F.expr(f"CAST({q(_id(v))} - {lo} AS INT)"))
-        specs = dict(self.specs)
-        specs[v] = new_spec
-        return replace(self, _df=out, specs=specs, flow=False, _sparse=None)
+        out = self._agg.withColumn(_id(v), F.expr(f"{q(_id(v))} - {lo}"))
+        specs = {**self.specs, v: _Var(tuple(s.edges()[lo : hi + 1]))}
+        return replace(self, _agg=out, specs=specs, flow=False, hidden=True)
 
     # ---- projection (boost Histogram.project / summing out dims) ----
     def project(self, variables) -> "HistogramResult":
         """Marginalize onto ``variables``: sum the other axes out — boost's
         ``Histogram.project`` / the reference's xarray ``sum`` over bin
-        dims.  Runs on the aggregated result only (raw data never re-read):
-        drop the projected-out id columns, re-sum, shared dense finish.
+        dims.  One re-sum of the aggregate (raw data never re-read) by the
+        kept ids; the hidden rows of the dropped axes add zero.
 
-        Whatever bins the result HOLDS for the dropped axes collapse into
+        Whatever bins the result EMITS for the dropped axes collapse into
         the sums: with ``flow=True`` that is the axes' full content (boost
         semantics — the projection equals a direct histogram of the kept
         variables); with ``flow=False`` the dropped axes' keep filters
@@ -348,27 +338,23 @@ class HistogramResult:
             return self
         if not keep:
             raise ValueError("project needs at least one kept variable")
-        from .histogram import finish_from_agg
-
-        agg = self._resum(keep)
-        return finish_from_agg(
-            agg,
-            keep,
-            [self.specs[v] for v in keep],
-            group_by=self.group_by,
-            flow=self.flow,
-            density=False,
-            storage=self._storage(),
-            int_mode=self.int_mode,
-            divisor=self.divisor,
-            weighted=(self.divisor != 1.0) or not self.int_mode,
-        )
+        val = "__val"
+        if self.hidden:
+            dropped = [v for v in self.variables if v not in want]
+            zero = "CAST(0 AS BIGINT)" if self.int_mode else "0.0D"
+            val = f"CASE WHEN {self._visible(dropped)} THEN __val ELSE {zero} END"
+        agg = self._agg.groupBy(
+            *self.group_by, *[f"{v}_bin" for v in keep]
+        ).agg(F.expr(f"sum({val}) AS __val"))
+        return self._reaggregated(agg, keep, {v: self.specs[v] for v in keep})
 
     # ---- histogram addition (xarray DataArray arithmetic / boost `+`) ----
     def merge(self, *others: "HistogramResult") -> "HistogramResult":
         """Sum histograms with identical schema (specs, grouping, flow) —
         the reference's DataArray addition; the merge of per-shard or
-        incremental histograms.  Exact in int_mode (integer addition)."""
+        incremental histograms.  One re-sum of the unioned aggregates;
+        exact in int_mode (integer addition).  Labels every operand takes
+        as given stay given."""
         for o in others:
             if (
                 o.variables != self.variables
@@ -381,24 +367,22 @@ class HistogramResult:
                 raise ValueError("merge needs identical histogram schemas")
             if o.density or self.density:
                 raise ValueError("merge normalized histograms before normalize, not after")
-        keys = self.group_by + [f"{v}_bin" for v in self.variables]
-        keep = keys + [f"{v}_bins" for v in self.variables] + [
-            c for c in self._df.columns if c.startswith("__") and c != "__val"
+        rs = (self, *others)
+        labels = [
+            f"{v}_bins" for v in self.variables
+            if all(f"{v}_bins" in r.given for r in rs)
         ]
-        unioned = self._df
+        keys = self.group_by + [f"{v}_bin" for v in self.variables] + labels
+        sel = [q(k) for k in keys] + ["__val"]
+        unioned = self._agg.selectExpr(*sel)
         for o in others:
-            unioned = unioned.unionByName(o._df)
-        summed = unioned.groupBy(*keep).agg(F.sum("__val").alias("__val"))
-        vis = F.col("__val")
-        if self.int_mode and self.value_col.endswith("_histogram"):
-            # recompute the visible value like the planner does
-            storage_int = dict(self._df.dtypes).get(self.value_col) == "bigint"
-            if not storage_int:
-                vis = vis.cast("double")
-                if self.divisor != 1.0:
-                    vis = vis / F.lit(self.divisor)
-        out = summed.withColumn(self.value_col, vis)
-        return replace(self, _df=out, _sparse=None)
+            unioned = unioned.unionByName(o._agg.selectExpr(*sel))
+        summed = unioned.groupBy(*keys).agg(F.expr("sum(__val) AS __val"))
+        return replace(
+            self, _agg=summed, given=tuple(labels),
+            complete=all(r.complete for r in rs),
+            hidden=any(r.hidden for r in rs),
+        )
 
     def __add__(self, other: "HistogramResult") -> "HistogramResult":
         return self.merge(other)
@@ -713,7 +697,7 @@ def adopt_dataframe(
     - every other column is taken as a group (loop-dim) key — except
       ``__``-prefixed columns, this engine's internal-metadata convention,
       which are DROPPED and rebuilt (so ``read_result``'s lost-sidecar
-      fallback adopts this engine's own full ``_df`` parquet cleanly);
+      fallback adopts this engine's own full dense-frame parquet cleanly);
     - a ``<var>_bin`` integer id column is OPTIONAL: when present it
       fixes category order; ids are (re)derived from the labels via the
       inferred spec either way, so foreign id conventions cannot corrupt
@@ -722,9 +706,10 @@ def adopt_dataframe(
     Plan shape: ONE bounded aggregation job collects each axis's distinct
     labels (bin-bounded — the frame is an aggregated histogram; a
     ``_ADOPT_MAX_BINS`` guard refuses degenerate inputs), then everything
-    else is ONE projection (a label→id literal map, then the
+    else is projections (a label→id literal map; the dense frame adds the
     ``axis_meta`` lookups at that id) — no join, no extra shuffle.  The
-    returned result supports the full accessor surface (normalize, stats,
+    frame's labels and value column are kept as given.  The returned
+    result supports the full accessor surface (normalize, stats,
     rebin, slice, merge, export).
     """
     internal = [c for c in df.columns if c.startswith("__")]
@@ -831,8 +816,8 @@ def adopt_dataframe(
         return out
 
     # per variable, ONE label→id map keyed by the frame's labels; the
-    # width/center/is_flow are the axis_meta lookups at that id
-    from .histogram import _axis_id_range, axis_meta, id_col, spark_lit
+    # dense frame reads width/center/is_flow from axis_meta at that id
+    from .histogram import id_col, spark_lit
 
     proj = [q(c) for c in group_by]
     for v in variables:
@@ -842,17 +827,13 @@ def adopt_dataframe(
             f"{spark_lit(key, s.label_type)}, {b.id}"
             for key, b in keyed_bins(v)
         )
-        bid = f"element_at(map({entries}), {lab})"
-        lo = _axis_id_range(s, flow)[0]
-        meta = axis_meta(v, s, flow, pos=f"({bid} - {lo})")
-        proj += [f"{bid} AS {q(id_col(v))}", lab]
-        proj += [f"{e} AS {q(n)}" for e, n in meta[1:]]
+        proj += [f"element_at(map({entries}), {lab}) AS {q(id_col(v))}", lab]
     proj += [
         q(value_col),
         f"CAST({q(value_col)} AS {'BIGINT' if int_mode else 'DOUBLE'}) AS __val",
     ]
     return HistogramResult(
-        _df=df.selectExpr(*proj),
+        _agg=df.selectExpr(*proj),
         variables=variables,
         specs=specs,
         group_by=group_by,
@@ -861,4 +842,7 @@ def adopt_dataframe(
         flow=flow,
         int_mode=int_mode,
         divisor=1.0,
+        exact=int_mode and isinstance(vdt, T.LongType),
+        complete=True,
+        given=(*[f"{v}_bins" for v in variables], value_col),
     )

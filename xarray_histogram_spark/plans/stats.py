@@ -37,43 +37,51 @@ from .histogram import axis_meta, id_col, label_col
 from .result import HistogramResult
 
 
-def _prep(result: HistogramResult, variable: Optional[str], project: bool = True):
-    """Strip flow rows (all variables) in ONE filter, resolve the target
-    var + partition keys.  Returns ``(v, part, df, meta)``: ``meta`` maps
-    label/width/center of ``v`` to Spark SQL text over ``df``.
+def _prep(result: HistogramResult, variable: Optional[str]):
+    """Resolve the target var ``v`` and the partition keys, and pick the
+    rows a statistic reads.  Returns ``(v, part, df, core, meta)``:
+    ``core`` is the core-bin test of ``v`` — a row failing it (flow or
+    hidden bin) keeps its partition but adds no mass, and ``meta``'s
+    label/width/center lookups run only under it (in ANSI mode
+    ``element_at`` must never read past its array).
 
-    When the result still carries its sparse pre-dense aggregate
-    (``_sparse``: group keys + bin ids + ``__val``), the statistic reads
-    THAT instead of the densely-filled ``_df``: zero-mass bins contribute
-    exactly nothing to any statistic here (integer cumulative/total sums
-    are unchanged; a ``0·x`` term cannot change an IEEE fold), so the
-    dense-fill stages — the grouped pack-map aggregation + spine expansion
-    — drop out of the statistic's plan entirely.  The target variable's
-    label/width/center are then O(1) literal-array lookups on the bin id
-    (same doubles the dense path carries, from the same BinSpec): projected
-    as columns when ``project``, else left as expressions for the
-    caller's own projection."""
+    One row rule, the oracle's: one output row per (group, other-axis
+    core cell) of the dense result, NULL when that slice holds no mass
+    (accessor.py:415-417 flow strip).  Results with one variable, and
+    complete results, read the aggregate itself: zero-mass cells
+    contribute exactly nothing to any statistic here (integer
+    cumulative/total sums are unchanged; a ``0·x`` term cannot change an
+    IEEE fold), so the dense fill drops out of the plan.  Grouped
+    multi-variable results read the dense frame: their aggregate may
+    miss a (group, other-axis cell) entirely."""
     v = result._one_var(variable)
     spec = result.specs[v]
     if isinstance(spec, (IntCategory, StrCategory)):
         raise ValueError(f"statistics need an interval axis, {v!r} is categorical")
-    df = result._sparse if result._sparse is not None else result._df
-    # core-bin filter FIRST (accessor.py:415-417 flow strip); on the sparse
-    # path it also guards the literal-array meta lookup below
-    df = df.where(sql_chain("AND", [
-        f"{q(id_col(c))} >= 0 AND {q(id_col(c))} <= {result.specs[c].n - 1}"
+    core = {
+        c: f"{q(id_col(c))} >= 0 AND {q(id_col(c))} <= {result.specs[c].n - 1}"
         for c in result.variables
-    ]))
-    names = (label_col(v), f"__{v}_width", f"__{v}_center")
-    meta = dict(zip(("label", "width", "center"), [q(n) for n in names]))
-    if result._sparse is not None:
-        exprs = axis_meta(v, spec, False)[:3]
-        if project:
-            df = df.selectExpr("*", *[f"{e} AS {q(n)}" for e, n in exprs])
-        else:
-            meta = dict(zip(meta, [e for e, _ in exprs]))
+    }
     part = result.group_by + [id_col(c) for c in result.variables if c != v]
-    return v, part, df, meta
+    keys = ("label", "width", "center")
+    if len(result.variables) > 1 and not result.complete:
+        df = result._dense
+        meta = dict(zip(keys, map(q, (
+            label_col(v), f"__{v}_width", f"__{v}_center"
+        ))))
+    else:
+        df = result._agg
+        meta = dict(zip(keys, [e for e, _ in axis_meta(v, spec, False)[:3]]))
+        if label_col(v) in result.given:
+            meta["label"] = q(label_col(v))
+    others = [core[c] for c in result.variables if c != v]
+    if others:
+        df = df.where(sql_chain("AND", others))
+    return v, part, df, core[v], meta
+
+
+def _when(core: str, e: str, other: str = "NULL") -> str:
+    return f"CASE WHEN {core} THEN {e} ELSE {other} END"
 
 
 def _fold(term: str) -> str:
@@ -83,12 +91,15 @@ def _fold(term: str) -> str:
 
 
 def _moment_fold_df(result: HistogramResult, variable: Optional[str]):
-    v, part, df, m = _prep(result, variable)
-    g = df.groupBy(*part).agg(F.expr(
-        f"array_sort(collect_list(struct({q(id_col(v))} AS i, "
-        f"CAST(__val AS DOUBLE) AS m, {m['center']} AS c, "
-        f"{m['width']} AS w))) AS __a"
+    v, part, df, core, m = _prep(result, variable)
+    # off-core rows collect as NULL, which collect_list skips
+    entry = _when(core, (
+        f"struct({q(id_col(v))} AS i, CAST(__val AS DOUBLE) AS m, "
+        f"{m['center']} AS c, {m['width']} AS w)"
     ))
+    g = df.groupBy(*part).agg(
+        F.expr(f"array_sort(collect_list({entry})) AS __a")
+    )
     return v, part, g
 
 
@@ -147,20 +158,20 @@ def moment(
 
 
 def _cum_df(result: HistogramResult, variable: Optional[str]):
-    """Core-bin rows with the running and total integer sums per partition:
-    the flow filter plus ONE projection (the bin metadata and both window
-    sums)."""
-    v, part, df, m = _prep(result, variable, project=False)
+    """The rows ``_prep`` picks with their mass, the bin metadata and the
+    running and total integer sums per partition, in ONE projection."""
+    v, part, df, core, m = _prep(result, variable)
+    mass = _when(core, "__val", "0")
     pk = ", ".join(q(p) for p in part)
     over = f"PARTITION BY {pk}" if part else ""
     df = df.selectExpr(
         *[q(p) for p in part],
         q(id_col(v)),
-        f"CAST({m['label']} AS DOUBLE) AS __left",
-        f"{m['width']} AS __w",
-        "__val",
-        f"sum(__val) OVER ({over} ORDER BY {q(id_col(v))}) AS __cum",
-        f"sum(__val) OVER ({over}) AS __tot",
+        f"CAST({_when(core, m['label'])} AS DOUBLE) AS __left",
+        f"{_when(core, m['width'])} AS __w",
+        f"{mass} AS __val",
+        f"sum({mass}) OVER ({over} ORDER BY {q(id_col(v))}) AS __cum",
+        f"sum({mass}) OVER ({over}) AS __tot",
     )
     return v, part, df
 
@@ -219,7 +230,8 @@ def cdf(result: HistogramResult, x: float, variable: Optional[str] = None) -> Da
     """CDF at scalar ``x``: mass below the bracketing bin plus the linear
     within-bin fraction (accessor.py:486-499).  The bracketing bin and the
     fraction are resolved Python-side from the BinSpec (x is a literal)."""
-    v, part, df, _ = _prep(result, variable)
+    v, part, df, core, _ = _prep(result, variable)
+    mass = _when(core, "__val", "0")
     spec = result.specs[v]
     bins = spec.core_bins()
     x = float(x)
@@ -236,10 +248,10 @@ def cdf(result: HistogramResult, x: float, variable: Optional[str] = None) -> Da
         b = bins[j]
         frac = (x - b.left) / (b.right - b.left)
     i = q(id_col(v))
-    below = f"sum(CASE WHEN {i} < {j} THEN __val ELSE 0 END)"
-    at = f"sum(CASE WHEN {i} = {j} THEN __val ELSE 0 END)"
+    below = f"sum(CASE WHEN {i} < {j} THEN {mass} ELSE 0 END)"
+    at = f"sum(CASE WHEN {i} = {j} THEN {mass} ELSE 0 END)"
     expr = (
         f"(CAST({below} AS DOUBLE) + CAST({at} AS DOUBLE) * {dlit(frac)}) / "
-        f"nullif(CAST(sum(__val) AS DOUBLE), 0.0D)"
+        f"nullif(CAST(sum({mass}) AS DOUBLE), 0.0D)"
     )
     return df.groupBy(*part).agg(F.expr(f"{expr} AS {q(f'{v}_cdf')}"))

@@ -2,11 +2,12 @@
 
 The reference round-trips bin metadata through DataArray coordinate attrs so
 results survive NetCDF save/load (accessor.py:25-47, changelog.md:2-4); the
-Spark analog is the full internal DataFrame (including the exact-int value
+Spark analog is the result's dense frame (including the exact-int value
 and width/center/flow metadata columns) written as parquet with a
 ``_binspec.json`` sidecar carrying the specs + wrapper state.  A reloaded
 result supports the whole accessor surface (normalize, stats, relabels)
-without recomputation."""
+without recomputation: the parquet is its complete aggregate, its labels
+and value column taken as given."""
 
 from __future__ import annotations
 
@@ -59,7 +60,8 @@ def write_result(result: HistogramResult, path: str, mode: str = "overwrite") ->
             "write_result does not support mode='append' (duplicate bin "
             "rows double-count on reload); merge() the results and save"
         )
-    result._df.write.mode(mode).parquet(path)
+    dense = result._dense
+    dense.write.mode(mode).parquet(path)
     meta = {
         "variables": result.variables,
         "specs": {v: result.specs[v].to_dict() for v in result.variables},
@@ -70,9 +72,7 @@ def write_result(result: HistogramResult, path: str, mode: str = "overwrite") ->
         "int_mode": result.int_mode,
         "divisor": result.divisor,
     }
-    _sidecar_write(
-        result._df.sparkSession, path, json.dumps(meta, indent=2)
-    )
+    _sidecar_write(dense.sparkSession, path, json.dumps(meta, indent=2))
 
 
 def read_result(spark: SparkSession, path: str) -> HistogramResult:
@@ -94,14 +94,20 @@ def read_result(spark: SparkSession, path: str) -> HistogramResult:
         return adopt_dataframe(spark.read.parquet(path))
     meta = json.loads(raw)
     df = spark.read.parquet(path)
+    variables = list(meta["variables"])
+    value_col = meta["value_col"]
     return HistogramResult(
-        _df=df,
-        variables=list(meta["variables"]),
+        _agg=df,
+        variables=variables,
         specs={v: BinSpec.from_dict(d) for v, d in meta["specs"].items()},
         group_by=list(meta["group_by"]),
-        value_col=meta["value_col"],
+        value_col=value_col,
         density=meta["density"],
         flow=meta["flow"],
         int_mode=meta["int_mode"],
         divisor=meta["divisor"],
+        exact=meta["int_mode"] and meta["divisor"] == 1.0
+        and dict(df.dtypes)[value_col] == "bigint",
+        complete=True,
+        given=(*[f"{v}_bins" for v in variables], value_col),
     )

@@ -15,7 +15,7 @@ join against a bin table.  Output is SPARSE (window × group × non-empty
 bin): densifying inside a streaming agg would need a second aggregation
 after it, which append mode disallows — densify per emitted batch with
 ``dense_fill`` in ``foreachBatch`` (the batch is tiny: windows × bins),
-which is the batch planners' grouped dense fill (``finish_from_agg``).
+which is the batch planners' grouped dense fill (``dense_frame``).
 
 Scale notes: state size is |open windows| × |groups| × |non-empty bins|
 rows of long counters — bounded by the watermark horizon; the shuffle key is
@@ -238,7 +238,7 @@ def dense_fill(
 ) -> DataFrame:
     """Densify one emitted micro-batch (foreachBatch side): every
     (window, group) × bin combination present, zero-filled — the batch
-    planners' grouped dense fill (``finish_from_agg``) with the window and
+    planners' grouped dense fill (``dense_frame``) with the window and
     group columns as its groups; a NULL group key is a group of its own."""
     keys = ["window_start", "window_end", *group_by]
     res = finish_from_agg(
@@ -248,7 +248,7 @@ def dense_fill(
         [col], [spec], group_by=keys, flow=flow, density=False,
         storage="double", int_mode=False, divisor=1.0, weighted=True,
     )
-    return res._df.selectExpr(
+    return res._dense.selectExpr(
         *[q(k) for k in keys],
         q(id_col(col)),
         q(label_col(col)),
