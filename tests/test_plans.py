@@ -289,27 +289,34 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
     q20 = Regular(20, 1.0, 51.0)
     h50 = histogram(lineitem, "l_quantity", Regular(50, 1.0, 51.0),
                     group_by=["l_returnflag"])
+
+    def read_twice(r, stat):
+        return stat(r), r.df
+
     builds = {
-        "histogram_rebin_median": (570, lambda: histogram(
+        "histogram_rebin_median": (570, lambda: read_twice(histogram(
             lineitem, "l_quantity", qty, weights="l_extendedprice",
-            group_by=["l_returnflag"]).rebin(2).median()),
-        "histogram2d_normalize_mean": (480, lambda: histogram2d(
+            group_by=["l_returnflag"]).rebin(2), lambda r: r.median())),
+        "histogram2d_normalize_mean": (480, lambda: read_twice(histogram2d(
             lineitem, "l_quantity", "l_discount",
-            [q20, Regular(10, 0.0, 0.1)]).normalize().mean("l_quantity")),
-        "histogramdd_slice_ppf": (690, lambda: histogramdd(
+            [q20, Regular(10, 0.0, 0.1)]).normalize(),
+            lambda r: r.mean("l_quantity"))),
+        "histogramdd_slice_ppf": (690, lambda: read_twice(histogramdd(
             lineitem, ["l_quantity", "l_discount", "l_tax"],
             [q20, Regular(4, 0.0, 0.1), Regular(4, 0.0, 0.08)],
             group_by=["l_returnflag"],
-        ).slice_bins(5, 15, "l_quantity").ppf(0.25, "l_quantity")),
-        "histogram_columns_slice_ppf": (380, lambda: histogram_columns(
-            lineitem, ["l_discount", "l_tax"], Regular(20, 0.0, 0.1),
-        ).slice_bins(5, 15).ppf(0.25)),
+        ).slice_bins(5, 15, "l_quantity"),
+            lambda r: r.ppf(0.25, "l_quantity"))),
+        "histogram_columns_slice_ppf": (380, lambda: read_twice(
+            histogram_columns(
+                lineitem, ["l_discount", "l_tax"], Regular(20, 0.0, 0.1),
+            ).slice_bins(5, 15), lambda r: r.ppf(0.25))),
         "binned_statistic": (350, lambda: binned_statistic(
             lineitem, "l_quantity", qty, "l_extendedprice",
             ("count", "sum", "mean"), group_by=["l_returnflag"])),
         "rollup_histogram": (140, lambda: rollup_histogram(
             lineitem, "l_quantity", q20, ["l_returnflag", "l_linestatus"])),
-        "scale_df": (130, lambda: h50.scale(2.0).df),
+        "scale_df": (130, lambda: read_twice(h50.scale(2.0), lambda r: r.df)),
     }
     for name, (budget, build) in builds.items():
         build()

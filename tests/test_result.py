@@ -277,6 +277,98 @@ def test_to_xarray_reference_conventions(spark, lineitem):
     assert at["right_edge"] == 51.0
 
 
+# ---------------------------------------------------------------------------
+# a result read twice shares one cached aggregate
+# ---------------------------------------------------------------------------
+
+
+def _cache_state(spark) -> tuple:
+    """(CacheManager entries, persistent RDDs) of the session."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.numCachedEntries(), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _leaves(plan) -> list:
+    """Leaf operator names of an executed plan, through AQE's wrapper and
+    its query stages."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _leaves(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _leaves(plan.plan())
+    kids = plan.children()
+    if kids.isEmpty():
+        return [name]
+    return [n for i in range(kids.size()) for n in _leaves(kids.apply(i))]
+
+
+def _grouped_2d(lineitem):
+    return histogramdd(
+        lineitem, ["l_quantity", "l_discount"],
+        [Regular(10, 1.0, 51.0), Regular(4, 0.0, 0.1)],
+        group_by=["l_returnflag"],
+    )
+
+
+def test_second_read_shares_cached_aggregate(spark, lineitem):
+    """A result read once leaves the CacheManager untouched and its
+    statistic scans the source.  The second read persists the aggregate:
+    after ``s = r.median(); r.to_numpy()`` the statistic executes over the
+    cache the handoff filled (its plan's only leaves are cache scans) and
+    collects the rows it collects with no cache at all."""
+    import gc
+
+    gc.collect()
+    base = _cache_state(spark)
+    once = _grouped_2d(lineitem).median("l_quantity")
+    want = sorted(map(str, once.collect()))
+    assert _cache_state(spark) == base
+    leaves = _leaves(once._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" not in leaves, leaves
+    assert any(n.startswith("Scan") for n in leaves), leaves
+
+    r = _grouped_2d(lineitem)
+    s = r.median("l_quantity")
+    r.to_numpy()
+    assert _cache_state(spark) == (base[0] + 1, base[1] + 1)
+    got = sorted(map(str, s.collect()))
+    leaves = _leaves(s._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in leaves, leaves
+    assert set(leaves) <= {"InMemoryTableScan", "ReusedExchange"}, leaves
+    spark.catalog.clearCache()
+    assert sorted(map(str, r.median("l_quantity").collect())) == got == want
+
+
+def test_cached_aggregate_lifetime(spark, lineitem):
+    """The cache lives exactly as long as the aggregate DataFrame object.
+    ``h`` and ``h.normalize()`` share it (each read twice, one entry), so
+    it stays until the last of them is gone; then the CacheManager and the
+    persistent RDDs are back at their baseline, and a statistic built
+    while the cache lived collects the same rows from the source."""
+    import gc
+
+    want = sorted(map(str, _grouped_2d(lineitem).normalize().median(
+        "l_quantity").collect()))
+    gc.collect()
+    base = _cache_state(spark)
+    h = _grouped_2d(lineitem)
+    h.mean("l_quantity").collect()
+    h.to_numpy()
+    n = h.normalize()
+    s = n.median("l_quantity")
+    n.to_pandas()
+    cached = (base[0] + 1, base[1] + 1)
+    assert _cache_state(spark) == cached
+    del h
+    gc.collect()
+    assert _cache_state(spark) == cached
+    del n
+    gc.collect()
+    assert _cache_state(spark) == base
+    assert sorted(map(str, s.collect())) == want
+    assert _cache_state(spark) == base
+
+
 def test_rebin_metamorphic(spark, lineitem):
     """rebin(f) == reshape-and-sum of the dense array; labels are the exact
     old edges; flow bins pass through; invalid factors / pdf rebin raise."""

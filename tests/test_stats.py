@@ -214,3 +214,13 @@ def test_stats_sparse_and_dense_paths_agree(spark, lineitem, tmp_path):
         assert len(got[0]) == 4, kind
         assert_matches_sql(stat(h2), stats_oracle_sql(
             kind, "t", ["x", "y"], specs, "x", group_by=["g"], **kw), con)
+
+    # raw double sums (weight_scale=None) take the same row rule
+    hw = histogramdd(spark.createDataFrame(pdf), ["x", "y"], specs,
+                     weights="y", weight_scale=None, group_by=["g"])
+    path3 = str(tmp_path / "hw")
+    write_result(hw, path3)
+    for stat in ("mean", "median"):
+        got = [sorted(map(str, getattr(res, stat)("x").collect()))
+               for res in (hw, read_result(spark, path3))]
+        assert got[0] == got[1] and len(got[0]) == 4, stat

@@ -23,12 +23,26 @@ the current specs emit (flow bins after ``remove_flow``, bins outside a
 slice, the flow ids ``preserve_groups`` aggregates).  They add no visible
 mass, but keep their group present: a group whose mass lies entirely in
 hidden bins shows zero rows and a NULL statistic.
+
+Reads share one aggregate: a public read is a handoff (``to_pandas``/
+``to_numpy``/``to_xarray``), a statistic, ``write_result`` or ``df``.
+The second read of a result persists ``_agg``; whichever read executes
+first after that fills the cache, and every other read of the result —
+and of the results ``remove_flow``/``normalize``/``apply_func``/``scale``
+return, which share ``_agg`` — scans the aggregate, not the source.  A
+result read once keeps its plan and never touches the cache.  The cache
+is released (``unpersist``) when the ``_agg`` DataFrame object is
+garbage-collected, i.e. when the last result over it is gone.  Stale
+source: from the second read on, a result answers from the aggregate its
+first executed read after the persist computed, so data changed in the
+source since then does not show; re-run the histogram to see it.
 """
 
 from __future__ import annotations
 
 import dataclasses
-from dataclasses import dataclass, replace
+import weakref
+from dataclasses import dataclass, field, replace
 from functools import cached_property
 from typing import Callable, Optional, Sequence
 
@@ -70,6 +84,19 @@ class HistogramResult:
     # adopted frame's labels and value column (an adopted label can differ
     # from its inferred spec's by an ulp; a pdf is not normalized twice)
     given: tuple[str, ...] = ()
+    # public reads of this result so far (see ``_read``)
+    _reads: int = field(default=0, init=False, repr=False, compare=False)
+
+    def _read(self) -> None:
+        """Count one public read (see the module docstring).  The second
+        persists ``_agg`` (once per DataFrame object; a streaming frame
+        cannot be cached) and binds the release to that object, not to
+        this result, so results sharing ``_agg`` share the cache."""
+        self._reads += 1
+        agg = self._agg
+        if self._reads == 2 and not agg.is_cached and not agg.isStreaming:
+            agg.persist()
+            weakref.finalize(agg, agg._jdf.unpersist).atexit = False
 
     # ---- the labelled dense frame, built once per result ----
     @cached_property
@@ -79,10 +106,15 @@ class HistogramResult:
         return dense_frame(self)
 
     @cached_property
-    def df(self) -> DataFrame:
-        """The public dense result (internal ``__`` columns dropped)."""
+    def _df(self) -> DataFrame:
         d = self._dense
         return d.drop(*[c for c in d.columns if c.startswith("__")])
+
+    @property
+    def df(self) -> DataFrame:
+        """The public dense result (internal ``__`` columns dropped)."""
+        self._read()
+        return self._df
 
     def _one_var(self, variable: Optional[str]) -> str:
         if variable is None:
@@ -435,8 +467,9 @@ class HistogramResult:
         """Collect the result ordered by (group keys, bin ids) — flow bins
         first/last like the reference's coordinates (underflow leads,
         overflow trails, core.py:524-587)."""
+        self._read()
         order = self.group_by + [f"{v}_bin" for v in self.variables]
-        return self.df.orderBy(*order).toPandas()
+        return self._df.orderBy(*order).toPandas()
 
     def _dense_pivot(self):
         """(values ndarray, dim names, coords dict).  Shape = (sorted
@@ -448,8 +481,7 @@ class HistogramResult:
         silently dropped."""
         import numpy as np
 
-        bid = [f"{v}_bin" for v in self.variables]
-        pdf = self.df.orderBy(*self.group_by, *bid).toPandas()
+        pdf = self.to_pandas()
         labels = {v: self.specs[v].labels(flow=self.flow) for v in self.variables}
         ids = {
             v: [b.id for b in self.specs[v].bins(self.flow)]

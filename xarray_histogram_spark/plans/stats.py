@@ -47,13 +47,14 @@ def _prep(result: HistogramResult, variable: Optional[str]):
 
     One row rule, the oracle's: one output row per (group, other-axis
     core cell) of the dense result, NULL when that slice holds no mass
-    (accessor.py:415-417 flow strip).  Results with one variable, and
-    complete results, read the aggregate itself: zero-mass cells
-    contribute exactly nothing to any statistic here (integer
-    cumulative/total sums are unchanged; a ``0·x`` term cannot change an
-    IEEE fold), so the dense fill drops out of the plan.  Grouped
-    multi-variable results read the dense frame: their aggregate may
-    miss a (group, other-axis cell) entirely."""
+    (accessor.py:415-417 flow strip).  Statistics read the aggregate
+    itself: zero-mass cells contribute exactly nothing to any statistic
+    here (integer cumulative/total sums are unchanged; a ``0·x`` term
+    cannot change an IEEE fold), so no dense fill enters the plan.  The
+    aggregate of a grouped multi-variable result may miss a (group,
+    other-axis cell) entirely, so ``_with_presence`` adds the rows that
+    keep each such partition present."""
+    result._read()
     v = result._one_var(variable)
     spec = result.specs[v]
     if isinstance(spec, (IntCategory, StrCategory)):
@@ -64,20 +65,51 @@ def _prep(result: HistogramResult, variable: Optional[str]):
     }
     part = result.group_by + [id_col(c) for c in result.variables if c != v]
     keys = ("label", "width", "center")
-    if len(result.variables) > 1 and not result.complete:
-        df = result._dense
-        meta = dict(zip(keys, map(q, (
-            label_col(v), f"__{v}_width", f"__{v}_center"
-        ))))
-    else:
-        df = result._agg
-        meta = dict(zip(keys, [e for e, _ in axis_meta(v, spec, False)[:3]]))
-        if label_col(v) in result.given:
-            meta["label"] = q(label_col(v))
-    others = [core[c] for c in result.variables if c != v]
+    meta = dict(zip(keys, [e for e, _ in axis_meta(v, spec, False)[:3]]))
+    if label_col(v) in result.given:
+        meta["label"] = q(label_col(v))
+    df = result._agg
+    others = [c for c in result.variables if c != v]
     if others:
-        df = df.where(sql_chain("AND", others))
+        if not result.complete:
+            df = _with_presence(result, others)
+        df = df.where(sql_chain("AND", [core[c] for c in others]))
     return v, part, df, core[v], meta
+
+
+def _with_presence(result: HistogramResult, others: Sequence[str]) -> DataFrame:
+    """The aggregate's rows plus zero-mass presence rows: per group, one
+    row per other-axis core cell (each axis's id a div/mod position of a
+    ``sequence`` index) with the target id ``-1`` — off-core, so it adds
+    no mass and skips the metadata lookups, but keeps its partition
+    present.  Each group's rows are collected and exploded again together
+    with its presence rows, so the aggregate is read once: a union with a
+    distinct-groups branch is planned as a second scan of the source
+    (Catalyst drops an aggregate under a bare DISTINCT).  The generator is
+    ``inline_outer`` only to spare the non-empty-array filter Catalyst
+    infers for ``inline``; the array always holds the presence rows."""
+    names = [id_col(c) for c in result.variables] + ["__val"]
+    exts = [result.specs[c].n for c in others]
+    pos = {}
+    for i, (c, n) in enumerate(zip(others, exts)):
+        stride = math.prod(exts[i + 1:])
+        j = "__j" if stride == 1 else f"(__j div {stride})"
+        pos[c] = f"CAST({j} % {n} AS INT)"
+    zero = "CAST(0 AS BIGINT)" if result.int_mode else "0.0D"
+
+    def row(exprs) -> str:
+        return "struct(" + ", ".join(
+            f"{e} AS {q(n)}" for e, n in zip(exprs, names)
+        ) + ")"
+
+    absent = row([pos.get(c, "-1") for c in result.variables] + [zero])
+    gsel = [q(g) for g in result.group_by]
+    return result._agg.groupBy(*result.group_by).agg(
+        F.expr(f"collect_list({row(map(q, names))}) AS __rows")
+    ).selectExpr(*gsel, (
+        f"inline_outer(concat(__rows, transform("
+        f"sequence(0, {math.prod(exts) - 1}), __j -> {absent})))"
+    ))
 
 
 def _when(core: str, e: str, other: str = "NULL") -> str:
