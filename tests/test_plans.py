@@ -277,7 +277,9 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
     slice_bins→ppf 2091, histogram_columns slice_bins→ppf 1163,
     binned_statistic 1065, rollup_histogram 426).  ``scale`` changes
     only the spec, so the dense frame of a scaled 50-bin grouped
-    histogram is one build (three per-bin Column literal maps made 1307)."""
+    histogram is one build (three per-bin Column literal maps made 1307).
+    Each result chain is read twice (the statistic, then ``df``), so the
+    persist the second read makes is inside its budget."""
     from xarray_histogram_spark import (
         binned_statistic, histogram2d, histogram_columns, histogramdd,
         rollup_histogram,
@@ -287,8 +289,10 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
 
     qty = Regular(40, 1.0, 51.0)
     q20 = Regular(20, 1.0, 51.0)
-    h50 = histogram(lineitem, "l_quantity", Regular(50, 1.0, 51.0),
-                    group_by=["l_returnflag"])
+    # one fresh histogram per build: a scaled result shares its aggregate,
+    # so a reused one would come to the measured build already cached
+    h50s = iter([histogram(lineitem, "l_quantity", Regular(50, 1.0, 51.0),
+                           group_by=["l_returnflag"]) for _ in range(2)])
 
     def read_twice(r, stat):
         return stat(r), r.df
@@ -316,7 +320,8 @@ def test_interactive_chain_build_py4j_budget(spark, lineitem):
             ("count", "sum", "mean"), group_by=["l_returnflag"])),
         "rollup_histogram": (140, lambda: rollup_histogram(
             lineitem, "l_quantity", q20, ["l_returnflag", "l_linestatus"])),
-        "scale_df": (130, lambda: read_twice(h50.scale(2.0), lambda r: r.df)),
+        "scale_df": (130, lambda: read_twice(
+            next(h50s).scale(2.0), lambda r: r.df)),
     }
     for name, (budget, build) in builds.items():
         build()

@@ -312,10 +312,14 @@ def _grouped_2d(lineitem):
 
 def test_second_read_shares_cached_aggregate(spark, lineitem):
     """A result read once leaves the CacheManager untouched and its
-    statistic scans the source.  The second read persists the aggregate:
-    after ``s = r.median(); r.to_numpy()`` the statistic executes over the
-    cache the handoff filled (its plan's only leaves are cache scans) and
-    collects the rows it collects with no cache at all."""
+    statistic scans the source; so does a result handed off first and
+    then asked for a statistic.  A read after a lazy one persists the
+    aggregate: after ``s = r.median(); r.to_numpy()`` the statistic
+    executes over the cache the handoff filled (its plan's only leaves are
+    cache scans) and collects the rows it collects with no cache at all.
+    A result ``rebin`` builds over the cached aggregate reads the cache
+    too, and so does the same histogram built again (Spark matches cached
+    plans by result)."""
     import gc
 
     gc.collect()
@@ -327,6 +331,14 @@ def test_second_read_shares_cached_aggregate(spark, lineitem):
     assert "InMemoryTableScan" not in leaves, leaves
     assert any(n.startswith("Scan") for n in leaves), leaves
 
+    eager = _grouped_2d(lineitem)
+    eager.to_numpy()
+    late = eager.median("l_quantity")
+    assert sorted(map(str, late.collect())) == want
+    assert _cache_state(spark) == base
+    assert "InMemoryTableScan" not in _leaves(
+        late._jdf.queryExecution().executedPlan())
+
     r = _grouped_2d(lineitem)
     s = r.median("l_quantity")
     r.to_numpy()
@@ -335,21 +347,28 @@ def test_second_read_shares_cached_aggregate(spark, lineitem):
     leaves = _leaves(s._jdf.queryExecution().executedPlan())
     assert "InMemoryTableScan" in leaves, leaves
     assert set(leaves) <= {"InMemoryTableScan", "ReusedExchange"}, leaves
+    for other in (r.rebin(2, "l_quantity"), _grouped_2d(lineitem)):
+        derived = other.median("l_quantity")
+        derived.collect()
+        assert "InMemoryTableScan" in _leaves(
+            derived._jdf.queryExecution().executedPlan())
     spark.catalog.clearCache()
     assert sorted(map(str, r.median("l_quantity").collect())) == got == want
 
 
 def test_cached_aggregate_lifetime(spark, lineitem):
     """The cache lives exactly as long as the aggregate DataFrame object.
-    ``h`` and ``h.normalize()`` share it (each read twice, one entry), so
-    it stays until the last of them is gone; then the CacheManager and the
-    persistent RDDs are back at their baseline, and a statistic built
-    while the cache lived collects the same rows from the source."""
+    ``h`` and ``h.normalize()`` share it (each read lazily, then handed
+    off: one entry), so it stays until the last of them is gone; the next
+    read then brings the CacheManager and the persistent RDDs back to
+    their baseline, and a statistic built while the cache lived collects
+    the same rows from the source."""
     import gc
 
     want = sorted(map(str, _grouped_2d(lineitem).normalize().median(
         "l_quantity").collect()))
     gc.collect()
+    _grouped_2d(lineitem).median("l_quantity")  # a read drains the queue
     base = _cache_state(spark)
     h = _grouped_2d(lineitem)
     h.mean("l_quantity").collect()
@@ -361,12 +380,65 @@ def test_cached_aggregate_lifetime(spark, lineitem):
     assert _cache_state(spark) == cached
     del h
     gc.collect()
+    _grouped_2d(lineitem).median("l_quantity")
     assert _cache_state(spark) == cached
     del n
     gc.collect()
+    assert _cache_state(spark) == cached
+    _grouped_2d(lineitem).median("l_quantity")
     assert _cache_state(spark) == base
     assert sorted(map(str, s.collect())) == want
     assert _cache_state(spark) == base
+
+
+def test_cached_aggregate_released_outside_the_collector(spark, lineitem):
+    """A result freed by the cyclic collector only queues its cache's
+    release: the collector can run inside another py4j call on this
+    thread's connection, so its callback makes no round trip.  The next
+    read unpersists the queued cache."""
+    import gc
+
+    from .util import py4j_calls
+
+    gc.collect()
+    _grouped_2d(lineitem).median("l_quantity")
+    base = _cache_state(spark)
+    r = _grouped_2d(lineitem)
+    r.median("l_quantity")
+    r.to_numpy()
+    cycle = [r]
+    cycle.append(cycle)
+    del r, cycle
+    with py4j_calls(spark) as n:
+        gc.collect()
+    assert n.calls == 0, n.calls
+    assert _cache_state(spark) == (base[0] + 1, base[1] + 1)
+    _grouped_2d(lineitem).median("l_quantity")
+    assert _cache_state(spark) == base
+
+
+def test_queued_release_of_a_stopped_context_is_dropped(spark, lineitem):
+    """A cache queued before its SparkContext stopped went with that
+    context, which refuses the ``unpersist``: the next read drops the
+    entry instead of failing on it."""
+    from xarray_histogram_spark.plans import result as R
+
+    class Stopped:
+        def sparkSession(self):
+            return self
+
+        def sparkContext(self):
+            return self
+
+        def isStopped(self):
+            return True
+
+        def unpersist(self):
+            raise AssertionError("unpersist on a stopped context")
+
+    R._released.append(Stopped())
+    _grouped_2d(lineitem).median("l_quantity")
+    assert Stopped not in map(type, R._released)
 
 
 def test_rebin_metamorphic(spark, lineitem):

@@ -677,17 +677,13 @@ def dense_frame(r: HistogramResult) -> DataFrame:
         src = packed.selectExpr(
             *gsel, "__m", f"explode(sequence(0, {math.prod(exts) - 1})) AS __j"
         )
-        # row-major position of each axis within the dense index __j
         ids, per_axis = [], []
-        for i, (c, s) in enumerate(zip(cols, specs)):
-            stride = math.prod(exts[i + 1:])
-            j = "__j" if stride == 1 else f"(__j div {stride})"
-            p = f"CAST({j} % {exts[i]} AS INT)"
+        for c, s, p in zip(cols, specs, dense_positions(exts)):
             lo = _axis_id_range(s, r.flow)[0]
             ids.append(f"{p} + {lo}" if lo else p)
             per_axis.append(axis_meta_exprs(c, s, r.flow, pos=p))
-        zero = "CAST(0 AS BIGINT)" if r.int_mode else "0.0D"
-        val = f"coalesce(element_at(__m, {flat_key(ids, specs)}), {zero})"
+        val = (f"coalesce(element_at(__m, {flat_key(ids, specs)}), "
+               f"{zero_val(r.int_mode)})")
         id_sel = [f"{i} AS {q(id_col(c))}" for i, c in zip(ids, cols)]
     labels = [
         q(label_col(c)) if label_col(c) in r.given else a[0]
@@ -708,6 +704,22 @@ def dense_frame(r: HistogramResult) -> DataFrame:
         return src.selectExpr(*sel).selectExpr("*", f"{pdf} AS {vname}")
     vis = int_display(val, r.divisor) if r.int_mode and not r.exact else val
     return src.selectExpr(*sel, f"{vis} AS {vname}")
+
+
+def dense_positions(exts: Sequence[int]) -> list[str]:
+    """Spark SQL: each axis's row-major position within the dense index
+    ``__j`` over axes of extents ``exts``."""
+    out = []
+    for i, n in enumerate(exts):
+        stride = math.prod(exts[i + 1:])
+        j = "__j" if stride == 1 else f"(__j div {stride})"
+        out.append(f"CAST({j} % {n} AS INT)")
+    return out
+
+
+def zero_val(int_mode: bool) -> str:
+    """Spark SQL: a zero ``__val`` of the result's representation."""
+    return "CAST(0 AS BIGINT)" if int_mode else "0.0D"
 
 
 def _density_expr(

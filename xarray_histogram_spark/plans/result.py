@@ -24,18 +24,28 @@ slice, the flow ids ``preserve_groups`` aggregates).  They add no visible
 mass, but keep their group present: a group whose mass lies entirely in
 hidden bins shows zero rows and a NULL statistic.
 
-Reads share one aggregate: a public read is a handoff (``to_pandas``/
-``to_numpy``/``to_xarray``), a statistic, ``write_result`` or ``df``.
-The second read of a result persists ``_agg``; whichever read executes
-first after that fills the cache, and every other read of the result —
-and of the results ``remove_flow``/``normalize``/``apply_func``/``scale``
-return, which share ``_agg`` — scans the aggregate, not the source.  A
-result read once keeps its plan and never touches the cache.  The cache
-is released (``unpersist``) when the ``_agg`` DataFrame object is
-garbage-collected, i.e. when the last result over it is gone.  Stale
-source: from the second read on, a result answers from the aggregate its
-first executed read after the persist computed, so data changed in the
-source since then does not show; re-run the histogram to see it.
+Reads share one aggregate.  A handoff (``to_pandas``/``to_numpy``/
+``to_xarray``) and ``write_result`` execute at once; a statistic and
+``df`` hand out a lazy frame that may execute later.  The cache pays in
+one order only — a lazy frame handed out before another read executes
+(``s = r.median(); r.to_numpy(); s.collect()``) — so a read that follows
+a lazy read of the same result persists ``_agg``: whichever executes
+first fills the cache and the other scans the aggregate, not the source.
+A result read once, or handed off before its statistic is built, keeps
+its plan (a lazy frame that executed before the next read costs one
+cache fill nothing reads).  The results ``remove_flow``/``normalize``/
+``apply_func``/``scale`` return share ``_agg`` and its cache; those
+``rebin``/``slice_bins``/``project``/``merge`` build over a cached
+``_agg`` read the cache while it lives and the source after.  When the
+``_agg`` DataFrame object is garbage-collected (the last result over it
+is gone) its cache is queued, and the next read of any result unpersists
+it: the collector may run inside another py4j call, so it makes none.
+Stale source: while the cache lives, every plan that holds the same
+aggregate — a result built from the cached one, or the same histogram
+built again over the same input (Spark matches cached plans by result) —
+answers from the aggregate the first executed read computed.  To see
+changed source data, drop the old results (or ``spark.catalog.
+clearCache()``) and build the histogram again.
 """
 
 from __future__ import annotations
@@ -51,6 +61,22 @@ from pyspark.sql import functions as F
 
 from ..binspec import BinSpec, Variable, sql_chain
 from ..functions.hashing import q
+
+# the JVM frames of cached aggregates whose DataFrame object is gone, to
+# unpersist at the next read (see ``HistogramResult._read``)
+_released: list = []
+
+
+def _release_pending() -> None:
+    """Unpersist the queued caches of collected aggregates."""
+    while _released:
+        try:
+            jdf = _released.pop()
+        except IndexError:  # another thread drained it
+            return
+        # a stopped context took its caches with it (and refuses the call)
+        if not jdf.sparkSession().sparkContext().isStopped():
+            jdf.unpersist()
 
 
 @dataclass
@@ -84,19 +110,22 @@ class HistogramResult:
     # adopted frame's labels and value column (an adopted label can differ
     # from its inferred spec's by an ulp; a pdf is not normalized twice)
     given: tuple[str, ...] = ()
-    # public reads of this result so far (see ``_read``)
-    _reads: int = field(default=0, init=False, repr=False, compare=False)
+    # a lazy frame (a statistic or ``df``) of this result was handed out
+    _lazy_out: bool = field(default=False, init=False, repr=False, compare=False)
 
-    def _read(self) -> None:
-        """Count one public read (see the module docstring).  The second
-        persists ``_agg`` (once per DataFrame object; a streaming frame
-        cannot be cached) and binds the release to that object, not to
-        this result, so results sharing ``_agg`` share the cache."""
-        self._reads += 1
+    def _read(self, lazy: bool) -> None:
+        """One public read (see the module docstring): unpersist the
+        queued caches, then persist ``_agg`` if an earlier read handed out
+        a lazy frame — once per DataFrame object (a streaming frame cannot
+        be cached).  The release is bound to that object, not to this
+        result, so results sharing ``_agg`` share the cache; the finalizer
+        only queues it, since it runs wherever the collector does."""
+        _release_pending()
         agg = self._agg
-        if self._reads == 2 and not agg.is_cached and not agg.isStreaming:
+        if self._lazy_out and not agg.is_cached and not agg.isStreaming:
             agg.persist()
-            weakref.finalize(agg, agg._jdf.unpersist).atexit = False
+            weakref.finalize(agg, _released.append, agg._jdf).atexit = False
+        self._lazy_out = self._lazy_out or lazy
 
     # ---- the labelled dense frame, built once per result ----
     @cached_property
@@ -113,7 +142,7 @@ class HistogramResult:
     @property
     def df(self) -> DataFrame:
         """The public dense result (internal ``__`` columns dropped)."""
-        self._read()
+        self._read(lazy=True)
         return self._df
 
     def _one_var(self, variable: Optional[str]) -> str:
@@ -467,7 +496,7 @@ class HistogramResult:
         """Collect the result ordered by (group keys, bin ids) — flow bins
         first/last like the reference's coordinates (underflow leads,
         overflow trails, core.py:524-587)."""
-        self._read()
+        self._read(lazy=False)
         order = self.group_by + [f"{v}_bin" for v in self.variables]
         return self._df.orderBy(*order).toPandas()
 

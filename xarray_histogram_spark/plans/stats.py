@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from ..binspec import IntCategory, StrCategory, sql_chain
 from ..functions.hashing import dlit, q
 from ..functions.hashing import q as quote  # ``ppf`` takes a ``q`` argument
-from .histogram import axis_meta, id_col, label_col
+from .histogram import (
+    axis_meta, dense_positions, id_col, label_col, zero_val,
+)
 from .result import HistogramResult
 
 
@@ -54,7 +56,7 @@ def _prep(result: HistogramResult, variable: Optional[str]):
     aggregate of a grouped multi-variable result may miss a (group,
     other-axis cell) entirely, so ``_with_presence`` adds the rows that
     keep each such partition present."""
-    result._read()
+    result._read(lazy=True)
     v = result._one_var(variable)
     spec = result.specs[v]
     if isinstance(spec, (IntCategory, StrCategory)):
@@ -90,19 +92,15 @@ def _with_presence(result: HistogramResult, others: Sequence[str]) -> DataFrame:
     infers for ``inline``; the array always holds the presence rows."""
     names = [id_col(c) for c in result.variables] + ["__val"]
     exts = [result.specs[c].n for c in others]
-    pos = {}
-    for i, (c, n) in enumerate(zip(others, exts)):
-        stride = math.prod(exts[i + 1:])
-        j = "__j" if stride == 1 else f"(__j div {stride})"
-        pos[c] = f"CAST({j} % {n} AS INT)"
-    zero = "CAST(0 AS BIGINT)" if result.int_mode else "0.0D"
+    pos = dict(zip(others, dense_positions(exts)))
 
     def row(exprs) -> str:
         return "struct(" + ", ".join(
             f"{e} AS {q(n)}" for e, n in zip(exprs, names)
         ) + ")"
 
-    absent = row([pos.get(c, "-1") for c in result.variables] + [zero])
+    absent = row([pos.get(c, "-1") for c in result.variables]
+                 + [zero_val(result.int_mode)])
     gsel = [q(g) for g in result.group_by]
     return result._agg.groupBy(*result.group_by).agg(
         F.expr(f"collect_list({row(map(q, names))}) AS __rows")

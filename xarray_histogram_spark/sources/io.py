@@ -60,7 +60,7 @@ def write_result(result: HistogramResult, path: str, mode: str = "overwrite") ->
             "write_result does not support mode='append' (duplicate bin "
             "rows double-count on reload); merge() the results and save"
         )
-    result._read()
+    result._read(lazy=False)
     dense = result._dense
     dense.write.mode(mode).parquet(path)
     meta = {
