@@ -44,8 +44,8 @@ Stale source: while the cache lives, every plan that holds the same
 aggregate — a result built from the cached one, or the same histogram
 built again over the same input (Spark matches cached plans by result) —
 answers from the aggregate the first executed read computed.  To see
-changed source data, drop the old results (or ``spark.catalog.
-clearCache()``) and build the histogram again.
+changed source data, drop the old results (or call
+``spark.catalog.clearCache()``) and build the histogram again.
 """
 
 from __future__ import annotations
