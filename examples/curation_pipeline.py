@@ -23,8 +23,8 @@ the operator families a 100 TB text pipeline runs, end to end —
  18. packed-sequence emission                  (pack_sequences)
  19. semantic incremental dedup + index upkeep (embed_incremental +
                                                 extend_embed_index)
- 20. chunk-level near-dup KEEP verdicts        (chunk_near_keep,
-                                                materialize=True)
+ 20. chunk-level near-dup KEEP verdicts        (chunk_windows once →
+                                                chunk_near_keep(chunks=))
  21. multi-shard text loop: index seed →
      shard dedup → keeper append → next shard (extend_band_index)
  22. classifier-based quality scoring         (linear_quality_score)
@@ -287,17 +287,23 @@ finally:
 
 # 20. chunk-level near-dup KEEP verdicts (round 10) — the decision a
 # RAG pipeline consumes: keep a chunk unless a lexicographically lower
-# (doc, chunk) is near-identical.  materialize=True tokenizes the
-# corpus once for both the pair evidence and the verdict join — the
-# 100 TB path (the in-plan default is faster at this scale).
+# (doc, chunk) is near-identical.  The chunk frame is built and
+# persisted once and passed as chunks=, so the pair evidence and the
+# verdict join share one tokenization instead of each re-chunking the
+# corpus in-plan.
 from xarray_histogram_spark.operators.dedup import (  # noqa: E402
     chunk_near_keep,
 )
+from xarray_histogram_spark.operators.text import (  # noqa: E402
+    chunk_windows,
+)
 
-ck = chunk_near_keep(docs, "text", "doc_id", 64, 48, materialize=True)
+doc_chunks = chunk_windows(docs, "text", "doc_id", 64, 48).persist()
+ck = chunk_near_keep(None, "text", "doc_id", 64, 48, chunks=doc_chunks)
 n_drop = ck.where(~F.col("keep")).count()
 print(f"chunk-level keep: {ck.count()} chunks, {n_drop} near-dup drops")
 assert n_drop > 0
+doc_chunks.unpersist()
 
 # 21. the TEXT multi-shard production loop (round 10): seed the band
 # index from the keeper corpus, dedup shard 1 against it, APPEND shard

@@ -2549,7 +2549,7 @@ def test_chunk_near_pairs_semantics(spark):
 def test_chunk_near_keep_semantics(spark):
     """Keep-first-occurrence at chunk granularity: the lightly-edited
     copy (higher doc id) drops, the original keeps, the unrelated doc
-    keeps; materialize=True agrees bit-for-bit."""
+    keeps; a pre-built ``chunks=`` frame agrees bit-for-bit."""
     base = " ".join(f"tok{i}" for i in range(16))
     edited = base.replace("tok7", "tok7x")
     df = spark.createDataFrame(
@@ -2563,14 +2563,6 @@ def test_chunk_near_keep_semantics(spark):
         ).collect()
     }
     assert got == {(1, 0): True, (2, 0): False, (3, 0): True}
-    mat = {
-        (r["doc_id"], r["chunk_id"]): r["keep"]
-        for r in dd.chunk_near_keep(
-            df, "text", "doc_id", 16, 16, k=4, threshold=0.7,
-            materialize=True,
-        ).collect()
-    }
-    assert mat == got
     # the shared pre-chunked path (a shard loop's zero-retokenize shape)
     from xarray_histogram_spark.operators.text import chunk_windows
 
@@ -2584,83 +2576,6 @@ def test_chunk_near_keep_semantics(spark):
     assert pre == got
     with pytest.raises(ValueError, match="exactly one"):
         dd.chunk_near_keep(None, "text", "doc_id", 16, 16)
-    # a caller-owned scratch_dir gets a unique subdir (and is NOT
-    # atexit-tracked — the caller deletes it)
-    import tempfile
-
-    sd = tempfile.mkdtemp(prefix="xhs_test_scratch_")
-    try:
-        own_df = dd.chunk_near_keep(
-            df, "text", "doc_id", 16, 16, k=4, threshold=0.7,
-            materialize=True, scratch_dir=sd,
-        )
-        own = {
-            (r["doc_id"], r["chunk_id"]): r["keep"]
-            for r in own_df.collect()
-        }
-        assert own == got
-        import os
-        assert any(n.startswith("xhs_chunks_") for n in os.listdir(sd))
-        assert not any(p.startswith(sd) for p in dd._CHUNK_SCRATCH)
-        # the caller-owned subdirectory is surfaced on the result — the
-        # deletion contract is actionable (review-found); a
-        # non-materialized call carries no such attribute
-        sp = own_df.xhs_scratch_path
-        assert sp.startswith(sd + "/xhs_chunks_") and os.path.isdir(sp)
-        assert not hasattr(
-            dd.chunk_near_keep(df, "text", "doc_id", 16, 16, k=4,
-                               threshold=0.7),
-            "xhs_scratch_path",
-        )
-        # the attribute is best-effort (any transformation drops it —
-        # advice-found), so the path is ALSO in the stable per-root
-        # registry; trailing-slash normalization matches
-        assert not hasattr(own_df.where(F.lit(True)), "xhs_scratch_path")
-        assert dd.scratch_paths(sd) == [sp]
-        assert dd.scratch_paths(sd + "/") == [sp]
-        assert dd.scratch_paths(sd + "_nothing") == []
-        # drain side (advice-found: without an acknowledgement API a
-        # long-lived driver accumulates entries for paths it already
-        # deleted): unknown paths are ignored, a named discard removes
-        # exactly that entry, re-acknowledging is a safe no-op, and
-        # nothing on the filesystem is touched
-        assert dd.discard_scratch_paths(sd, ["/no/such/path"]) == []
-        assert dd.scratch_paths(sd) == [sp]
-        # a bare string refuses instead of matching character-wise
-        # (review-found: set(str) would silently drain nothing)
-        with pytest.raises(TypeError, match="bare string"):
-            dd.discard_scratch_paths(sd, sp)
-        assert dd.scratch_paths(sd) == [sp]
-        # member paths are slash-normalized like the root itself, on
-        # BOTH sides of the comparison, and pathlib members are
-        # accepted (review-found: verbatim comparison silently drained
-        # nothing; a Path member crashed past the guard)
-        assert dd.discard_scratch_paths(sd, [sp + "/"]) == [sp]
-        assert dd.scratch_paths(sd) == []
-        dd._SCRATCH_PATHS[sd].append(sp + "/")
-        assert dd.discard_scratch_paths(sd, [sp]) == [sp + "/"]
-        from pathlib import Path
-
-        dd._SCRATCH_PATHS[sd].append(sp)
-        assert dd.discard_scratch_paths(sd, [Path(sp)]) == [sp]
-        dd._SCRATCH_PATHS[sd].append(sp)
-        assert dd.discard_scratch_paths(sd + "/", [sp]) == [sp]
-        assert dd.scratch_paths(sd) == []
-        assert dd.discard_scratch_paths(sd, [sp]) == []
-        assert os.path.isdir(sp)  # bookkeeping only — files untouched
-        # discard-all drains whatever is recorded, preserving order
-        dd._SCRATCH_PATHS[sd] = ["p1", "p2", "p3"]
-        assert dd.discard_scratch_paths(sd, ["p2"]) == ["p2"]
-        assert dd.scratch_paths(sd) == ["p1", "p3"]
-        assert dd.discard_scratch_paths(sd) == ["p1", "p3"]
-        assert dd.scratch_paths(sd) == []
-        # the drained root's (empty) list is deliberately KEPT: deleting
-        # the key would orphan a list a concurrent setdefault already
-        # handed to a recorder (review-found race)
-        assert dd._SCRATCH_PATHS[sd] == []
-    finally:
-        import shutil
-        shutil.rmtree(sd, ignore_errors=True)
     # above the pair's jaccard everything keeps (policy reads evidence)
     all_keep = dd.chunk_near_keep(
         df, "text", "doc_id", 16, 16, k=4, threshold=0.999
@@ -2668,61 +2583,69 @@ def test_chunk_near_keep_semantics(spark):
     assert all_keep == 0
 
 
-def test_chunk_near_pairs_materialize_and_chunks_paths(spark, docs):
-    """The three input paths agree bit-for-bit: default (re-chunk 3×
-    in-plan), materialize=True (one tokenize pass into a scratch
-    parquet), and a caller-supplied pre-chunked frame.  The
-    materialized plan must contain NO chunk tokenization — only scans
-    of the scratch — and exactly-one-of df/chunks is enforced."""
+def test_chunk_near_pairs_chunks_path(spark, docs, tmp_path):
+    """The in-plan default (re-chunk 3× in-plan) and a caller-built
+    ``chunks=`` frame agree bit-for-bit.  Written once to parquet and
+    read back, the chunk frame leaves no chunk tokenization in either
+    the pair or the keep plan; exactly-one-of df/chunks is enforced."""
     import pytest as _pytest
     from xarray_histogram_spark.operators.text import chunk_windows
 
     sub = docs.select("doc_id", "text").limit(200)
+    path = str(tmp_path / "chunks")
+    chunk_windows(sub, "text", "doc_id", 32, 24).write.parquet(path)
+    ch = spark.read.parquet(path)
     base = dd.chunk_near_pairs(sub, "text", "doc_id", 32, 24)
-    mat = dd.chunk_near_pairs(sub, "text", "doc_id", 32, 24,
-                              materialize=True)
-    pre = dd.chunk_near_pairs(None, "text", "doc_id", 32, 24,
-                              chunks=chunk_windows(sub, "text", "doc_id",
-                                                   32, 24))
+    pre = dd.chunk_near_pairs(None, "text", "doc_id", 32, 24, chunks=ch)
     got = sorted(map(tuple, base.collect()))
-    assert got == sorted(map(tuple, mat.collect()))
     assert got == sorted(map(tuple, pre.collect()))
     assert len(got) > 0
-    # the materialized plan re-chunks nothing: the chunk_text assembly
+    keep = dd.chunk_near_keep(sub, "text", "doc_id", 32, 24)
+    pre_keep = dd.chunk_near_keep(None, "text", "doc_id", 32, 24,
+                                  chunks=ch)
+    assert (sorted(map(tuple, keep.collect()))
+            == sorted(map(tuple, pre_keep.collect())))
+    # the chunks= plans re-chunk nothing: the chunk_text assembly
     # (`array_join` of the sliced window — unique to chunk_windows; the
     # band posexplode, shingle sequence and in-bucket pair slice are
-    # jaccard's own and legitimately remain) ran once at scratch-write
-    # time, the pair plan only scans the scratch back
-    mplan = mat._jdf.queryExecution().optimizedPlan().toString()
-    assert "array_join(" not in mplan
-    dplan = base._jdf.queryExecution().optimizedPlan().toString()
-    assert "array_join(" in dplan
-    # the local-default scratch path is surfaced on the result and is
-    # one of the atexit-tracked roots; the in-plan default carries none
-    import os
-    assert os.path.isdir(mat.xhs_scratch_path)
-    assert any(mat.xhs_scratch_path.startswith(r) for r in dd._CHUNK_SCRATCH)
-    assert not hasattr(base, "xhs_scratch_path")
+    # jaccard's own and legitimately remain) ran once at write time,
+    # the pair and keep plans only scan the parquet back
+    for out in (pre, pre_keep):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "array_join(" not in plan
+    for out in (base, keep):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "array_join(" in plan
     with _pytest.raises(ValueError, match="exactly one"):
-        dd.chunk_near_pairs(sub, "text", "doc_id", 32, 24,
-                            chunks=chunk_windows(sub, "text", "doc_id",
-                                                 32, 24))
+        dd.chunk_near_pairs(sub, "text", "doc_id", 32, 24, chunks=ch)
     with _pytest.raises(ValueError, match="exactly one"):
         dd.chunk_near_pairs(None, "text", "doc_id", 32, 24)
-    # chunks= + materialize/scratch_dir raises instead of silently
-    # ignoring the flags (the embed_incremental kept-sides lesson)
-    with _pytest.raises(ValueError, match="silently ignored"):
-        dd.chunk_near_pairs(None, "text", "doc_id", 32, 24,
-                            chunks=chunk_windows(sub, "text", "doc_id",
-                                                 32, 24),
-                            materialize=True)
-    # eager scratch reap: roots tracked by materialize=True disappear
-    # and the tracking list empties
-    roots = list(dd._CHUNK_SCRATCH)
-    assert roots and all(os.path.isdir(r) for r in roots)
-    assert dd.clear_chunk_scratch() == len(roots)
-    assert not dd._CHUNK_SCRATCH
-    assert not any(os.path.isdir(r) for r in roots)
+
+
+def test_chunk_near_chunks_frame_missing_columns(spark):
+    """A ``chunks=`` frame without the id, ``chunk_id`` or
+    ``chunk_text`` column fails at the call with a ValueError naming
+    what is missing, not with an unresolved-column AnalysisException
+    from inside the pair machinery."""
+    from xarray_histogram_spark.operators.text import chunk_windows
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g h"), (2, "a b c d e f g x")],
+        "doc_id: long, text: string",
+    )
+    ch = chunk_windows(df, "text", "doc_id", 4, 4)
+    for op in (dd.chunk_near_pairs, dd.chunk_near_keep):
+        with pytest.raises(ValueError, match=r"\['chunk_text'\]"):
+            op(None, "text", "doc_id", 4, 4, chunks=ch.drop("chunk_text"))
+        with pytest.raises(ValueError,
+                           match=r"\['doc_id', 'chunk_id'\]"):
+            op(None, "text", "doc_id", 4, 4, chunks=ch.select("chunk_text"))
+    # upper-case names still resolve (Spark's default is
+    # case-insensitive), so the check refuses nothing the plan accepts
+    upper = ch.withColumnRenamed("chunk_text", "CHUNK_TEXT")
+    assert (dd.chunk_near_keep(None, "text", "doc_id", 4, 4,
+                               chunks=upper).count()
+            == ch.count())
 
 
 def test_linear_quality_score_shape(spark, docs):

@@ -23,7 +23,6 @@ deterministic hashing substrate as the histogram oracle gate.
 
 from __future__ import annotations
 
-import atexit
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1638,194 +1637,6 @@ def chunk_dedup_sql(
     )
 
 
-# scratch roots for materialize=True chunk frames, reaped at process
-# exit (the entry_queries CSV-root atexit pattern, operator-local)
-_CHUNK_SCRATCH: list = []
-
-# caller-supplied scratch_dir → subdirectories this process wrote under
-# it (advice-found: the ``xhs_scratch_path`` DataFrame attribute is
-# best-effort only — any transformation of the returned frame silently
-# drops it — so the caller-owned-deletion contract needs a channel that
-# survives; this registry is that channel)
-_SCRATCH_PATHS: dict = {}
-
-
-def scratch_paths(scratch_dir: str) -> list:
-    """The ``xhs_chunks_*`` subdirectories THIS process has allocated
-    under the caller-supplied ``scratch_dir`` (oldest first) — the
-    stable channel for the caller-owned-deletion contract.  The
-    ``xhs_scratch_path`` attribute on a returned DataFrame identifies
-    which entry belongs to a specific result, but it is an ad-hoc Python
-    attribute that any subsequent transformation (``.where``,
-    ``.select``, ``.cache``) silently drops; this registry never loses a
-    path.  Paths are recorded BEFORE the write on purpose: a failed
-    distributed write can leave partial files at the path, and the
-    deletion contract must cover those too — so an entry may point at a
-    directory that is partial or was never created (delete with
-    ignore-missing semantics).  Entries are never removed
-    automatically: remote-FS scratch cannot be reaped by a local atexit
-    hook, so deletion — and calling this to enumerate what to delete —
-    is the caller's — acknowledge completed deletions with
-    :func:`discard_scratch_paths` so a long-lived driver's registry
-    does not accumulate stale entries (advice-found: without a drain
-    side the contract had no way to clear what was already deleted)."""
-    return list(_SCRATCH_PATHS.get(scratch_dir.rstrip("/"), ()))
-
-
-def discard_scratch_paths(
-    scratch_dir: str, paths: Optional[list] = None
-) -> list:
-    """Drain side of the caller-owned-deletion contract: drop ``paths``
-    (every recorded entry when None) from ``scratch_dir``'s registry
-    and return the entries actually removed, oldest first.  Call it
-    AFTER deleting the directories — this only clears bookkeeping,
-    it never touches the filesystem (the registry exists precisely
-    because remote-FS scratch cannot be reaped locally).  Unknown
-    paths are ignored, so acknowledging a deletion twice is safe;
-    order of the surviving entries is preserved.  A bare string is
-    REFUSED rather than iterated character-wise (review-found:
-    ``set("/a/b")`` is the set of the path's characters, so a caller
-    passing ``scratch_paths(sd)[0]`` instead of ``[...]`` would
-    silently drain nothing — the exact stale-entry accumulation this
-    API exists to prevent, with no error signal); member paths are
-    slash-normalized like ``scratch_dir`` itself (review-found: a
-    trailing-slash member compared verbatim would silently match
-    nothing).
-
-    Concurrency (review-found): a long-lived driver runs Spark jobs on
-    many threads, so a drain can race ``_materialize_scratch``'s
-    recording append.  The drain therefore mutates via per-item
-    ``list.remove`` on the SAME list object — each call is a single
-    GIL-atomic operation on a built-in, so a concurrent append is
-    never overwritten (a rebuild-and-replace ``rec[:] = …`` would
-    lose an append landing between its read and its write), and the
-    root's (empty) list is deliberately never dropped from the dict —
-    deleting the key would orphan a list a concurrent ``setdefault``
-    already handed to a recorder.  Two concurrent drains of the same
-    entry resolve to one winner (the loser's ``remove`` misses)."""
-    if isinstance(paths, str):
-        raise TypeError(
-            "paths must be a list of paths (or None to drain all), "
-            "not a bare string — a string would be matched "
-            "character-wise and silently discard nothing"
-        )
-    root = scratch_dir.rstrip("/")
-    rec = _SCRATCH_PATHS.get(root)
-    if rec is None:
-        return []
-    import os
-
-    # os.fspath: accept pathlib.Path members (review-found: a bare
-    # AttributeError from the comprehension would bypass the guard's
-    # explanatory message); both sides of the membership test are
-    # slash-normalized so the promise holds even for a hand-recorded
-    # trailing-slash entry
-    drop = (
-        None if paths is None
-        else {os.fspath(p).rstrip("/") for p in paths}
-    )
-    removed = []
-    for p in list(rec):
-        if drop is None or p.rstrip("/") in drop:
-            try:
-                rec.remove(p)
-            except ValueError:
-                continue  # a concurrent drain already took it
-            removed.append(p)
-    return removed
-
-
-def _materialize_scratch(
-    df: DataFrame, scratch_dir: Optional[str] = None
-) -> DataFrame:
-    """Write ``df`` once to a scratch parquet and read it back — the
-    persisted-intermediate pattern for plans that would otherwise
-    re-evaluate an expensive subtree (Spark does not share duplicate
-    subtrees within one plan, and for FILTER consumers there is no
-    in-plan fix — see the round-9 alias-inlining lessons).  Parquet,
-    not ``cache()``: at 100 TB an evicted cache block silently re-runs
-    the subtree mid-job, while a parquet scratch is spill-free,
-    survives stage retries, and reads back column-pruned.
-
-    Scratch placement (review-found): the default ``tempfile.mkdtemp``
-    is DRIVER-LOCAL, which is only correct in local mode — on a real
-    cluster each executor would write its partitions to its own
-    node-local /tmp and the read-back would silently see a fraction of
-    the data — so a non-local master REFUSES to run without
-    ``scratch_dir``, a cluster-visible location (HDFS/S3/NFS).  Local
-    default scratch is reaped at process exit (one new directory per
-    call — loop over shards via the ``chunks=`` parameter instead of
-    repeated ``materialize=True`` calls); a caller-supplied
-    ``scratch_dir`` gets a unique subdirectory the CALLER owns deleting
-    (the ``components_from_edges`` cc-final-* precedent — a local
-    ``shutil.rmtree`` cannot delete remote-FS paths at exit).  The
-    written path is surfaced as ``xhs_scratch_path`` on the returned
-    DataFrame (and propagated to the operator results built from it) —
-    without it the caller-owned-deletion contract would be
-    unactionable: concurrent jobs sharing one scratch root could not
-    tell which ``xhs_chunks_*`` subdirectory is theirs (review-found).
-    The attribute is BEST-EFFORT: any transformation of the returned
-    frame yields a new DataFrame without it (advice-found), so every
-    caller-supplied path is ALSO recorded in the stable per-root
-    registry — see :func:`scratch_paths`."""
-    spark = df.sparkSession
-    if scratch_dir is None:
-        if not spark.sparkContext.master.startswith("local"):
-            raise ValueError(
-                "materialize=True on a non-local master needs "
-                "scratch_dir= (a cluster-visible path): the default "
-                "driver-local tempdir would scatter partitions across "
-                "executor-local filesystems and silently drop data"
-            )
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="xhs_chunks_")
-        _CHUNK_SCRATCH.append(root)
-        path = root + "/data"
-    else:
-        import uuid
-
-        path = scratch_dir.rstrip("/") + "/xhs_chunks_" + uuid.uuid4().hex
-        _SCRATCH_PATHS.setdefault(scratch_dir.rstrip("/"), []).append(path)
-    df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    out.xhs_scratch_path = path
-    return out
-
-
-def clear_chunk_scratch() -> int:
-    """Eagerly delete every atexit-tracked LOCAL scratch root written by
-    ``materialize=True`` calls and return how many were removed.  The
-    atexit reaper bounds nothing in a long-lived driver (notebook,
-    service, shard loop) — each call writes a fresh chunk-frame copy —
-    so call this between batches once their results are consumed.
-    DataFrames returned by earlier ``materialize=True`` calls read from
-    these roots and become invalid.  Caller-supplied ``scratch_dir``
-    subdirectories are never tracked here; their lifecycle is the
-    caller's."""
-    import shutil
-
-    n = len(_CHUNK_SCRATCH)
-    for root in _CHUNK_SCRATCH:
-        shutil.rmtree(root, ignore_errors=True)
-    _CHUNK_SCRATCH.clear()
-    return n
-
-
-atexit.register(clear_chunk_scratch)
-
-
-def _carry_scratch_path(out: DataFrame, chunks: DataFrame) -> DataFrame:
-    """Propagate a materialized chunk frame's ``xhs_scratch_path`` onto
-    the operator result the caller actually holds — the scratch
-    subdirectory a caller-supplied ``scratch_dir`` owns deleting is
-    otherwise unknowable to it (review-found)."""
-    path = getattr(chunks, "xhs_scratch_path", None)
-    if path is not None:
-        out.xhs_scratch_path = path
-    return out
-
-
 def _resolve_chunks(
     df: Optional[DataFrame],
     chunks: Optional[DataFrame],
@@ -1833,16 +1644,13 @@ def _resolve_chunks(
     id_col: str,
     chunk_tokens: int,
     stride_tokens: int,
-    materialize: bool,
-    scratch_dir: Optional[str],
 ) -> DataFrame:
     """Exactly-one-of df/chunks input resolution shared by
     ``chunk_near_pairs`` and ``chunk_near_keep`` (review-found: two
-    verbatim copies would drift).  ``materialize``/``scratch_dir``
-    apply only to the internally-built frame; combining them with
-    ``chunks=`` RAISES rather than silently ignoring the flags (the
-    embed_incremental kept_df+kept_index lesson) — the caller of a
-    pre-built frame owns its materialization."""
+    verbatim copies would drift).  A ``chunks=`` frame must carry the
+    three columns the pair machinery reads; a missing one raises here,
+    naming it, instead of an unresolved-column error deep in the plan
+    (matched case-insensitively, like Spark's default resolution)."""
     from .text import chunk_windows
 
     if (df is None) == (chunks is None):
@@ -1850,28 +1658,18 @@ def _resolve_chunks(
             "pass exactly one of df (chunked here) or chunks (a "
             "chunk_windows output for the same corpus)"
         )
-    if chunks is not None:
-        if materialize or scratch_dir is not None:
-            raise ValueError(
-                "materialize/scratch_dir apply to the internally-built "
-                "chunk frame and would be silently ignored with "
-                "chunks= — materialize the pre-built frame yourself "
-                "(persist it, or pass the read-back of a parquet write)"
-            )
-        return chunks
-    if scratch_dir is not None and not materialize:
+    if chunks is None:
+        return chunk_windows(df, text_col, id_col, chunk_tokens,
+                             stride_tokens)
+    have = {c.lower() for c in chunks.columns}
+    missing = [c for c in (id_col, "chunk_id", "chunk_text")
+               if c.lower() not in have]
+    if missing:
         raise ValueError(
-            "scratch_dir without materialize=True would be silently "
-            "ignored — the multi-pass in-plan re-chunk default would "
-            "still run; pass materialize=True to enable the "
-            "single-tokenize scratch"
+            f"chunks frame lacks column(s) {missing}: pass a "
+            f"chunk_windows output keyed by '{id_col}'"
         )
-    ch = chunk_windows(df, text_col, id_col, chunk_tokens, stride_tokens)
-    if materialize:
-        ch = _materialize_scratch(
-            ch.select(id_col, "chunk_id", "chunk_text"), scratch_dir
-        )
-    return ch
+    return chunks
 
 
 def chunk_near_pairs(
@@ -1883,8 +1681,6 @@ def chunk_near_pairs(
     k: int = 8,
     max_chunks_per_doc: int = 1 << 20,
     chunks: Optional[DataFrame] = None,
-    materialize: bool = False,
-    scratch_dir: Optional[str] = None,
 ) -> DataFrame:
     """NEAR-duplicate chunk pairs: ``chunk_windows`` composed straight
     into the LSH + exact-Jaccard machinery (``jaccard_pairs``) over
@@ -1894,47 +1690,34 @@ def chunk_near_pairs(
     ``jaccard``) with ``uid_a < uid_b``; unpack doc/chunk with
     ``uid DIV/MOD max_chunks_per_doc``.  Same scale story as
     ``jaccard_pairs`` (banded candidates, never all-pairs), on the
-    shuffle-free chunk projection — with one caveat the two keyword
-    paths exist to manage: the chunk frame is a SUBTREE consumed three
+    shuffle-free chunk projection — with one caveat ``chunks`` exists
+    to manage: the chunk frame is a SUBTREE consumed three
     times inside the jaccard machinery (band rows, a-side sets, b-side
     sets) and Spark does not share duplicate subtrees, so by default
-    the corpus is re-chunked ~3× within the one plan.
-
-    ``materialize=True`` tokenizes the corpus ONCE into a scratch
-    parquet and runs the pair machinery over the re-read — at 100 TB
-    that trades 2 extra full-corpus tokenize passes for one chunk-frame
-    write + 3 column-pruned scans, a clear win for large corpora or
-    wide documents.  It stays OFF by default because the default must
-    serve the common interactive case: measured interleaved at sf0.1
-    (~89k pairs) the scratch write costs more than the re-chunking it
-    saves (default min 1.63 s vs materialize 2.07 s); flip it on when
-    the corpus outgrows gate scale.  On a non-local master ``scratch_dir`` (a
-    cluster-visible path) is REQUIRED and the caller owns deleting its
-    unique subdirectory — surfaced as ``xhs_scratch_path`` on the
-    returned DataFrame; the local default is atexit-reaped, one new
-    directory per call — a loop over shards should pre-chunk once and
-    pass ``chunks=`` rather than re-materializing per call (see
-    :func:`_materialize_scratch`).
+    the corpus is re-chunked ~3× within the one plan.  That default is
+    what measures faster at gate scale: interleaved at sf0.1 (~89k
+    pairs) it took min 1.63 s against 2.07 s for the same corpus
+    tokenized once into a scratch parquet and read back.
 
     ``chunks``: a pre-built :func:`text.chunk_windows` output for the
-    same corpus (``id_col``/``chunk_id``/``chunk_text``), mutually
-    exclusive with ``df`` — pass it when several chunk-granular
-    operators share one materialized chunk frame (e.g.
-    :func:`chunk_near_keep` via its own ``chunks=`` and this under the
-    same grid); ``text_col``/``chunk_tokens``/``stride_tokens`` are
-    then unused and materialization is the caller's business."""
+    same corpus (``id_col``/``chunk_id``/``chunk_text``; a missing
+    column raises ``ValueError``), mutually exclusive with ``df`` —
+    the one way to tokenize a corpus once for several consumers (this,
+    :func:`chunk_near_keep`, a shard loop).  Materializing it is the
+    caller's: ``persist()``, or a parquet write to a cluster-visible
+    path read back, and the caller owns that copy's lifetime;
+    ``text_col``/``chunk_tokens``/``stride_tokens`` are then unused."""
     chunks = _resolve_chunks(df, chunks, text_col, id_col, chunk_tokens,
-                             stride_tokens, materialize, scratch_dir)
+                             stride_tokens)
     chu = chunks.select(
         _chunk_uid(id_col, max_chunks_per_doc).alias("chunk_uid"),
         "chunk_text",
     )
-    out = (
+    return (
         jaccard_pairs(chu, "chunk_text", "chunk_uid", k)
         .withColumnRenamed("id_a", "uid_a")
         .withColumnRenamed("id_b", "uid_b")
     )
-    return _carry_scratch_path(out, chunks)
 
 
 def chunk_near_pairs_sql(
@@ -1975,8 +1758,6 @@ def chunk_near_keep(
     threshold: float = 0.8,
     max_chunks_per_doc: int = 1 << 20,
     chunks: Optional[DataFrame] = None,
-    materialize: bool = False,
-    scratch_dir: Optional[str] = None,
 ) -> DataFrame:
     """Greedy chunk-level near-dedup KEEP verdicts — the decision a RAG
     pipeline actually consumes (``chunk_near_pairs`` emits evidence,
@@ -1992,14 +1773,12 @@ def chunk_near_keep(
     all-pairs) + ONE left join of the chunk frame against the flagged
     uid set (the flagged set is pair-output-sized; AQE broadcasts it
     when small).  The chunk frame feeds BOTH the pair machinery and the
-    verdict join, so ``materialize=True`` (recommended beyond gate
-    scale; ``scratch_dir`` required on a non-local master — see
-    ``chunk_near_pairs``) tokenizes the corpus once instead of 4×, and
+    verdict join, so the in-plan default tokenizes the corpus 4×;
     ``chunks=`` (mutually exclusive with ``df``, same contract as
-    ``chunk_near_pairs``) lets a shard loop or a sibling operator share
-    one pre-built chunk frame with zero re-tokenization here."""
+    ``chunk_near_pairs``) takes one caller-materialized chunk frame and
+    re-tokenizes nothing here."""
     ch = _resolve_chunks(df, chunks, text_col, id_col, chunk_tokens,
-                         stride_tokens, materialize, scratch_dir)
+                         stride_tokens)
     pairs = chunk_near_pairs(
         None, text_col, id_col, chunk_tokens, stride_tokens, k=k,
         max_chunks_per_doc=max_chunks_per_doc, chunks=ch,
@@ -2013,13 +1792,12 @@ def chunk_near_keep(
         F.col(id_col), "chunk_id",
         _chunk_uid(id_col, max_chunks_per_doc).alias("__uid"),
     )
-    out = base.join(
+    return base.join(
         drop, base["__uid"] == drop["__drop_uid"], "left"
     ).select(
         F.col(id_col), "chunk_id",
         F.col("__drop_uid").isNull().alias("keep"),
     )
-    return _carry_scratch_path(out, ch)
 
 
 def chunk_near_keep_sql(
